@@ -16,13 +16,12 @@ import java.nio.charset.StandardCharsets.UTF_8
   * directories the library front doors already query:
   *
   *  - `GET /healthz`, `GET|POST /api/v1/ping`
-  *  - `GET|POST /api/v1/metrics/query` — PromQL over metric segments,
-  *    SSE-streamed ([[MetricSegments.query]]); extra `q2`..`q9` params
-  *    fuse a multi-panel request onto one scan
-  *    ([[MetricSegments.queryMultiAt]], columns `value`, `value2`, ..)
-  *  - `GET|POST /api/v1/logs/query` — LogQL over log segments, SSE
-  *    ([[LogSegments.query]]; params `q`, `s`, `e`, `limit`, `fields`)
-  *  - `GET|POST /api/v1/spans/query` — LogQL-over-spans, SSE
+  *  - `GET|POST /api/v1/{metrics,logs,spans}/query` — PromQL over metric
+  *    segments, LogQL over log or span segments; SSE. One route body for
+  *    all three: the request becomes a [[PanelSet]] (`q`, plus `q2`..`q9`
+  *    for a multi-panel dashboard) and ONE planner ([[PanelSet.route]])
+  *    decides one-shot vs time-sliced, fused vs tagged, and the raw
+  *    panels' row budgets
   *  - `GET|POST /api/v1/spans/trace` — one trace's spans by id
   *    ([[SpanSegments.tracesByIds]]; `id` may repeat or be comma-joined)
   *  - discovery: `/api/v1/{logs,metrics,spans}/tags`, `.../tagvalues`,
@@ -149,15 +148,9 @@ final class HttpApi(
     try {
       // `df` is by-name: the swap retry re-evaluates it, so a request that
       // raced a compaction swap re-plans against the post-swap listing
-      // instead of surfacing a spurious 500 (ScanCache.withSwapRetry)
-      def run(d: DataFrame) = d.limit(maxJsonRows + 1).toJSON.collect()
-      val rows =
-        try run(df)
-        catch {
-          case t: Throwable if ScanCache.isVanishedSnapshot(t) =>
-            ScanCache.invalidateAll(); TierFreshness.invalidateAllMeta()
-            run(df)
-        }
+      // instead of surfacing a spurious 500
+      val rows = ScanCache.withSwapRetry(spark, Nil)(
+        df.limit(maxJsonRows + 1).toJSON.collect())
       val truncated = rows.length > maxJsonRows
       val kept = if (truncated) rows.take(maxJsonRows) else rows
       val extra = (if (truncated) ""","truncated":true""" else "") + extraJson
@@ -173,56 +166,52 @@ final class HttpApi(
   /** SSE endpoint: stream result rows in batches, then a done event. The
     * plan executes distributed; `toLocalIterator` relays one partition at
     * a time, so driver memory is bounded by a partition, not the result.
-    * The frame is PLANNED before any header goes out, so a parse/compile
-    * error is an ordinary 400 (the reference 400s invalid expressions
-    * before opening the stream); only runtime failures stream as a
-    * done-error event.
     */
   private def sse(ex: HttpExchange)(dfArg: => DataFrame): Unit =
-    sseSlices(ex)(Seq(() => dfArg))
+    sseSlices(ex)(PanelSet.Plan(Seq(() => dfArg)))
 
-  /** SSE over ORDERED time slices — the reference's bucket-by-bucket
-    * streaming UX (`queryapi/metrics_evaluator.go:61-112` runs one job
-    * per time bucket and pushes each bucket's rows as it completes).
-    * Every slice frame is PLANNED before any header goes out (a
-    * parse/compile error in any slice is an ordinary 400); each slice
-    * then executes as its own Spark job and its rows stream in bounded
-    * batches the moment the slice lands, ascending in time, so a 30-day
-    * query emits its first slice after one slice-job latency instead of
-    * after the whole scan, and the concatenated stream equals the
-    * one-shot result. A batch never spans a slice boundary — each slice
-    * flushes on completion, so the client sees ≥1 result event per
-    * non-empty slice as it finishes.
-    */
-  /** `rowBudget`: global cap across slices (a raw log query's `limit`).
-    * Once the budget is spent the stream trims the current slice, stops
-    * launching further slice jobs, and closes — the reference's
-    * newest-first early-exit walk: a needle query over 30 days that
-    * fills its limit from the first day never touches the other 29.
+  /** SSE over a [[PanelSet.Plan]]'s ORDERED frames — for a sliced plan the
+    * reference's bucket-by-bucket streaming UX
+    * (`queryapi/metrics_evaluator.go:61-112` runs one job per time bucket
+    * and pushes each bucket's rows as it completes). Every frame is
+    * PLANNED before any header goes out, so a parse/compile error is an
+    * ordinary 400 (the reference 400s invalid expressions before opening
+    * the stream); only runtime failures stream as a done-error event.
+    * Each frame then executes as its own Spark job and its rows stream in
+    * bounded batches the moment it lands, in plan order, so a 30-day
+    * query emits its first slice after one slice-job latency, and the
+    * concatenated stream equals the one-shot result. A batch never spans
+    * a frame boundary.
     *
-    * `groupOf`/`groupBudgets`: PER-GROUP budgets for heterogeneous
-    * responses (the mixed raw+metric multi routes): frames map to a
-    * group id; a group with a budget early-exits independently — its
-    * remaining frames are skipped and their in-flight prefetch jobs
-    * cancelled — while other groups keep streaming. A group without a
-    * budget (the metric section) is unbounded. The legacy `rowBudget`
-    * is group 0's budget (every frame defaults to group 0).
+    * Budgets: frames map to a group (`groupOf`); a group with a budget (a
+    * raw log panel's `limit`) early-exits independently — once spent, the
+    * stream trims the current frame, skips the group's remaining frames
+    * and cancels their in-flight prefetch — the reference's newest-first
+    * early-exit walk: a needle query over 30 days that fills its limit
+    * from the first day never touches the other 29. Groups without a
+    * budget are unbounded.
+    *
+    * Swap retry: the build runs the doors' eager driver jobs (listings,
+    * the index-exclusion collect, shared materialized passes) over cached
+    * listings a concurrent compaction or index rewrite may have replaced.
+    * The build and every frame's first job run under ONE retry policy
+    * ([[ScanCache.withSwapRetry]]): a retry drops the caches and rebuilds
+    * the whole plan from `mk` (by-name) — a captured frame pins its
+    * pre-swap snapshot. Once rows are out, a failure is a done-error
+    * event and the client retries the request.
     */
-  private def sseSlices(ex: HttpExchange, rowBudget: Option[Int] = None,
-      groupOf: Int => Int = _ => 0,
-      groupBudgets: Map[Int, Int] = Map.empty)(
-      mk: => Seq[() => DataFrame]): Unit = {
-    val thunks = mk
-    val dfs = thunks.map(_.apply()) // force query build; handle() maps throw -> 400
-    // Swap-retry rebuild: the routes hoist a SHARED scan across their
-    // slice thunks (one listing + one index-exclusion job per request,
-    // MetricSegments.queryAtSliced), so re-invoking a captured thunk
-    // re-filters the same pre-swap snapshot. `mk` is by-name — a retry
-    // re-evaluates the whole construction against the invalidated caches,
-    // giving the slice a genuinely fresh plan.
-    def rebuilt(i: Int): DataFrame = {
-      ScanCache.invalidateAll(); TierFreshness.invalidateAllMeta()
-      mk(i)()
+  private def sseSlices(ex: HttpExchange)(mk: => PanelSet.Plan): Unit = {
+    val (plan, dfs) = ScanCache.withSwapRetry(spark, Nil) {
+      val pl = mk
+      (pl, pl.frames.map(_.apply()))
+    }
+    def onFrame[T](i: Int)(job: DataFrame => T): T = {
+      var first = true
+      ScanCache.withSwapRetry(spark, Nil) {
+        val df = if (first) dfs(i) else mk.frames(i)()
+        first = false
+        job(df)
+      }
     }
     val h = ex.getResponseHeaders
     h.set("Content-Type", "text/event-stream")
@@ -248,17 +237,12 @@ final class HttpApi(
         batch.clear()
       }
       if (dfs.size == 1) {
-        // one frame: partition-at-a-time iterator, constant driver memory.
-        // A compaction swap racing this stream can only be re-planned
-        // while NOTHING has been emitted (the first hasNext runs the first
-        // partition's job); once rows are out, the done-error event is the
-        // contract — the client retries the request.
-        var it = dfs.head.toJSON.toLocalIterator()
-        try {
-          if (!it.hasNext) () // force the first job inside the retry guard
-        } catch {
-          case t: Throwable if ScanCache.isVanishedSnapshot(t) =>
-            it = rebuilt(0).toJSON.toLocalIterator()
+        // one frame: partition-at-a-time iterator, constant driver memory;
+        // the first hasNext runs the first partition's job under the retry
+        val it = onFrame(0) { df =>
+          val it = df.toJSON.toLocalIterator()
+          it.hasNext
+          it
         }
         while (it.hasNext) {
           batch += it.next()
@@ -288,8 +272,8 @@ final class HttpApi(
         val futs = new Array[java.util.concurrent.Future[Array[String]]](dfs.size)
         val tag = s"graft-sse-${java.util.UUID.randomUUID()}"
         sliceFuts = futs; sliceTag = tag
-        val budgets = scala.collection.mutable.Map[Int, Int]() ++ groupBudgets
-        rowBudget.foreach(b => budgets(0) = b)
+        val budgets = scala.collection.mutable.Map[Int, Int]() ++ plan.budgets
+        val groupOf = plan.groupOf
         def remaining(g: Int): Int = budgets.getOrElse(g, Int.MaxValue)
         def submit(i: Int): Unit = if (i < dfs.size && futs(i) == null &&
             remaining(groupOf(i)) > 0)
@@ -300,18 +284,11 @@ final class HttpApi(
                 // exactly this slice's Spark jobs): the finally below can
                 // cancel the cluster-side work of an abandoned slice, not
                 // just its pool task
-                val sc = dfs(i).sparkSession.sparkContext
+                val sc = spark.sparkContext
                 sc.setJobGroup(s"$tag-$i", "sse slice prefetch",
                   interruptOnCancel = true)
-                // a slice racing a compaction swap re-plans from scratch
-                // (the captured frame pins the pre-swap snapshot)
-                try {
-                  try dfs(i).toJSON.limit(maxSliceRows + 1).collect()
-                  catch {
-                    case t: Throwable if ScanCache.isVanishedSnapshot(t) =>
-                      rebuilt(i).toJSON.limit(maxSliceRows + 1).collect()
-                  }
-                } finally sc.clearJobGroup()
+                try onFrame(i)(_.toJSON.limit(maxSliceRows + 1).collect())
+                finally sc.clearJobGroup()
               }
             })
         (0 until math.min(HttpApi.SlicePrefetch, dfs.size)).foreach(submit)
@@ -324,8 +301,7 @@ final class HttpApi(
             val f = futs(i)
             if (f != null && !f.isDone) {
               f.cancel(true)
-              try dfs(i).sparkSession.sparkContext
-                .cancelJobGroupAndFutureJobs(s"$tag-$i")
+              try spark.sparkContext.cancelJobGroupAndFutureJobs(s"$tag-$i")
               catch { case _: Throwable => () }
             }
             futs(i) = null
@@ -376,8 +352,7 @@ final class HttpApi(
           val f = sliceFuts(j)
           if (f != null && !f.isDone) {
             f.cancel(true)
-            try dfs(j).sparkSession.sparkContext
-              .cancelJobGroupAndFutureJobs(s"$sliceTag-$j")
+            try spark.sparkContext.cancelJobGroupAndFutureJobs(s"$sliceTag-$j")
             catch { case _: Throwable => () }
           }
           j += 1
@@ -541,196 +516,37 @@ final class HttpApi(
         """"multi":true,"tagged":true,"multi_mixed":true}""")
   }
 
-  /** panel tag for raw rows, FRAME-resolved (bare col(name) would trip
-    * the function-name trap Compiler.rawQuery documents — a label named
-    * `user` resolves to current_user()) and collision-safe: a pipeline
-    * that extracts a label literally named `alias` keeps its data under
-    * `alias__col` so the row JSON never carries duplicate keys
+  /** ONE query route per signal, one body for all three: the request
+    * becomes a [[PanelSet]] (`q` plus optional `q2`..`q9` panels named
+    * `value`, `value2`, ..) and streams [[PanelSet.plan]]'s frames. Params:
+    * `s`, `e`, `org`; log-style signals add `limit`, `order`, `fields`;
+    * metrics add `tagged` (force the uniform tagged shape), `fresh`
+    * (DEFAULT true since r18: the tier fresh-tail union — on a settled
+    * store scan- and bit-identical to the plain one-frequency scan;
+    * `fresh=false` opts back into the strict scan) and `summary`
+    * (single-panel: one per-series summary event per series).
     */
-  private def tagAlias(alias: String, df: DataFrame): DataFrame = {
-    val base =
-      if (df.columns.contains("alias")) {
-        // collision-free rename: a pipeline can extract labels named both
-        // `alias` AND `alias__col` (ADVICE r16) — a fixed target would
-        // duplicate the column and make the select ambiguous
-        val taken = df.columns.toSet
-        val target = Iterator.from(0)
-          .map(i => "alias__col" + ("_" * i)).find(!taken.contains(_)).get
-        df.withColumnRenamed("alias", target)
-      } else df
-    base.select(org.apache.spark.sql.functions.lit(alias).as("alias") +:
-      base.columns.toSeq.map(base(_)): _*)
-  }
-
-  /** The mixed raw+metric multi-panel evaluator shared by the logs and
-    * spans routes (SpanSegments delegates its whole LogQL lifecycle to
-    * LogSegments, so ONE implementation serves both — the same
-    * drift-hazard rule as LogSegments.multiShared): metric panels share
-    * ONE materialized pass, sliced on long ranges; each RAW panel rides
-    * the same day-sliced walk as the single-query route with ITS OWN
-    * row budget (newest-first when descending), so a limited raw panel
-    * early-exits after ~a day of scan instead of scanning and sorting
-    * the full window — and both sections stream in one SSE response
-    * (the reference evaluates each request query independently,
-    * queryapi/querier.go:441).
-    */
-  private def serveLogStyleMulti(ex: HttpExchange, dir: String,
-      exprs: Seq[(String, String)], qp: QueryParams, org: Option[String],
-      limit: Int, desc: Boolean, fields: Seq[String]): Unit = {
-    val (raw, metric) = exprs.partition(x => LogSegments.isRaw(x._2))
-    val metricFrames: Seq[() => DataFrame] =
-      if (metric.isEmpty) Nil
-      else {
-        val slices = MetricSegments.slicePlan(qp)
-        if (slices.size <= 1)
-          Seq(() => LogSegments.queryMultiTagged(spark, dir, metric, qp, org))
-        else LogSegments.queryMultiTaggedSliced(spark, dir, metric, qp,
-          slices, org)
-      }
-    val rawSlices = LogSegments.slicePlanRaw(qp)
-    val rawGroups: Seq[Seq[() => DataFrame]] = raw.map { case (alias, rq) =>
-      LogSegments.querySliced(spark, dir, rq,
-        if (desc) rawSlices.reverse else rawSlices,
-        limit = limit, desc = desc, fields = fields, org = org)
-        .map(mkDf => () => tagAlias(alias, mkDf()))
+  Seq(PanelSet.Metrics -> metricsDir, PanelSet.Logs -> logsDir,
+      PanelSet.Spans -> spansDir).foreach { case (signal, dirOpt) =>
+    handle(s"/api/v1/${signal.name}/query") { ex =>
+      val p = params(ex)
+      val (s, e) = tsRange(p)
+      val dir = needDir(dirOpt, signal.name)
+      val logStyle = signal != PanelSet.Metrics
+      def logParam(k: String) = p.get(k).filter(_ => logStyle)
+      val ps = PanelSet(signal,
+        ("value" -> need(p, "q")) +: (2 to 9).flatMap(i => p.get(s"q$i").map(s"value$i" -> _)),
+        s, e, p.get("org"),
+        limit = logParam("limit").map(_.toInt).getOrElse(1000),
+        desc = !logParam("order").contains("asc"),
+        fields = logParam("fields").toSeq.flatMap(_.split(',')).filter(_.nonEmpty),
+        tagged = p.get("tagged").contains("true"),
+        fresh = !p.get("fresh").contains("false"))
+      if (!logStyle && ps.panels.size == 1 && p.get("summary").contains("true"))
+        sseEach(ex, "summary")(seriesSummary(MetricSegments.query(spark, dir,
+          ps.panels.head._2, s, e, ps.org, ps.fresh)))
+      else sseSlices(ex)(PanelSet.plan(spark, dir, ps))
     }
-    // raw panel k = budget group k+1 (group 0, the metric section, is
-    // unbounded); each group's budget is the raw `limit`, so the SSE
-    // layer trims and early-exits per panel exactly like the single-q
-    // route's rowBudget
-    val perGroup = math.max(1, rawSlices.size)
-    val groupOf: Int => Int = i =>
-      if (i < metricFrames.size) 0
-      else 1 + (i - metricFrames.size) / perGroup
-    sseSlices(ex, groupOf = groupOf,
-      groupBudgets = raw.indices.map(k => (k + 1) -> limit).toMap)(
-      metricFrames ++ rawGroups.flatten)
-  }
-
-  handle("/api/v1/metrics/query") { ex =>
-    val p = params(ex)
-    val (s, e) = tsRange(p)
-    val dir = needDir(metricsDir, "metrics")
-    // fresh (DEFAULT since r18): the tier fresh-tail union — newest
-    // not-yet-rolled-up days and gap days answered from the finest tier
-    // instead of silently missing ([[MetricSegments.tierCond]]: on a
-    // settled store the union is scan- and bit-identical to the plain
-    // one-frequency scan, so reference parity is preserved exactly where
-    // the reference door is defined). fresh=false opts back into the
-    // strict single-frequency scan.
-    val fresh = !p.get("fresh").contains("false")
-    def run = MetricSegments.query(spark, dir, need(p, "q"), s, e, p.get("org"),
-      freshTail = fresh)
-    // multi-expression request (q + q2..q9): the panels fuse onto ONE
-    // pruned scan + engine pass (Engine.queryMulti — identical-selector
-    // aggregations, or identical-selector/range window functions).
-    // Output columns: value, value2, .. valueN. Heterogeneous sets
-    // (different metrics/groupings) fall back to the general tagged door
-    // (Engine.queryMultiTagged): one materialized pass, rows tagged
-    // (alias, ts, series, value). One-shot SSE either way: the multi
-    // frame is a single bounded result set, not a slice stream.
-    val extra = (2 to 9).flatMap(i => p.get(s"q$i").map(v => s"value$i" -> v))
-    if (extra.nonEmpty) {
-      val exprs = ("value" -> need(p, "q")) +: extra
-      val qp = StepPolicy.paramsFor(s, e)
-      // tagged=true forces the uniform (alias, ts, series, value) shape
-      // even for fusable sets, so a client gets ONE schema for any panel
-      // mix; default keeps the cheaper fused alias-column shape when the
-      // set fuses
-      val forceTagged = p.get("tagged").contains("true")
-      // long ranges stream slice-by-slice like the single-query path,
-      // over ONE shared materialized scan (queryMultiAtSliced); @-pinned
-      // panels and short ranges stay one-shot
-      val slices =
-        if (exprs.forall(x => MetricSegments.sliceable(x._2)))
-          MetricSegments.slicePlan(qp)
-        else Seq(qp)
-      if (slices.size <= 1)
-        sse(ex)(MetricSegments.queryMultiAt(spark, dir, exprs, qp,
-          p.get("org"), forceTagged, freshTail = fresh))
-      else sseSlices(ex)(MetricSegments.queryMultiAtSliced(
-        spark, dir, exprs, qp, slices, p.get("org"), forceTagged,
-        freshTail = fresh))
-    } else if (p.get("summary").contains("true"))
-      sseEach(ex, "summary")(seriesSummary(run))
-    else {
-      // long ranges stream slice-by-slice in time order (reference
-      // bucket-by-bucket streaming); @-pinned expressions and short
-      // ranges keep the one-shot path
-      val q = need(p, "q")
-      val qp = StepPolicy.paramsFor(s, e)
-      val slices =
-        if (MetricSegments.sliceable(q)) MetricSegments.slicePlan(qp)
-        else Seq(qp)
-      if (slices.size <= 1) sse(ex)(run)
-      else sseSlices(ex)(
-        MetricSegments.queryAtSliced(spark, dir, q, qp, slices, p.get("org"),
-          freshTail = fresh))
-    }
-  }
-
-  handle("/api/v1/logs/query") { ex =>
-    val p = params(ex)
-    val (s, e) = tsRange(p)
-    val qp = StepPolicy.paramsFor(s, e)
-    val q = need(p, "q")
-    val limit = p.get("limit").map(_.toInt).getOrElse(1000)
-    val desc = p.get("order").forall(_ != "asc")
-    val fields = p.get("fields").toSeq.flatMap(_.split(',')).filter(_.nonEmpty)
-    val dir = needDir(logsDir, "logs")
-    // Multi-panel request (q + q2..q9): metric-style LogQL panels share
-    // ONE materialized pass over the pruned log scan; rows are tagged
-    // (alias, ts, series, value). A real dashboard MIXES a raw "recent
-    // errors" panel with metric panels (the reference evaluates each
-    // request query independently, queryapi/querier.go:441) — raw
-    // panels ride the existing single-query path, one alias-tagged
-    // rows-shaped frame per panel with the raw params (limit/order/
-    // fields) applied to THEM (previously a raw panel 400'd the whole
-    // request and the raw params were silently dropped); metric panels
-    // keep the shared pass. Both sections stream in one SSE response:
-    // tagged grid rows first, raw rows after.
-    val extraLq = (2 to 9).flatMap(i => p.get(s"q$i").map(v => s"value$i" -> v))
-    if (extraLq.nonEmpty) {
-      serveLogStyleMulti(ex, dir, ("value" -> q) +: extraLq, qp,
-        p.get("org"), limit, desc, fields)
-    } else {
-      // long-range RAW queries stream day-sliced in emit order with a
-      // global row budget (early exit once the limit fills — the
-      // reference's newest-first segment walk); metric-style LogQL and
-      // short ranges stay one-shot
-      val slices =
-        if (LogSegments.sliceableRaw(q)) LogSegments.slicePlanRaw(qp)
-        else Seq(qp)
-      if (slices.size <= 1)
-        sse(ex)(LogSegments.query(spark, dir, q, qp, limit = limit,
-          desc = desc, fields = fields, org = p.get("org")))
-      else
-        sseSlices(ex, rowBudget = Some(limit))(
-          LogSegments.querySliced(spark, dir, q,
-            if (desc) slices.reverse else slices,
-            limit = limit, desc = desc, fields = fields, org = p.get("org")))
-    }
-  }
-
-  handle("/api/v1/spans/query") { ex =>
-    val p = params(ex)
-    val (s, e) = tsRange(p)
-    val qp = StepPolicy.paramsFor(s, e)
-    val dir = needDir(spansDir, "spans")
-    // mixed raw+metric panels, same contract (and same code) as the logs
-    // route: raw span panels ride the day-sliced budgeted walk with
-    // limit/order/fields applied, metric panels share one pass
-    val extraSq = (2 to 9).flatMap(i => p.get(s"q$i").map(v => s"value$i" -> v))
-    if (extraSq.nonEmpty) {
-      serveLogStyleMulti(ex, dir, ("value" -> need(p, "q")) +: extraSq, qp,
-        p.get("org"),
-        limit = p.get("limit").map(_.toInt).getOrElse(1000),
-        desc = p.get("order").forall(_ != "asc"),
-        fields = p.get("fields").toSeq.flatMap(_.split(',')).filter(_.nonEmpty))
-    } else
-      sse(ex)(SpanSegments.query(spark, dir, need(p, "q"),
-        qp, limit = p.get("limit").map(_.toInt).getOrElse(1000),
-        org = p.get("org")))
   }
 
   handle("/api/v1/spans/trace") { ex =>

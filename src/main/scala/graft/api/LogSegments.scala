@@ -16,7 +16,9 @@ import graft.promql.QueryParams
   *
   * Pruning across binop expressions is per-leaf conservative: a file is
   * skipped only when EVERY leaf excludes it (a file needed by any leaf
-  * must be read).
+  * must be read). Every public door is a delegate of ONE evaluator
+  * ([[evaluate]]) over ONE scan-prep; the HTTP logs and spans routes
+  * reach it through [[PanelSet.plan]].
   */
 object LogSegments {
 
@@ -32,35 +34,52 @@ object LogSegments {
     case _ => 0L
   }
 
-  /** The pruned cooked-logs frame a LogQL expression will scan (exposed
-    * for plan inspection/tests). All leaves share ONE index read — their
-    * requirement trees are batched through
-    * [[FingerprintIndex.excludedForTrees]], which intersects per-leaf
-    * exclusions (a file needed by any leaf must be read).
+  /** The ONE log scan-prep every door shares: all leaves of all panels
+    * batch their requirement trees through ONE index read
+    * ([[FingerprintIndex.excludedForTrees]] intersects per-leaf
+    * exclusions — a file needed by any leaf must be read), over the
+    * cached segment listing, with the org partition pruned (org leads the
+    * layout, so the equality prunes every other tenant's directories).
+    * Time-independent: windows prune it by dateint ([[window]]).
     */
-  def scanFor(spark: SparkSession, segDir: String, e: LogExpr,
-      p: QueryParams, org: Option[String] = None): DataFrame = {
-    val excluded = FingerprintIndex.excludedForTrees(spark, segDir,
-      leafPipelines(e).map(FingerprintIndex.requirementTreeFor))
-    val effStart = p.startMs - maxLookbackMs(e)
-    val scan0 = FingerprintIndex.prunedRead(spark, segDir, excluded)
-      .filter(col("dateint") >= StepPolicy.dateintOf(effStart) &&
-        col("dateint") <= StepPolicy.dateintOf(p.endMs - 1))
-    // tenant isolation: org leads the partition layout, so this equality
-    // prunes every other tenant's directories before dateint pruning
-    org.fold(scan0)(o => scan0.filter(col("org") === o).drop("org"))
-      .drop("dateint") // partition key, not a log label
+  private def scanPrep(spark: SparkSession, segDir: String, es: Seq[LogExpr],
+      org: Option[String]): DataFrame = {
+    val base = FingerprintIndex.prunedRead(spark, segDir,
+      FingerprintIndex.excludedForTrees(spark, segDir,
+        es.flatMap(leafPipelines).map(FingerprintIndex.requirementTreeFor)))
+    org.fold(base)(o => base.filter(col("org") === o).drop("org"))
   }
 
-  /** true when the expression is a plain RAW log query — the shape the
-    * time-sliced streaming path serves (metric-style LogQL returns a
-    * grid and stays one-shot; binops need both sides whole)
+  /** `base` pruned to the UTC days of [fromMs, toMs) */
+  private def window(base: DataFrame, fromMs: Long, toMs: Long): DataFrame =
+    base.filter(col("dateint") >= StepPolicy.dateintOf(fromMs) &&
+        col("dateint") <= StepPolicy.dateintOf(toMs - 1))
+      .drop("dateint") // partition key, not a log label
+
+  /** The pruned cooked-logs frame a LogQL expression will scan over `p`
+    * (its window extended left by the expression's lookback) — exposed
+    * for plan inspection/tests.
     */
-  def sliceableRaw(logql: String): Boolean =
+  def scanFor(spark: SparkSession, segDir: String, e: LogExpr,
+      p: QueryParams, org: Option[String] = None): DataFrame =
+    window(scanPrep(spark, segDir, Seq(e), org), p.startMs - maxLookbackMs(e),
+      p.endMs)
+
+  /** true when the LogQL string is a plain RAW log query (rows, not a
+    * grid) — the shape that streams day-sliced under a row budget
+    * ([[PanelSet.route]]); metric-style LogQL returns a grid and binops
+    * need both sides whole. Parse failure => false: a malformed
+    * expression takes the grid path and 400s at its parse, one obvious
+    * place.
+    */
+  def isRaw(logql: String): Boolean =
     Parser.parseFull(logql).fold(_ => false, {
       case LeafQuery(q) => q.raw.isDefined
       case _ => false
     })
+
+  /** the raw shape [[querySliced]] serves — the same test as [[isRaw]] */
+  def sliceableRaw(logql: String): Boolean = isRaw(logql)
 
   /** UTC-day-aligned slice plan for a raw log query: the span splits on
     * day boundaries (= the `dateint` partition key, so every slice scan
@@ -84,143 +103,97 @@ object LogSegments {
     edges.sliding(2).map(w => QueryParams(w(0), w(1), p.stepMs)).toSeq
   }
 
-  /** The slice evaluator for the streaming front door: one [[query]]
-    * frame per slice with everything slice-invariant hoisted — the
-    * parse, the fingerprint-index exclusion job, and the segment-dir
-    * listing (one shared relation; per-slice dateint filters partition-
-    * prune it). Slices arrive oldest-first from [[slicePlanRaw]]; pass
-    * them newest-first for a descending stream. Each slice applies the
-    * FULL limit (per-slice results are supersets of what the global
-    * stream may still need; the SSE layer trims to the remaining budget
-    * and stops launching slices once it is spent — the reference's
-    * newest-first early-exit segment walk, logs_evaluator.go:233-424).
+  /** The ONE log evaluator every door and [[PanelSet.plan]] call (logs
+    * and spans alike): one frame per window over one [[scanPrep]].
+    *  - [[PanelSet.Alone]]: the first expression on its own, each window
+    *    over its own dateint-pruned scan, with the raw params applied.
+    *    Each window applies the FULL limit (a superset of what the global
+    *    stream may still need); the SSE layer trims to the remaining
+    *    budget and stops launching windows once it is spent — the
+    *    reference's newest-first early-exit segment walk
+    *    (logs_evaluator.go:233-424).
+    *  - [[PanelSet.Tagged]]: N metric-style panels share ONE materialized
+    *    pass over `full` (dateint window extended by the max lookback, the
+    *    row-level time filter pushed to the scan); each window runs every
+    *    distinct panel's compiler pass over those blocks and emits the
+    *    tagged union (alias, ts, series-JSON, value). Metric-style LogQL
+    *    slices exactly (every grid bucket depends only on
+    *    [t − lookback, t]). Raw panels are rejected — they return rows,
+    *    not grids.
     */
-  def querySliced(spark: SparkSession, segDir: String, logql: String,
-      slices: Seq[QueryParams], limit: Int = 1000, desc: Boolean = true,
-      fields: Seq[String] = Nil,
+  private[api] def evaluate(spark: SparkSession, segDir: String,
+      exprs: Seq[(String, String)], full: QueryParams,
+      windows: Seq[QueryParams], shape: PanelSet.Shape, limit: Int = 1000,
+      desc: Boolean = true, fields: Seq[String] = Nil,
       org: Option[String] = None): Seq[() => DataFrame] = {
-    val e = Parser.parseFull(logql)
-      .fold(err => throw new IllegalArgumentException(err), identity)
-    val excluded = FingerprintIndex.excludedForTrees(spark, segDir,
-      leafPipelines(e).map(FingerprintIndex.requirementTreeFor))
-    val base0 = FingerprintIndex.prunedRead(spark, segDir, excluded)
-    val base = org.fold(base0)(o => base0.filter(col("org") === o).drop("org"))
-    slices.map { sp => () =>
-      val scan = base
-        .filter(col("dateint") >= StepPolicy.dateintOf(sp.startMs) &&
-          col("dateint") <= StepPolicy.dateintOf(sp.endMs - 1))
-        .drop("dateint")
-      Compiler.exprQuery(e, LogStore(scan), sp, limit, desc, fields)
+    require(exprs.nonEmpty, "a log query needs at least one expression")
+    val parsed = exprs.map(x => Parser.parseFull(x._2)
+      .fold(err => throw new IllegalArgumentException(err), identity))
+    if (shape != PanelSet.Alone)
+      exprs.find(x => isRaw(x._2)).foreach { x =>
+        throw new IllegalArgumentException(
+          s"the multi-panel door serves metric-style LogQL panels; raw log " +
+            s"query '${x._2}' streams through the single-query path")
+      }
+    val base = scanPrep(spark, segDir, parsed, org)
+    if (shape == PanelSet.Alone) {
+      val e = parsed.head
+      return windows.map { sp => () =>
+        Compiler.exprQuery(e, LogStore(window(base, sp.startMs - maxLookbackMs(e),
+          sp.endMs)), sp, limit, desc, fields)
+      }
+    }
+    val effStart = full.startMs - parsed.map(maxLookbackMs).max
+    val shared = LogStore(graft.GraftSession.materialize(
+      window(base, effStart, full.endMs)
+        .filter(col("chq_timestamp") >= effStart && col("chq_timestamp") < full.endMs)))
+    // distinct queries evaluate once; alias lists explode over their rows
+    windows.map { sp => () =>
+      exprs.map(_._2).distinct.map { q =>
+        val aliases = exprs.filter(_._2 == q).map(_._1)
+        val out = Compiler.query(q, shared, sp)
+        val labels = out.columns.filterNot(c => c == "ts" || c == "value").sorted
+        out.select(explode(lit(aliases.toArray)).as("alias"), col("ts"),
+          to_json(struct(labels.map(col): _*)).as("series"), col("value"))
+      }.reduce(_.union(_))
     }
   }
 
   /** Full LogQL query over written log segments. */
   def query(spark: SparkSession, segDir: String, logql: String, p: QueryParams,
       limit: Int = 1000, desc: Boolean = true, fields: Seq[String] = Nil,
-      org: Option[String] = None): DataFrame = {
-    val e = Parser.parseFull(logql)
-      .fold(err => throw new IllegalArgumentException(err), identity)
-    Compiler.exprQuery(e, LogStore(scanFor(spark, segDir, e, p, org)), p,
-      limit, desc, fields)
-  }
+      org: Option[String] = None): DataFrame =
+    querySliced(spark, segDir, logql, Seq(p), limit, desc, fields, org).head()
+
+  /** [[query]] per window of `slices` (from [[slicePlanRaw]], oldest-first;
+    * pass them newest-first for a descending stream) over one scan-prep
+    */
+  def querySliced(spark: SparkSession, segDir: String, logql: String,
+      slices: Seq[QueryParams], limit: Int = 1000, desc: Boolean = true,
+      fields: Seq[String] = Nil,
+      org: Option[String] = None): Seq[() => DataFrame] =
+    evaluate(spark, segDir, Seq("value" -> logql), slices.head, slices,
+      PanelSet.Alone, limit, desc, fields, org)
 
   /** Logs-side dashboard fusion (mirror of
     * [[graft.promql.Engine.queryMultiTagged]]): N METRIC-style LogQL
     * panels — volume by level, error rate, unwrap aggregations — over
-    * different streams and groupings share ONE materialized pass over
-    * the pruned log scan: the index exclusion intersects across every
-    * panel's pipelines (one index read), the dateint window extends by
-    * the max lookback across panels, the row-level time filter pushes to
-    * the scan, and each panel's compiler pass reads the materialized
-    * blocks. K panels = 1 lake scan + K block-local passes; repeated
-    * panels (same LogQL under two aliases) evaluate once. Output is the
-    * tagged union (alias, ts, series-JSON, value). RAW log queries are
-    * rejected — they return rows, not grids, and stream through the
-    * single-query sliced path.
+    * different streams and groupings on ONE materialized pass: K panels =
+    * 1 lake scan + K block-local passes.
     */
   def queryMultiTagged(spark: SparkSession, segDir: String,
       exprs: Seq[(String, String)], p: QueryParams,
       org: Option[String] = None): DataFrame =
-    taggedOver(exprs, multiShared(spark, segDir, exprs, p, org), p)
+    queryMultiTaggedSliced(spark, segDir, exprs, p, Seq(p), org).head()
 
-  /** true when the LogQL string is a plain RAW log query (rows, not a
-    * grid) — the shape the multi doors reject and the HTTP mixed-panel
-    * route serves through the single-query path instead. Parse failure
-    * => false: a malformed expression takes the metric multi path and
-    * 400s at its parse, one obvious place.
-    */
-  def isRaw(logql: String): Boolean =
-    Parser.parseFull(logql).fold(_ => false, {
-      case LeafQuery(q) => q.raw.isDefined
-      case _ => false
-    })
-
-  /** The ONE scan-prep for both multi doors (one-shot + sliced): parse,
-    * reject raw panels, batch every panel's index requirements through
-    * one index read, dateint/org/time-prune over the FULL window, and
-    * materialize the shared pass. Extracted so a pruning fix lands on
-    * both doors at once — they previously duplicated these ~25 lines
-    * verbatim, a drift hazard (r15 ADVICE).
-    */
-  private def multiShared(spark: SparkSession, segDir: String,
-      exprs: Seq[(String, String)], full: QueryParams,
-      org: Option[String]): LogStore = {
-    require(exprs.nonEmpty, "multi-panel door needs at least one expression")
-    val parsed = exprs.map { case (a, q) =>
-      (a, q, Parser.parseFull(q)
-        .fold(err => throw new IllegalArgumentException(err), identity))
-    }
-    parsed.find(t => t._3 match {
-      case LeafQuery(q) => q.raw.isDefined
-      case _ => false
-    }).foreach { t =>
-      throw new IllegalArgumentException(
-        s"the multi-panel door serves metric-style LogQL panels; raw log " +
-          s"query '${t._2}' streams through the single-query path")
-    }
-    val excluded = FingerprintIndex.excludedForTrees(spark, segDir,
-      parsed.flatMap(t => leafPipelines(t._3))
-        .map(FingerprintIndex.requirementTreeFor))
-    val effStart = full.startMs - parsed.map(t => maxLookbackMs(t._3)).max
-    val scan0 = FingerprintIndex.prunedRead(spark, segDir, excluded)
-      .filter(col("dateint") >= StepPolicy.dateintOf(effStart) &&
-        col("dateint") <= StepPolicy.dateintOf(full.endMs - 1))
-    val scan = org.fold(scan0)(o => scan0.filter(col("org") === o).drop("org"))
-      .drop("dateint")
-      .filter(col("chq_timestamp") >= effStart &&
-        col("chq_timestamp") < full.endMs)
-    LogStore(graft.GraftSession.materialize(scan))
-  }
-
-  /** the tagged-union inner loop over a caller-prepared store — shared by
-    * the one-shot door above and the sliced door below (ONE materialized
-    * pass per request, evaluated per slice); distinct queries evaluate
-    * once, alias lists explode over their rows
-    */
-  private def taggedOver(exprs: Seq[(String, String)], store: LogStore,
-      p: QueryParams): DataFrame =
-    exprs.map(_._2).distinct.map { q =>
-      val aliases = exprs.filter(_._2 == q).map(_._1)
-      val out = Compiler.query(q, store, p)
-      val labels = out.columns.filterNot(c => c == "ts" || c == "value").sorted
-      out.select(explode(lit(aliases.toArray)).as("alias"), col("ts"),
-        to_json(struct(labels.map(col): _*)).as("series"), col("value"))
-    }.reduce(_.union(_))
-
-  /** [[queryMultiTagged]], SLICED (the logs twin of
-    * [[MetricSegments.queryMultiAtSliced]]): one shared materialized
-    * pass over the full window's pruned scan feeds every
-    * (slice × panel) evaluation — a 30-day logs dashboard costs one
-    * lake scan total and streams its first slice after that scan plus
-    * one slice-sized compiler pass. Metric-style LogQL slices exactly
-    * (every grid bucket depends only on [t − lookback, t]; LogQL has no
-    * @-pin to exclude); raw panels are rejected as in the one-shot door.
+  /** [[queryMultiTagged]] sliced: one shared materialized pass over `full`
+    * feeds every (slice × panel) evaluation — a 30-day logs dashboard
+    * costs one lake scan and streams its first slice after that scan plus
+    * one slice-sized compiler pass
     */
   def queryMultiTaggedSliced(spark: SparkSession, segDir: String,
       exprs: Seq[(String, String)], full: QueryParams,
       slices: Seq[QueryParams],
-      org: Option[String] = None): Seq[() => DataFrame] = {
-    val shared = multiShared(spark, segDir, exprs, full, org)
-    slices.map { sp => () => taggedOver(exprs, shared, sp) }
-  }
+      org: Option[String] = None): Seq[() => DataFrame] =
+    evaluate(spark, segDir, exprs, full, slices, PanelSet.Tagged, org = org)
 }

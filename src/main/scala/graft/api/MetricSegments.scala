@@ -11,7 +11,9 @@ import graft.promql._
   * tier, the tier scan is dateint-pruned to the effective range (query
   * window extended left by the largest range+offset lookback across the
   * expression's selectors), and the shared engine evaluates the
-  * expression over the scan.
+  * expression over the scan. Every public door is a delegate of ONE
+  * evaluator ([[evaluate]]) over ONE scan-prep; the HTTP route reaches it
+  * through [[PanelSet.plan]].
   *
   * Concurrency: a store being compacted while queried is safe same-JVM
   * (the swap lock excludes the rename window at listing time), but a
@@ -42,8 +44,7 @@ object MetricSegments {
 
   /** The dateint partition-pruning predicate for an expression set over
     * the window [startMs, endMs) at grid step `stepMs` — the ONE place
-    * every front door below derives its scan bounds, so a pruning fix
-    * lands on all of them at once. Three windows union:
+    * [[evaluate]] derives its scan bounds. Three windows union:
     *  - [start − maxLookback, end): the classic left extension
     *    ([[Ast.lookbackMs]] — max range+offset across every selector);
     *  - a RIGHT extension by [[Ast.forwardMs]]: a negative offset reads
@@ -136,21 +137,15 @@ object MetricSegments {
 
   /** per-selector fingerprint requirement: the metric name is an
     * exact-indexed dimension (reference prunes metric segments on exactly
-    * this); conservative like the log side — a file is excluded only when
-    * EVERY selector excludes it
+    * this). One requirement tree per selector; the whole expression set
+    * costs ONE index read ([[FingerprintIndex.excludedForTrees]] unions
+    * the wanted fingerprints, reads once, intersects per-leaf exclusions —
+    * so a file is pruned only when NO panel's selector can live in it).
     */
-  private def excludedForExpr(spark: SparkSession, segDir: String,
-      e: Expr): Set[String] = excludedForExprs(spark, segDir, Seq(e))
-
   private def excludedForExprs(spark: SparkSession, segDir: String,
       es: Seq[Expr]): Set[String] = {
     import graft.ingest.FingerprintIndex
     import graft.ingest.FingerprintIndex.{ReqAnd, ReqNode, Requirement}
-    // One requirement tree per selector; the whole expression set costs
-    // ONE index read ([[FingerprintIndex.excludedForTrees]] unions the
-    // wanted fingerprints, reads once, intersects per-leaf exclusions —
-    // so with several expressions a file is pruned only when NO panel's
-    // selector can live in it).
     val trees: Seq[ReqNode] = es.flatMap(selectors).map { s =>
       // a bare matcher set `{attr="v"}` parses with an EMPTY metric name:
       // it selects across all metrics, so it must contribute no
@@ -176,6 +171,58 @@ object MetricSegments {
     MetricStore(scan.select((sys ++ labels).map(col): _*))
   }
 
+  /** The ONE metric evaluator every door and [[PanelSet.plan]] call: one
+    * frame per window over one scan-prep. The prep runs once per request —
+    * parse, the fingerprint-index exclusion job (time-independent), the
+    * cached segment listing, the tier condition of the FULL span's step
+    * and the org partition — and each window adds only its dateint prune
+    * ([[dateintCond]]). Windows come from the full span's grid
+    * ([[slicePlan]]), so every window evaluates on the same step and tier,
+    * and the concatenated frames equal the one-shot result: a
+    * non-@-pinned construct's value at grid instant t depends only on
+    * samples in [t − lookback, t] ([[sliceable]] gates the pins).
+    *
+    *  - [[PanelSet.Alone]]: the first expression on its own, each window
+    *    over its own dateint-pruned scan (slicing the SCAN);
+    *  - [[PanelSet.Fused]] / [[PanelSet.Tagged]]: the panel set over the
+    *    full window's scan, pruned by the max lookback across panels and
+    *    by every panel's index exclusions. Fused tries the engine's fused
+    *    shapes (identical selector+grouping: output columns named by
+    *    alias) and falls back on exactly the typed non-fusability signal
+    *    — a genuine IllegalArgumentException past the shape gate must
+    *    surface, not re-run with a switched response shape. The tagged
+    *    union runs over ONE shared materialized pass
+    *    ([[Engine.sharedPass]]); with several windows the fused shape
+    *    reads that pass too, so K panels × S windows cost one lake scan.
+    */
+  private[api] def evaluate(spark: SparkSession, segDir: String,
+      exprs: Seq[(String, String)], full: QueryParams,
+      windows: Seq[QueryParams], shape: PanelSet.Shape,
+      org: Option[String], freshTail: Boolean): Seq[() => DataFrame] = {
+    require(exprs.nonEmpty, "a metric query needs at least one expression")
+    val parsed = exprs.map(x => Parser.parse(x._2)
+      .fold(err => throw new IllegalArgumentException(err), identity))
+    val base0 = graft.ingest.FingerprintIndex.prunedRead(spark, segDir,
+        excludedForExprs(spark, segDir, parsed))
+      .filter(tierCond(spark, segDir, full.stepMs, org, freshTail,
+        Some(dateintBounds(parsed, full.startMs, full.endMs, full.stepMs))))
+    // tenant isolation: org leads the partition layout, so this equality
+    // prunes every other tenant's directories (three-key pruning)
+    val base = org.fold(base0)(o => base0.filter(col("org") === o))
+    def scan(p: QueryParams): MetricStore =
+      storeFrom(base.filter(dateintCond(parsed, p.startMs, p.endMs, p.stepMs)))
+    if (shape == PanelSet.Alone)
+      return windows.map(sp => () => Engine.query(exprs.head._2, scan(sp), sp))
+    val store = scan(full)
+    lazy val shared = Engine.sharedPass(parsed, store, full)
+    windows.map { sp => () =>
+      def tagged = Engine.taggedOver(exprs, shared, sp)
+      if (shape == PanelSet.Tagged) tagged
+      else try Engine.queryMulti(exprs, if (windows.size > 1) shared else store, sp)
+      catch { case _: Engine.NotFusableException => tagged }
+    }
+  }
+
   /** Full PromQL query over written metric segments. When a fingerprint
     * index exists next to the dir ([[graft.ingest.FingerprintIndex
     * .buildLogIndex]] works on metric segments too), files that can't
@@ -187,154 +234,44 @@ object MetricSegments {
     queryAt(spark, segDir, promql, StepPolicy.paramsFor(startMs, endMs), org,
       freshTail)
 
-  /** [[query]] with an externally-fixed grid — the time-sliced SSE path's
-    * slice evaluator: `p` comes from the FULL query span (its step and
-    * tier), so every slice evaluates on the same grid, while the dateint
-    * scan prunes to THIS slice's window plus the expression's lookback.
-    * Exact slicing holds because every non-@-pinned construct's value at
-    * grid instant t depends only on samples in [t − lookback, t] — the
-    * [[sliceable]] guard excludes @-pinned expressions, whose pin
-    * (`start()`/`end()`/a literal ts) reads outside the slice.
-    */
+  /** [[query]] on an externally-fixed grid `p` */
   def queryAt(spark: SparkSession, segDir: String, promql: String,
       p: QueryParams, org: Option[String] = None,
-      freshTail: Boolean = true): DataFrame = {
-    val e = Parser.parse(promql)
-      .fold(err => throw new IllegalArgumentException(err), identity)
-    val excluded = excludedForExpr(spark, segDir, e)
-    val scan0 = graft.ingest.FingerprintIndex.prunedRead(spark, segDir, excluded)
-      .filter(tierCond(spark, segDir, p.stepMs, org, freshTail,
-          Some(dateintBounds(Seq(e), p.startMs, p.endMs, p.stepMs))) &&
-        dateintCond(Seq(e), p.startMs, p.endMs, p.stepMs))
-    // tenant isolation: org leads the partition layout, so this equality
-    // prunes every other tenant's directories (three-key pruning)
-    val scan = org.fold(scan0)(o => scan0.filter(col("org") === o))
-    Engine.query(promql, storeFrom(scan), p)
-  }
+      freshTail: Boolean = true): DataFrame =
+    queryAtSliced(spark, segDir, promql, p, Seq(p), org, freshTail).head()
 
-  /** The slice evaluator used by the streaming front door: one
-    * [[queryAt]] frame per slice in `slices`, with everything
-    * slice-INVARIANT hoisted out of the loop — the parse, the
-    * fingerprint-index exclusion job (time-independent: it depends only
-    * on the expression's metric names), and the segment-dir listing (one
-    * shared pruned relation; each slice's dateint filter partition-prunes
-    * it). Without the hoist a K-slice stream pays K index jobs and K
-    * directory listings for identical answers — the dominant cost of
-    * slicing on a large lake, where the listing alone touches millions
-    * of files' metadata.
-    */
+  /** [[query]] sliced: one frame per window of `slices` on `full`'s grid */
   def queryAtSliced(spark: SparkSession, segDir: String, promql: String,
       full: QueryParams, slices: Seq[QueryParams],
       org: Option[String] = None,
-      freshTail: Boolean = true): Seq[() => DataFrame] = {
-    val e = Parser.parse(promql)
-      .fold(err => throw new IllegalArgumentException(err), identity)
-    val excluded = excludedForExpr(spark, segDir, e)
-    val base0 = graft.ingest.FingerprintIndex.prunedRead(spark, segDir, excluded)
-      .filter(tierCond(spark, segDir, full.stepMs, org, freshTail,
-        Some(dateintBounds(Seq(e), full.startMs, full.endMs, full.stepMs))))
-    val base = org.fold(base0)(o => base0.filter(col("org") === o))
-    slices.map { sp => () =>
-      val scan = base.filter(dateintCond(Seq(e), sp.startMs, sp.endMs, sp.stepMs))
-      Engine.query(promql, storeFrom(scan), sp)
-    }
-  }
+      freshTail: Boolean = true): Seq[() => DataFrame] =
+    evaluate(spark, segDir, Seq("value" -> promql), full, slices,
+      PanelSet.Alone, org, freshTail)
 
-  /** A multi-expression request fused onto ONE pruned tier scan
-    * ([[graft.promql.Engine.queryMulti]], r14): a dashboard issuing
-    * several aggregations or range-window panels of the same selector
-    * pays one dateint-pruned segment read and one engine pass instead of
-    * one per panel. `exprs` are (output column, promql); the engine
-    * enforces the identical-selector contract, so the first expression's
-    * lookback and metric exclusions prune for all of them.
-    */
-  /** Dateint pruning takes the MAX lookback across all panels and the
-    * index exclusion intersects across every panel's selectors, so the
-    * shared scan is correct for the whole set, fused or not. Fusable
-    * sets (identical selector+grouping) keep the alias-column response;
-    * heterogeneous sets — which previously 400'd — fall back to
-    * [[graft.promql.Engine.queryMultiTagged]]: one materialized pass,
-    * rows tagged (alias, ts, series, value).
-    */
-  /** `forceTagged = true` skips the fused attempt so the response shape
-    * is the tagged union regardless of fusability — for clients that
-    * want ONE uniform schema across arbitrary panel sets (the HTTP
-    * route's `tagged=true` param).
+  /** A multi-panel request on one pruned scan: fused when the set fuses
+    * (columns named by alias), else — or always with `forceTagged`, for
+    * clients that want ONE schema for any panel mix — the tagged union
+    * (alias, ts, series, value) over one materialized pass.
     */
   def queryMultiAt(spark: SparkSession, segDir: String,
       exprs: Seq[(String, String)], p: QueryParams,
       org: Option[String] = None, forceTagged: Boolean = false,
-      freshTail: Boolean = true): DataFrame = {
-    require(exprs.nonEmpty, "queryMultiAt needs at least one expression")
-    val parsed = exprs.map(x => Parser.parse(x._2)
-      .fold(err => throw new IllegalArgumentException(err), identity))
-    val excluded = excludedForExprs(spark, segDir, parsed)
-    val scan0 = graft.ingest.FingerprintIndex.prunedRead(spark, segDir, excluded)
-      .filter(tierCond(spark, segDir, p.stepMs, org, freshTail,
-          Some(dateintBounds(parsed, p.startMs, p.endMs, p.stepMs))) &&
-        dateintCond(parsed, p.startMs, p.endMs, p.stepMs))
-    val scan = org.fold(scan0)(o => scan0.filter(col("org") === o))
-    val store = storeFrom(scan)
-    if (forceTagged) return Engine.queryMultiTagged(exprs, store, p)
-    // catch ONLY the typed non-fusability signal from the engine's shape
-    // checks — a genuine IllegalArgumentException raised past the shape
-    // gate (bad parameter, malformed matcher) must surface, not get
-    // silently re-evaluated through the tagged door with a switched
-    // response shape (r15 VERDICT #3)
-    try Engine.queryMulti(exprs, store, p)
-    catch {
-      case _: Engine.NotFusableException =>
-        Engine.queryMultiTagged(exprs, store, p)
-    }
-  }
+      freshTail: Boolean = true): DataFrame =
+    queryMultiAtSliced(spark, segDir, exprs, p, Seq(p), org, forceTagged,
+      freshTail).head()
 
-  /** The multi-expression door, SLICED ([[slicePlan]]): ONE shared
-    * materialized pass over the full window's pruned tier scan feeds
-    * every (slice × panel) evaluation, so a 30-day K-panel dashboard
-    * costs one lake scan total — and the first slice streams after that
-    * scan plus one slice-sized engine pass instead of after the
-    * full-window pass. (The single-query [[queryAtSliced]] instead
-    * slices the SCAN itself; with K panels the shared-scan trade wins:
-    * 1 scan vs K×S partial scans.) Fusable panel sets keep the fused
-    * alias-column shape per slice; heterogeneous sets ride the tagged
-    * inner loop against the shared store. Slice-exactness holds per
-    * panel exactly as for [[queryAtSliced]] — callers gate with
-    * [[sliceable]] on EVERY panel.
+  /** [[queryMultiAt]] sliced: every (slice × panel) evaluation reads ONE
+    * shared materialized pass. Callers gate with [[sliceable]] on EVERY
+    * panel.
     */
   def queryMultiAtSliced(spark: SparkSession, segDir: String,
       exprs: Seq[(String, String)], full: QueryParams,
       slices: Seq[QueryParams],
       org: Option[String] = None,
       forceTagged: Boolean = false,
-      freshTail: Boolean = true): Seq[() => DataFrame] = {
-    require(exprs.nonEmpty, "queryMultiAtSliced needs at least one expression")
-    val parsed = exprs.map(x => Parser.parse(x._2)
-      .fold(err => throw new IllegalArgumentException(err), identity))
-    val excluded = excludedForExprs(spark, segDir, parsed)
-    val base0 = graft.ingest.FingerprintIndex.prunedRead(spark, segDir, excluded)
-      .filter(tierCond(spark, segDir, full.stepMs, org, freshTail,
-          Some(dateintBounds(parsed, full.startMs, full.endMs, full.stepMs))) &&
-        dateintCond(parsed, full.startMs, full.endMs, full.stepMs))
-    val base = org.fold(base0)(o => base0.filter(col("org") === o))
-    // series-partition the shared pass once before materializing — every
-    // windowed (slice × panel) evaluation then plans exchange-free over
-    // the shared blocks (the engine skips its per-leaf series
-    // repartition; guide §2.4)
-    val store0 = storeFrom(base)
-    val preShared =
-      if (store0.labelCols.nonEmpty)
-        store0.df.repartition(store0.labelCols.map(col): _*)
-      else store0.df
-    val shared = MetricStore(graft.GraftSession.materialize(preShared),
-      seriesPartitioned = store0.labelCols.nonEmpty)
-    slices.map { sp => () =>
-      if (forceTagged) Engine.taggedOver(exprs, shared, sp)
-      else try Engine.queryMulti(exprs, shared, sp)
-      catch {
-        case _: Engine.NotFusableException => Engine.taggedOver(exprs, shared, sp)
-      }
-    }
-  }
+      freshTail: Boolean = true): Seq[() => DataFrame] =
+    evaluate(spark, segDir, exprs, full, slices,
+      if (forceTagged) PanelSet.Tagged else PanelSet.Fused, org, freshTail)
 
   /** true when the expression may be evaluated slice-by-slice: no
     * selector is @-pinned (`@ start()` / `@ end()` resolve against the

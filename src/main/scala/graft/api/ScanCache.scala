@@ -160,8 +160,8 @@ object ScanCache {
   //    missing-dir window;
   //  - cross-process (or crashed compactor): a listing that finds the
   //    dir absent while `<dir>.compact_old` exists waits briefly for the
-  //    swap to land, then restores the staged dir (the reader-side twin
-  //    of Segments.recoverStagedSwap) and retries.
+  //    swap to land, then restores the staged dir ([[recoverStaged]],
+  //    the same routine the compactor runs on entry) and retries.
 
   private val swapLocks = new ConcurrentHashMap[String,
     java.util.concurrent.locks.ReentrantReadWriteLock]()
@@ -236,25 +236,25 @@ object ScanCache {
         action
     }
 
-  /** reader-side staged-swap recovery: if `dir` is absent but the
-    * compactor's staged `.compact_old` exists, wait briefly for an
-    * in-flight cross-process swap to land; if the dir is STILL missing the
-    * compactor is dead — restore the staged data (same contract as
-    * [[graft.ingest.Segments.recoverStagedSwap]], duplicated here so the
-    * read path owns its recovery without an ingest-module call).
+  /** The staged-swap recovery of readers and the compactor alike: when
+    * `dir` is absent but the compactor's staged `<dir>.compact_old`
+    * exists, wait up to `waitMs` for an in-flight cross-process swap to
+    * land; if the dir is STILL missing its compactor is dead — restore
+    * the staged data. Readers wait (a live swap completes in
+    * milliseconds and must not be stolen from); the compactor, recovering
+    * a crashed predecessor on entry, passes 0. Throws when the restore
+    * fails and the dir is still missing.
     */
-  private[api] def recoverStaged(spark: SparkSession, dir: String): Unit = {
+  private[graft] def recoverStaged(spark: SparkSession, dir: String,
+      waitMs: Long = 2000L): Unit = {
     val dirP = new org.apache.hadoop.fs.Path(dirKey(dir))
-    val fs = dirP.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val oldP = new org.apache.hadoop.fs.Path(dirKey(dir) + ".compact_old")
-    try {
-      if (fs.exists(dirP) || !fs.exists(oldP)) return
-      var waited = 0
-      while (!fs.exists(dirP) && fs.exists(oldP) && waited < 2000) {
-        Thread.sleep(50); waited += 50
-      }
-      if (!fs.exists(dirP) && fs.exists(oldP)) fs.rename(oldP, dirP)
-    } catch { case _: java.io.IOException => () }
+    val fs = dirP.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def staged = !fs.exists(dirP) && fs.exists(oldP)
+    var waited = 0L
+    while (staged && waited < waitMs) { Thread.sleep(50); waited += 50 }
+    if (staged && !fs.rename(oldP, dirP) && !fs.exists(dirP))
+      throw new java.io.IOException(s"could not restore $dir from staged $oldP")
   }
 
   /** `spark.read[.option(mergeSchema)].parquet(dir)`, served from the

@@ -13,7 +13,8 @@ import graft.promql.QueryParams
   *
   * The LogQL lifecycle is byte-identical to [[LogSegments]] (same parser,
   * same fingerprint pruning, same compiler) — only the store differs — so
-  * `query` simply delegates. The trace fetches are the library surface of
+  * `query` simply delegates, and the HTTP route serves spans through the
+  * same [[PanelSet]] plan as logs. The trace fetches are the library surface of
   * the it_trace_lookup / it_exemplar_trace motions: resolve an OR-set of
   * exact trace-id fingerprints through ONE index read, scan only the
   * surviving files, return spans in trace order.
@@ -28,22 +29,6 @@ object SpanSegments {
       limit: Int = 1000, desc: Boolean = true, fields: Seq[String] = Nil,
       org: Option[String] = None): DataFrame =
     LogSegments.query(spark, segDir, logql, p, limit, desc, fields, org)
-
-  /** Spans-side dashboard fusion — N metric-style LogQL-over-spans
-    * panels (error-rate by service, p-duration aggregations) on ONE
-    * materialized pass; same lifecycle delegate as [[query]].
-    */
-  def queryMultiTagged(spark: SparkSession, segDir: String,
-      exprs: Seq[(String, String)], p: QueryParams,
-      org: Option[String] = None): DataFrame =
-    LogSegments.queryMultiTagged(spark, segDir, exprs, p, org)
-
-  /** sliced twin, same delegate ([[LogSegments.queryMultiTaggedSliced]]) */
-  def queryMultiTaggedSliced(spark: SparkSession, segDir: String,
-      exprs: Seq[(String, String)], full: QueryParams,
-      slices: Seq[QueryParams],
-      org: Option[String] = None): Seq[() => DataFrame] =
-    LogSegments.queryMultiTaggedSliced(spark, segDir, exprs, full, slices, org)
 
   /** Fetch one trace's spans in trace order through the exact index. */
   def traceById(spark: SparkSession, segDir: String, traceId: String,

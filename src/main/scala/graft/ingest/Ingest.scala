@@ -660,7 +660,9 @@ object Segments {
       write: DataFrame => org.apache.spark.sql.DataFrameWriter[org.apache.spark.sql.Row]): DataFrame = {
     val tmp = dir.stripSuffix("/") + ".compact_tmp"
     val old = dir.stripSuffix("/") + ".compact_old"
-    recoverStagedSwap(spark, dir)
+    // crash recovery: a process that died between `dir → .compact_old`
+    // and `.compact_tmp → dir` left the data stranded — restore it
+    graft.api.ScanCache.recoverStaged(spark, dir, waitMs = 0L)
     write(spark.read.option("mergeSchema", "true").parquet(dir)).parquet(tmp)
     val conf = spark.sparkContext.hadoopConfiguration
     val dirP = new org.apache.hadoop.fs.Path(dir)
@@ -671,8 +673,8 @@ object Segments {
     // the rename pair runs under the dir's swap WRITE lock: same-JVM
     // readers (ScanCache listings hold the read side) can never observe
     // the instant where the live dir is absent. Cross-process readers
-    // retain the window — they recover via ScanCache.recoverStaged /
-    // recoverStagedSwap, the same way a crashed compactor is handled.
+    // retain the window — they recover via ScanCache.recoverStaged, the
+    // same way a crashed compactor is handled.
     graft.api.ScanCache.withSwapWriteLock(dir) {
       if (!fs.rename(dirP, oldP)) {
         fs.delete(tmpP, true)
@@ -696,22 +698,6 @@ object Segments {
     fs.delete(oldP, true)
     graft.api.TierFreshness.invalidateMeta(dir)
     spark.read.parquet(dir)
-  }
-
-  /** Crash recovery for the two-rename swap: a process that died between
-    * `dir → .compact_old` and `.compact_tmp → dir` leaves the live dir
-    * missing with the data stranded in `.compact_old` — restore it. Called
-    * on compaction entry; callers that only read segments can invoke it
-    * directly after an unclean shutdown.
-    */
-  def recoverStagedSwap(spark: SparkSession, dir: String): Unit = {
-    val dirP = new org.apache.hadoop.fs.Path(dir)
-    val fs = dirP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val oldP = new org.apache.hadoop.fs.Path(dir.stripSuffix("/") + ".compact_old")
-    if (!fs.exists(dirP) && fs.exists(oldP)) {
-      if (!fs.rename(oldP, dirP))
-        throw new java.io.IOException(s"could not restore $dir from staged $oldP")
-    }
   }
 
   /** Retention expiry (the reference sweeper's role,

@@ -115,8 +115,8 @@ object Compiler {
   /** synthetic cooked-metrics frame + the PromQL string (vector-agg wrapper
     * included) that evaluates `q` over it, under the given metric name
     */
-  // The series partitioning of the synthetic store (r18's
-  // seriesPartitioned) now lives in the ENGINE: Engine.leafBucketed /
+  // The series partitioning of the synthetic store lives in the
+  // ENGINE: Engine.leafBucketed /
   // sketchStatLeaf repartition the rolled store rows by the label set
   // exactly when a label-keyed window follows, so the synthetic frame
   // gets the same one shared exchange without a compiler-side twin (and

@@ -14,14 +14,7 @@ final case class QueryParams(startMs: Long, endMs: Long, stepMs: Long)
   * chq_rollup_{sum,count,min,max} (+optional chq_sketch), and any number of
   * label columns (resource_ / attr_ / scope_ prefixed, all StringType).
   */
-/** `seriesPartitioned`: the caller guarantees `df` is already
-  * hash-partitioned by the label set (e.g. the multi-panel doors, which
-  * repartition ONCE before materializing the shared pass) — the engine's
-  * per-leaf series repartition ([[Engine]] leafBucketed seriesShuffle)
-  * is skipped, so K panels share one exchange instead of adding one
-  * each.
-  */
-final case class MetricStore(df: DataFrame, seriesPartitioned: Boolean = false) {
+final case class MetricStore(df: DataFrame) {
   import MetricStore._
   val labelCols: Seq[String] =
     df.schema.fieldNames.filterNot(systemCols.contains).toSeq
@@ -296,22 +289,25 @@ object Engine {
   def queryMultiTagged(exprs: Seq[(String, String)], store: MetricStore,
       p: QueryParams): DataFrame = {
     require(exprs.nonEmpty, "queryMultiTagged needs at least one expression")
-    val parsedAll = exprs.map { case (a, q) =>
-      (a, q, Parser.parse(q).fold(e => throw new IllegalArgumentException(e), identity))
-    }
-    val pre = multiPrefilter(parsedAll.map(_._3), p)
-      .fold(store.df)(store.df.filter)
-    // series-partition the shared pass ONCE before materializing it
-    // (LogicalRDD keeps the partitioning): every windowed panel's leaf
-    // then plans exchange-free over the shared blocks instead of adding
-    // its own per-panel repartition (guide §2.4)
-    val labels = store.labelCols
-    val prePart =
-      if (labels.nonEmpty) pre.repartition(labels.map(col): _*) else pre
-    val shared = MetricStore(graft.GraftSession.materialize(prePart),
-      seriesPartitioned = labels.nonEmpty)
-    taggedOver(exprs, shared, p)
+    val parsed = exprs.map(x =>
+      Parser.parse(x._2).fold(e => throw new IllegalArgumentException(e), identity))
+    taggedOver(exprs, sharedPass(parsed, store, p), p)
   }
+
+  /** The ONE shared pass of the multi-panel doors: `store`'s rows bounded
+    * by [[multiPrefilter]], materialized once
+    * ([[graft.GraftSession.materialize]]). It is deliberately NOT
+    * series-partitioned first: under AQE a checkpoint records
+    * UnknownPartitioning (the adaptive plan reports no partitioning
+    * before it runs), so a label repartition here is a shuffle nothing
+    * downstream can reuse — each windowed panel's leaf places its own one
+    * series exchange (leafBucketed `seriesShuffle`), and instant panels
+    * need none.
+    */
+  private[graft] def sharedPass(es: Seq[Expr], store: MetricStore,
+      p: QueryParams): MetricStore =
+    MetricStore(graft.GraftSession.materialize(
+      multiPrefilter(es, p).fold(store.df)(store.df.filter)))
 
   /** The row-level prefilter bounding [[queryMultiTagged]]'s shared
     * materialized pass: a UNION of per-selector (metric, time-window)
@@ -381,10 +377,9 @@ object Engine {
   }
 
   /** the tagged-union inner loop of [[queryMultiTagged]] over a
-    * caller-prepared store — the sliced front door
-    * ([[graft.api.MetricSegments.queryMultiAtSliced]]) calls this per
-    * slice against ONE shared materialized store, so the prefilter +
-    * materialization above runs once per request, not once per slice
+    * caller-prepared store — the sliced metric doors call this per slice
+    * against ONE [[sharedPass]], so the prefilter + materialization runs
+    * once per request, not once per slice
     */
   private[graft] def taggedOver(exprs: Seq[(String, String)],
       store: MetricStore, p: QueryParams): DataFrame = {
@@ -894,7 +889,7 @@ object Engine {
     // epoch-aligned step bucket, shifted by offset so output ts is query-time
     val bucket = ((col("chq_timestamp") + lit(off)) - (col("chq_timestamp") + lit(off)) % lit(step))
     val labels = store.labelCols
-    if (seriesShuffle && labels.nonEmpty && !store.seriesPartitioned)
+    if (seriesShuffle && labels.nonEmpty)
       df = df.repartition(labels.map(col): _*)
     val bucketed = df
       .withColumn("ts", bucket)
@@ -1269,7 +1264,7 @@ object Engine {
     // same series-shuffle placement as leafBucketed: when the range
     // window follows, one labels-keyed exchange over the rolled sketch
     // rows serves the bucket merge AND the window (guide §2.4)
-    if (range > 0 && labels.nonEmpty && !store.seriesPartitioned)
+    if (range > 0 && labels.nonEmpty)
       df = df.repartition(labels.map(col): _*)
     val bucketed = df
       .withColumn("ts", bucket)

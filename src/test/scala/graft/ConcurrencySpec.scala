@@ -435,4 +435,52 @@ class ConcurrencySpec extends AnyFunSuite {
     val after = values()
     assert((2 to 4).forall(d => after.contains(s"svc-new-$d")), after.toString)
   }
+
+  test("a log query whose cached index listing points at rewritten " +
+      "files rebuilds under the swap retry instead of failing") {
+    val dir = tmpDir("graft_conc_fpindex_")
+    val logs = graft.model.Cooked.logs(spark, sf)
+      .withColumn("chq_fingerprint",
+        graft.ingest.LogFingerprint.fingerprint(col("log_message")))
+    Segments.writeLogSegments(logs, dir, maxRecordsPerFile = 2000)
+    graft.ingest.FingerprintIndex.buildLogIndex(spark, dir)
+    val r = spark.read.parquet(dir)
+      .agg(min(col("chq_timestamp")), max(col("chq_timestamp"))).head()
+    val api = new graft.api.HttpApi(spark, logsDir = Some(dir)).start()
+    val client = java.net.http.HttpClient.newHttpClient()
+    def rows(): (Int, Seq[String]) = {
+      val q = java.net.URLEncoder.encode("""{log_level="ERROR"}""", "UTF-8")
+      val resp = client.send(java.net.http.HttpRequest.newBuilder(
+        java.net.URI.create(s"http://127.0.0.1:${api.port}/api/v1/logs/query" +
+          s"?q=$q&s=${r.getLong(0)}&e=${r.getLong(1) + 1}&limit=100000")).GET().build(),
+        java.net.http.HttpResponse.BodyHandlers.ofString())
+      val om = new com.fasterxml.jackson.databind.ObjectMapper()
+      (resp.statusCode(), resp.body().linesIterator
+        .filter(_.startsWith("data: {\"type\":\"result\""))
+        .flatMap { evt =>
+          val rs = om.readTree(evt.stripPrefix("data: ")).get("data").get("rows")
+          (0 until rs.size).map(i => rs.get(i).toString)
+        }.toSeq.sorted)
+    }
+    try {
+      val reads = graft.ingest.FingerprintIndex.indexReads.get()
+      val (c0, want) = rows() // warms the listing cache, index included
+      assert(c0 == 200 && want.nonEmpty)
+      assert(graft.ingest.FingerprintIndex.indexReads.get() > reads,
+        "the query must probe the index")
+      // a cross-process index rewrite: same content, new file names, so
+      // the cached listing of <dir>.fpindex names files that are gone
+      val idx = new org.apache.hadoop.fs.Path(
+        graft.ingest.FingerprintIndex.indexPath(dir))
+      val fs = idx.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val it = fs.listFiles(idx, true)
+      val files = Iterator.continually(it).takeWhile(_.hasNext).map(_.next().getPath)
+        .filter(_.getName.endsWith(".parquet")).toList
+      assert(files.nonEmpty)
+      files.foreach(f =>
+        assert(fs.rename(f, new org.apache.hadoop.fs.Path(f.getParent, "re-" + f.getName))))
+      val (c1, got) = rows()
+      assert(c1 == 200 && got == want, s"status $c1, ${got.size} vs ${want.size} rows")
+    } finally api.stop()
+  }
 }

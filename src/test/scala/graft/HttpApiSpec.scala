@@ -767,4 +767,39 @@ class HttpApiSpec extends AnyFunSuite {
         s"$cbad ${badBody.take(200)}")
     } finally api.stop()
   }
+
+  test("spans SSE: a single raw query honours order and fields, day-sliced " +
+      "like logs") {
+    val api = new HttpApi(spark, spansDir = Some(spanDir)).start()
+    try {
+      val base = s"http://127.0.0.1:${api.port}"
+      val om = new com.fasterxml.jackson.databind.ObjectMapper()
+      val sr = spark.read.parquet(spanDir)
+        .agg(min(col("chq_timestamp")), max(col("chq_timestamp"))).head()
+      val (ss, se) = (sr.getLong(0), sr.getLong(1) + 1)
+      val q = """{span_kind="SPAN_KIND_SERVER"}"""
+      val (code, body) = get(base, s"/api/v1/spans/query?q=${enc(q)}&s=$ss" +
+        s"&e=$se&limit=40&order=asc&fields=chq_timestamp,span_name")
+      assert(code == 200 && body.contains("\"status\":\"ok\""), body.take(300))
+      val rows = body.linesIterator.filter(_.startsWith("data: "))
+        .map(_.stripPrefix("data: "))
+        .filter(_.startsWith("""{"type":"result""""))
+        .flatMap { evt =>
+          val rs = om.readTree(evt).get("data").get("rows")
+          (0 until rs.size).map(i => rs.get(i))
+        }.toSeq
+      import scala.jdk.CollectionConverters._
+      assert(rows.nonEmpty && rows.forall(r =>
+        r.fieldNames.asScala.toSet == Set("chq_timestamp", "span_name")),
+        rows.take(3).toString)
+      val ts = rows.map(_.get("chq_timestamp").asLong)
+      assert(ts == ts.sorted, "not ascending")
+      val want = graft.api.SpanSegments.query(spark, spanDir, q,
+        graft.api.StepPolicy.paramsFor(ss, se), limit = 40, desc = false,
+        fields = Seq("chq_timestamp", "span_name"))
+        .collect().map(_.getLong(0)).toSeq
+      assert(ts.size == want.size && ts.sorted == want.sorted,
+        s"${ts.size} rows vs one-shot ${want.size}")
+    } finally api.stop()
+  }
 }

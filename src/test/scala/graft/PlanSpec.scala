@@ -569,4 +569,35 @@ class PlanSpec extends AnyFunSuite {
     assert(!p.contains("Exchange") && !p.contains("Join"),
       s"span fingerprint picked up a shuffle:\n${p.take(2000)}")
   }
+
+  test("multi-panel shared pass: no series repartition of its own — " +
+      "instant panels plan none, each windowed panel exactly one") {
+    import org.apache.spark.sql.functions._
+    import graft.promql.{Engine, MetricStore, Parser, QueryParams}
+    val t0 = 1704067200000L
+    val store = MetricStore(spark.range(0, 2000).select(
+      (lit(t0) + col("id") * 10000L).as("chq_timestamp"),
+      lit("m").as("metric_name"),
+      (col("id") % 7).cast("double").as("chq_rollup_sum"),
+      lit(1.0).as("chq_rollup_count"),
+      lit(0.0).as("chq_rollup_min"), lit(6.0).as("chq_rollup_max"),
+      concat(lit("svc-"), (col("id") % 5).cast("string")).as("attr_svc")))
+    val p = QueryParams(t0, t0 + 20000000L, 60000L)
+    // the shared pass is prefilter + materialize: no exchange, so its
+    // blocks keep the input's partition count
+    val shared = Engine.sharedPass(
+      Seq(Parser.parse("rate(m[5m])").toOption.get), store, p)
+    assert(shared.df.rdd.getNumPartitions == store.df.rdd.getNumPartitions)
+    def plan(qs: Seq[String]) = Engine.queryMultiTagged(
+      qs.zipWithIndex.map { case (q, i) => s"a$i" -> q }, store, p)
+      .queryExecution.executedPlan.toString
+    def seriesKeyed(plan: String) =
+      "hashpartitioning\\(attr_svc#\\d+, \\d+\\)".r.findAllIn(plan).size
+    val iPlan = plan(Seq("sum by (attr_svc) (m)", "max(m)"))
+    assert(seriesKeyed(iPlan) == 0, iPlan.take(3000))
+    val wPlan = plan(Seq("rate(m[5m])", "max_over_time(m[10m])"))
+    assert(seriesKeyed(wPlan) == 2, wPlan.take(3000))
+    // ...placed before the step aggregation, which then needs no exchange
+    assert(!wPlan.contains("hashpartitioning(ts#"), wPlan.take(3000))
+  }
 }
