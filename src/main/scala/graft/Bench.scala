@@ -221,32 +221,10 @@ object Bench {
     val spark = GraftSession.builder(s"local[$cpus]", cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    // executor task-CPU accumulator: listener events are async, so reads
-    // poll until the counter is quiet (attempts run sequentially — a simple
-    // atomic suffices)
-    val cpuNs = new java.util.concurrent.atomic.AtomicLong(0)
-    // shuffle WRITE bytes: the quantified "is this op shuffle-light" signal
-    // (each exchange writes its input exactly once, so per-query deltas
-    // measure data moved, independent of host speed)
-    val shufBytes = new java.util.concurrent.atomic.AtomicLong(0)
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        val m = te.taskMetrics
-        if (m != null) {
-          cpuNs.addAndGet(m.executorCpuTime)
-          shufBytes.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-        }
-      }
-    })
-    def quietCpu(): Long = {
-      var prev = cpuNs.get(); var stableMs = 0; var waited = 0
-      while (stableMs < 40 && waited < 2000) {
-        Thread.sleep(10); waited += 10
-        val cur = cpuNs.get()
-        if (cur == prev) stableMs += 10 else { stableMs = 0; prev = cur }
-      }
-      prev
-    }
+    // task CPU and shuffle-write bytes per attempt (attempts run
+    // sequentially, so counter deltas belong to one attempt)
+    val counters = new TaskCounters
+    spark.sparkContext.addSparkListener(counters)
 
     // one warm-up action so JVM/codegen/FS-cache startup isn't billed to q1
     spark.read.parquet(s"$sfDir/lineitem.parquet").count()
@@ -255,13 +233,13 @@ object Bench {
     // as a fast query — min-of-N would otherwise PREFER the failure); the
     // error message is carried in the JSON's `err` map instead.
     def timeOnce(fn: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame): Either[String, (Double, Double, Long)] = {
-      val c0 = quietCpu()
-      val s0 = shufBytes.get()
+      val c0 = counters.quietCpuNs()
+      val s0 = counters.shuffleBytes.get()
       val t0 = System.nanoTime()
       try {
         fn(spark, sfDir).write.format("noop").mode("overwrite").save()
         val wall = (System.nanoTime() - t0) / 1e9
-        Right((wall, (quietCpu() - c0) / 1e9, shufBytes.get() - s0))
+        Right((wall, (counters.quietCpuNs() - c0) / 1e9, counters.shuffleBytes.get() - s0))
       } catch { case t: Throwable =>
         Left(Option(t.getMessage).getOrElse(t.getClass.getName).linesIterator
           .next().take(200))

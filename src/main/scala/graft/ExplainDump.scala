@@ -21,24 +21,8 @@ object ExplainDump {
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
 
-    val jobs = new java.util.concurrent.atomic.AtomicLong(0)
-    val tasks = new java.util.concurrent.atomic.AtomicLong(0)
-    val maxTaskMs = new java.util.concurrent.atomic.AtomicLong(0)
-    val cpuNs = new java.util.concurrent.atomic.AtomicLong(0)
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-      override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        tasks.incrementAndGet()
-        val m = te.taskMetrics
-        if (m != null) {
-          cpuNs.addAndGet(m.executorCpuTime)
-          val ms = m.executorRunTime
-          var cur = maxTaskMs.get()
-          while (ms > cur && !maxTaskMs.compareAndSet(cur, ms)) cur = maxTaskMs.get()
-        }
-      }
-    })
+    val tc = new TaskCounters
+    spark.sparkContext.addSparkListener(tc)
 
     val sel = SparkEntry.queries.filter { case (n, _) =>
       prefixes.exists(n.startsWith)
@@ -55,19 +39,19 @@ object ExplainDump {
           // cold attempt first (codegen/JIT), then the measured warm one —
           // mirrors the bench's min-of-2 methodology
           fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-          jobs.set(0); tasks.set(0); maxTaskMs.set(0); cpuNs.set(0)
+          tc.reset()
           val t0 = System.nanoTime()
           val df2 = fn(spark, sfDir)
           val tBuild = System.nanoTime()
           df2.queryExecution.executedPlan // analysis + optimization + physical
           val tPlan = System.nanoTime()
           df2.write.format("noop").mode("overwrite").save()
-          val wall = (System.nanoTime() - t0) / 1e9
-          Thread.sleep(150) // let async listener events drain
-          println(f"[probe] $name%-32s wall=$wall%7.3f cpu=${cpuNs.get / 1e9}%7.3f " +
+          val tEnd = System.nanoTime()
+          val cpu = tc.quietCpuNs() / 1e9 // async listener events drained
+          println(f"[probe] $name%-32s wall=${(tEnd - t0) / 1e9}%7.3f cpu=$cpu%7.3f " +
             f"build=${(tBuild - t0) / 1e9}%6.3f plan=${(tPlan - tBuild) / 1e9}%6.3f " +
-            f"exec=${(System.nanoTime() - tPlan) / 1e9 - 0.15}%6.3f " +
-            f"jobs=${jobs.get}%3d tasks=${tasks.get}%5d maxTask=${maxTaskMs.get}%6dms")
+            f"exec=${(tEnd - tPlan) / 1e9}%6.3f " +
+            f"jobs=${tc.jobs.get}%3d tasks=${tc.tasks.get}%5d maxTask=${tc.maxTaskMs.get}%6dms")
         } else println(s"[probe] $name explained")
       } catch { case e: Throwable =>
         println(s"[probe] $name FAILED: ${e.getMessage}")

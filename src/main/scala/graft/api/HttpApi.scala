@@ -404,6 +404,15 @@ final class HttpApi(
 
   private def need(p: Map[String, String], k: String): String =
     p.getOrElse(k, throw new IllegalArgumentException(s"missing required param: $k"))
+  /** a `limit` param, `default` when absent; a negative or non-numeric
+    * limit is a client error (400), not a failed Spark analysis (500)
+    */
+  private def limitParam(v: Option[String], default: Int): Int =
+    v.fold(default) { s =>
+      val n = s.toInt
+      require(n >= 0, s"limit must be >= 0, got $n")
+      n
+    }
   private def tsRange(p: Map[String, String]): (Long, Long) =
     (need(p, "s").toLong, need(p, "e").toLong)
   private def needDir(o: Option[String], signal: String): String =
@@ -537,7 +546,7 @@ final class HttpApi(
       val ps = PanelSet(signal,
         ("value" -> need(p, "q")) +: (2 to 9).flatMap(i => p.get(s"q$i").map(s"value$i" -> _)),
         s, e, p.get("org"),
-        limit = logParam("limit").map(_.toInt).getOrElse(1000),
+        limit = limitParam(logParam("limit"), 1000),
         desc = !logParam("order").contains("asc"),
         fields = logParam("fields").toSeq.flatMap(_.split(',')).filter(_.nonEmpty),
         tagged = p.get("tagged").contains("true"),
@@ -580,7 +589,7 @@ final class HttpApi(
              if scan.schema.fieldNames.contains("metric_name"))
           scan = scan.filter(col("metric_name") === m)
         Discovery.tagValues(scan, need(p, "tag"), s, e,
-          limit = p.get("limit").map(_.toInt).getOrElse(1000))
+          limit = limitParam(p.get("limit"), 1000))
       }
     }
   }
@@ -596,7 +605,7 @@ final class HttpApi(
       val labels = p.get("labels").map(_.split(',').toSeq.filter(_.nonEmpty))
         .getOrElse(labelCols(scan))
       Discovery.series(scan, labels, s, e,
-        limit = p.get("limit").map(_.toInt).getOrElse(10000))
+        limit = limitParam(p.get("limit"), 10000))
     }
   }
 

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.ingest.FingerprintIndex
 import graft.logql._
-import graft.promql.QueryParams
+import graft.promql.{Engine, QueryParams}
 
 /** Segments-backed LogQL front door — the full reference query lifecycle
   * in one call (queryapi/logs_evaluator.go: segment lookup via the
@@ -147,16 +147,7 @@ object LogSegments {
     val shared = LogStore(graft.GraftSession.materialize(
       window(base, effStart, full.endMs)
         .filter(col("chq_timestamp") >= effStart && col("chq_timestamp") < full.endMs)))
-    // distinct queries evaluate once; alias lists explode over their rows
-    windows.map { sp => () =>
-      exprs.map(_._2).distinct.map { q =>
-        val aliases = exprs.filter(_._2 == q).map(_._1)
-        val out = Compiler.query(q, shared, sp)
-        val labels = out.columns.filterNot(c => c == "ts" || c == "value").sorted
-        out.select(explode(lit(aliases.toArray)).as("alias"), col("ts"),
-          to_json(struct(labels.map(col): _*)).as("series"), col("value"))
-      }.reduce(_.union(_))
-    }
+    windows.map(sp => () => Engine.taggedUnion(exprs)(Compiler.query(_, shared, sp)))
   }
 
   /** Full LogQL query over written log segments. */

@@ -186,14 +186,15 @@ object MetricSegments {
     *    over its own dateint-pruned scan (slicing the SCAN);
     *  - [[PanelSet.Fused]] / [[PanelSet.Tagged]]: the panel set over the
     *    full window's scan, pruned by the max lookback across panels and
-    *    by every panel's index exclusions. Fused tries the engine's fused
-    *    shapes (identical selector+grouping: output columns named by
-    *    alias) and falls back on exactly the typed non-fusability signal
-    *    — a genuine IllegalArgumentException past the shape gate must
-    *    surface, not re-run with a switched response shape. The tagged
-    *    union runs over ONE shared materialized pass
-    *    ([[Engine.sharedPass]]); with several windows the fused shape
-    *    reads that pass too, so K panels × S windows cost one lake scan.
+    *    by every panel's index exclusions. Fused asks the engine's gate
+    *    ([[Engine.fusedSet]]) once: an accepted set is built fused
+    *    ([[Engine.fused]]: one selector and grouping, output columns
+    *    named by alias), any other set is the tagged union
+    *    ([[Engine.taggedUnion]]) over ONE shared materialized pass
+    *    ([[Engine.sharedPass]]). A genuine error of an accepted set
+    *    surfaces; it is never re-run with a switched response shape. With
+    *    several windows the fused shape reads the shared pass too, so K
+    *    panels × S windows cost one lake scan.
     */
   private[api] def evaluate(spark: SparkSession, segDir: String,
       exprs: Seq[(String, String)], full: QueryParams,
@@ -215,11 +216,12 @@ object MetricSegments {
       return windows.map(sp => () => Engine.query(exprs.head._2, scan(sp), sp))
     val store = scan(full)
     lazy val shared = Engine.sharedPass(parsed, store, full)
+    val fusable =
+      if (shape == PanelSet.Fused) Engine.fusedSet(exprs.map(_._1).zip(parsed)).toOption
+      else None
     windows.map { sp => () =>
-      def tagged = Engine.taggedOver(exprs, shared, sp)
-      if (shape == PanelSet.Tagged) tagged
-      else try Engine.queryMulti(exprs, if (windows.size > 1) shared else store, sp)
-      catch { case _: Engine.NotFusableException => tagged }
+      fusable.fold(Engine.taggedUnion(exprs)(Engine.query(_, shared, sp)))(
+        Engine.fused(_, if (windows.size > 1) shared else store, sp))
     }
   }
 

@@ -30,9 +30,9 @@ object PanelSet {
   /** how a section's panels evaluate:
     *  - [[Alone]]: one query on its own, each window over its own pruned
     *    scan (the single-query door; a raw log panel's day walk);
-    *  - [[Fused]]: several metric panels on one scan when the engine's
-    *    shape gate accepts them ([[graft.promql.Engine.queryMulti]]),
-    *    else the tagged union;
+    *  - [[Fused]]: several metric panels built by the engine's one fused
+    *    builder when its gate ([[graft.promql.Engine.fusedSet]]) accepts
+    *    them, else the tagged union;
     *  - [[Tagged]]: the tagged union (alias, ts, series, value) over ONE
     *    shared materialized pass.
     * Several windows over Fused/Tagged panels share one materialized pass.

@@ -113,13 +113,15 @@ object ScanCache {
       if (mergeSchema) spark.read.option("mergeSchema", "true")
       else spark.read
     // the listing holds the dir's swap READ lock: a same-JVM compaction
-    // swap (write side) can never interleave its missing-dir window here
+    // swap (write side) can never interleave its missing-dir window here.
+    // A probe checks existence first: a failed read of an absent path
+    // makes Spark log an ERROR stack trace although the miss is expected.
     def list(): Option[DataFrame] =
       withSwapReadLock(dir) {
-        if (swallowMissing)
-          try Some(reader.parquet(dir))
-          catch { case _: org.apache.spark.sql.AnalysisException => None }
-        else Some(reader.parquet(dir))
+        if (!swallowMissing) Some(reader.parquet(dir))
+        else if (!exists(spark, dir)) None
+        else try Some(reader.parquet(dir))
+        catch { case _: org.apache.spark.sql.AnalysisException => None }
       }
     val df =
       try list()
@@ -255,6 +257,11 @@ object ScanCache {
     while (staged && waited < waitMs) { Thread.sleep(50); waited += 50 }
     if (staged && !fs.rename(oldP, dirP) && !fs.exists(dirP))
       throw new java.io.IOException(s"could not restore $dir from staged $oldP")
+  }
+
+  private def exists(spark: SparkSession, dir: String): Boolean = {
+    val p = new org.apache.hadoop.fs.Path(dirKey(dir))
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
   }
 
   /** `spark.read[.option(mergeSchema)].parquet(dir)`, served from the

@@ -2,7 +2,7 @@ package graft.promql
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.expressions.{Window, WindowSpec}
 
 /** Query-time parameters: half-open time range [startMs, endMs), step in ms.
   * Buckets are epoch-aligned (`ts - ts % step`), matching the reference's
@@ -49,24 +49,16 @@ final case class SeriesFrame(df: DataFrame, labels: Seq[String])
   */
 object Engine {
 
-  /** Typed non-fusability signal from [[queryMulti]]'s shape checks — a
-    * panel set that doesn't fit one of the fused shapes (identical
-    * selector+grouping, all-range-window, agg-of-range-window) is NOT a
-    * user error: the front doors catch exactly this and re-route to the
-    * general tagged door. Before this type existed they caught ALL
-    * `IllegalArgumentException`, so a fusable-SHAPED set failing later
-    * for a genuine reason (bad matcher regex, malformed parameter) was
-    * silently re-evaluated through the tagged door — double work and a
-    * shape-switched response instead of an error (r15 VERDICT #3).
-    * Subclasses IllegalArgumentException so callers that treated every
-    * IAE as "not fusable, fall back" keep compiling; only the front
-    * doors narrowed their catch.
+  /** [[queryMulti]]'s signal that [[fusedSet]] rejected the panel set.
+    * It is not a user error: such a set belongs in [[queryMultiTagged]]
+    * (the segment doors ask [[fusedSet]] and route there without it). A
+    * set that passes the gate and then fails for a genuine reason (bad
+    * matcher regex, malformed parameter) raises a plain
+    * IllegalArgumentException. Subclasses IllegalArgumentException so
+    * callers that treat every IAE as "not fusable" keep compiling.
     */
   final class NotFusableException(msg: String)
     extends IllegalArgumentException(msg)
-
-  private def notFusable(msg: String): Nothing =
-    throw new NotFusableException(msg)
 
   /** salt width of the two-phase topk/bottomk partial rank */
   val TopKSaltParts = 32
@@ -84,182 +76,127 @@ object Engine {
         sf.df.select((col("ts") +: sf.labels.map(col) :+ col("value")): _*)
       case Left(d) =>
         // scalar-only expression: constant over the bucket grid
-        val spark = store.df.sparkSession
-        val start = alignedStart(p)
-        spark.range(start, p.endMs, p.stepMs).toDF("ts")
-          .withColumn("value", lit(d))
+        grid(store, p).withColumn("value", lit(d))
     }
   }
 
-  /** Several simple aggregations over ONE shared step-agg scan — the
-    * multi-agg path a dashboard panel issuing `sum/avg/min/max/count`
-    * of the same selector should hit instead of five full engine
-    * passes + four ts-joins (each pass re-scans the store and adds an
-    * Exchange; the fused form is one scan, one Exchange, one output
-    * row per populated bucket). Each entry is (output column, promql);
-    * every expression must be a parameter-less aggregation over the
-    * SAME selector with the SAME by/without grouping — anything else
-    * belongs in [[query]]. Two sibling shapes dispatch below: all-range-
-    * window panels ([[queryMultiWindow]]) and agg-of-range-window panels
-    * ([[queryMultiAggWindow]]). Count keeps [[query]]'s double type; the
-    * zero-fill densification of the standalone count path is
-    * deliberately absent because the fused row set is the populated
-    * buckets (exactly what the joined five-query form produced).
+  /** Several panels over ONE shared scan, step aggregation and (for
+    * range functions) window pass — the dashboard shape where panels ask
+    * `sum/avg/min/max/count` and/or a range function of the SAME selector
+    * with the SAME grouping, instead of one full engine pass (scan,
+    * exchange, window sort) per panel. The reference answers it with one
+    * step-aggregation leaf feeding several API aggregation nodes
+    * (promql/sql_builder.go:529, promql/agg_node.go:30). Each entry is
+    * (output column, promql); [[fusedSet]] decides whether the set fuses
+    * and [[fused]] builds it, else this throws [[NotFusableException]].
+    * Every alias equals its standalone [[query]] bit for bit (PromQLSpec
+    * pins it); count keeps [[query]]'s double type, but the standalone
+    * count path's zero-fill densification is deliberately absent: the
+    * fused row set is the populated buckets.
     */
   def queryMulti(exprs: Seq[(String, String)], store: MetricStore,
       p: QueryParams): DataFrame = {
     require(exprs.nonEmpty, "queryMulti needs at least one expression")
-    val parsedAll = exprs.map { case (alias, q) =>
+    val parsed = exprs.map { case (alias, q) =>
       alias -> Parser.parse(q).fold(e => throw new IllegalArgumentException(e), identity)
     }
-    if (parsedAll.forall(_._2.isInstanceOf[RangeFn]))
-      return queryMultiWindow(parsedAll, store, p)
-    if (parsedAll.forall {
-        case (_, Agg(_, _: RangeFn, _, _, None)) => true
-        case _ => false
-      })
-      return queryMultiAggWindow(parsedAll, store, p)
-    val parsed = parsedAll.map {
-      case (alias, Agg(op, s: Selector, by, without, None))
-          if Set("sum", "avg", "min", "max", "count")(op) =>
-        (alias, op, s, by, without)
-      case (_, other) => notFusable(
-        s"queryMulti supports sum/avg/min/max/count over a selector, " +
-          s"or all-range-window expressions, got $other")
-    }
-    val (_, _, sel0, by0, wo0) = parsed.head
-    if (!parsed.forall { case (_, _, s, b, w) => s == sel0 && b == by0 && w == wo0 })
-      notFusable("queryMulti requires an identical selector and grouping across aggregations")
-    val sf = leaf(sel0, "", store, p)
-    val keep: Seq[String] =
-      if (by0.nonEmpty) sf.labels.filter(by0.contains)
-      else if (wo0.nonEmpty) sf.labels.filterNot(wo0.contains)
-      else Nil
-    val aggs = parsed.map { case (alias, op, _, _, _) =>
-      val fn = op match {
-        case "sum"   => sum(col("value"))
-        case "avg"   => avg(col("value"))
-        case "min"   => min(col("value"))
-        case "max"   => max(col("value"))
-        case "count" => count(col("value")).cast("double")
-      }
-      fn.as(alias)
-    }
-    sf.df.groupBy((col("ts") +: keep.map(col)): _*).agg(aggs.head, aggs.tail: _*)
+    fusedSet(parsed).fold(m => throw new NotFusableException(m), fused(_, store, p))
   }
 
-  /** the simple range-window functions [[queryMulti]] can fuse — every
-    * one is pure Column algebra over the shared bucketed frame and the
-    * shared range window (irate is excluded: its flag-gated exact mode
-    * forks semantics at plan time and belongs in [[query]])
+  /** the aggregations a fused panel may apply — plain Column aggregates
+    * over the panel's value column ([[simpleAgg]])
+    */
+  val SimpleAggs: Set[String] = Set("sum", "avg", "min", "max", "count")
+
+  /** the range functions a fused panel may apply — each is pure Column
+    * algebra over the shared bucketed frame and range frame
+    * ([[simpleRangeValue]]); irate is excluded because its flag-gated
+    * exact mode forks semantics at plan time
     */
   val MultiWindowFns: Set[String] = Set(
     "rate", "increase", "delta", "sum_over_time", "count_over_time",
     "avg_over_time", "min_over_time", "max_over_time",
     "first_over_time", "last_over_time")
 
-  /** The range-window half of [[queryMulti]] (r13 VERDICT #3): a
-    * dashboard's `rate/increase/avg_over_time` panels over the SAME
-    * selector and range fuse onto ONE leaf scan + ONE step aggregation +
-    * ONE window pass — each expression is just one more window column
-    * over the shared range frame (PlanSpec pins one FileScan, one
-    * Window). Previously each panel re-ran the full engine: N scans, N
-    * shuffles, N window sorts for identical inputs. Output: `ts`, the
-    * store's label columns, one value column per alias; buckets without
-    * full range coverage evaluate to NaN exactly like [[query]].
+  /** one fused panel: `agg(fn(sel[r]))`, `agg(sel)` or `fn(sel[r])` */
+  final case class FusedPanel(alias: String, agg: Option[String],
+      fn: Option[String])
+
+  /** a panel set [[fused]] can build: one selector, one grouping, and
+    * panels that all aggregate or all do not, all window or all do not
     */
-  private def queryMultiWindow(parsedAll: Seq[(String, Expr)],
-      store: MetricStore, p: QueryParams): DataFrame = {
-    val parsed = parsedAll.map {
-      case (alias, RangeFn(fn, s: Selector)) if MultiWindowFns(fn) =>
-        (alias, fn, s)
-      case (_, other) => notFusable(
-        s"queryMulti window fusion supports ${MultiWindowFns.mkString("/")} " +
-          s"over a range selector, got $other")
-    }
-    val sel0 = parsed.head._3
-    if (!parsed.forall(_._3 == sel0))
-      notFusable("queryMulti requires an identical selector (incl. range/offset) across expressions")
-    if (sel0.rangeMs <= 0) notFusable("queryMulti window fusion needs a range selector")
-    if (sel0.atKind != 0) notFusable("@-pinned selectors are not fusable")
-    val (bucketed, labels, step) = leafBucketed(sel0, store, p, seriesShuffle = true)
-    val range = sel0.rangeMs
-    val w = Window.partitionBy(labels.map(col): _*).orderBy(col("ts"))
-    val rw = w.rangeBetween(math.min(0L, -(range - step)), 0)
-    val firstTs = min(col("ts")).over(rw)
-    val covered = firstTs <= col("ts") - lit(range) + lit(step)
-    val vals = parsed.map { case (alias, fn, _) =>
-      when(covered, simpleRangeValue(fn, rw, range))
-        .otherwise(lit(Double.NaN)).as(alias)
-    }
-    bucketed
-      .select((col("ts") +: labels.map(col)) ++ vals: _*)
-      .filter(col("ts") >= alignedStart(p) && col("ts") < p.endMs)
+  final case class FusedSet(sel: Selector, by: List[String],
+      without: List[String], panels: Seq[FusedPanel]) {
+    def windowed: Boolean = panels.head.fn.nonEmpty
+    def aggregated: Boolean = panels.head.agg.nonEmpty
   }
 
-  /** The dominant dashboard shape, fused (r14 VERDICT #1): N panels of
-    * `agg by (labels) (range_fn(selector[r]))` — e.g. `sum by (svc)
-    * (rate(x[5m]))` next to `max by (svc) (increase(x[5m]))` — over the
-    * SAME selector and the SAME by/without grouping ride ONE leaf scan +
-    * ONE step aggregation + ONE window pass + ONE grouped aggregation,
-    * instead of a full engine pass per panel (ref analog: one
-    * buildStepAggNoWindow leaf feeding several API agg nodes,
-    * promql/sql_builder.go:529, promql/agg_node.go:30). Each panel may
-    * pick its own (agg op, range fn); the windowed value columns share
-    * the range frame verbatim with [[query]]'s leaf (`simpleRangeValue`),
-    * and the per-alias aggregate functions are the same Column aggs
-    * [[aggNode]] applies — so fused == standalone bitwise per alias
-    * (PromQLSpec pins it). NaN propagates exactly like the standalone
-    * form: an uncovered bucket's NaN poisons its group's sum/avg, and
-    * sorts greatest under min/max — identical in both paths. As in the
-    * bare-agg fusion above, the standalone count path's zero-fill
-    * densification is deliberately absent: the fused row set is the
-    * populated buckets.
+  /** The fusability gate — a pure function of the parsed panels. Accepts
+    * exactly three shapes over one shared (selector, by, without):
+    * [[SimpleAggs]] of a selector (any selector, @-pins included);
+    * [[MultiWindowFns]] of an unpinned range selector; and [[SimpleAggs]]
+    * of such a range function. Left carries why the set does not fuse.
     */
-  private def queryMultiAggWindow(parsedAll: Seq[(String, Expr)],
-      store: MetricStore, p: QueryParams): DataFrame = {
-    val parsed = parsedAll.map {
-      case (alias, Agg(op, RangeFn(fn, s: Selector), by, without, None))
-          if Set("sum", "avg", "min", "max", "count")(op) && MultiWindowFns(fn) =>
-        (alias, op, fn, s, by, without)
-      case (_, other) => notFusable(
-        s"queryMulti agg-window fusion supports sum/avg/min/max/count by/without " +
-          s"over ${MultiWindowFns.mkString("/")} of a range selector, got $other")
+  def fusedSet(parsed: Seq[(String, Expr)]): Either[String, FusedSet] = {
+    val (rejected, ps) = parsed.partitionMap {
+      case (a, Agg(op, RangeFn(fn, s: Selector), by, wo, None))
+          if SimpleAggs(op) && MultiWindowFns(fn) =>
+        Right((s, by, wo) -> FusedPanel(a, Some(op), Some(fn)))
+      case (a, Agg(op, s: Selector, by, wo, None)) if SimpleAggs(op) =>
+        Right((s, by, wo) -> FusedPanel(a, Some(op), None))
+      case (a, RangeFn(fn, s: Selector)) if MultiWindowFns(fn) =>
+        Right((s, Nil, Nil) -> FusedPanel(a, None, Some(fn)))
+      case (_, other) => Left(s"fused panels are ${SimpleAggs.mkString("/")} " +
+        s"of a selector or of ${MultiWindowFns.mkString("/")} over a range " +
+        s"selector, or such a range function alone; got $other")
     }
-    val (_, _, _, sel0, by0, wo0) = parsed.head
-    if (!parsed.forall { case (_, _, _, s, b, w) => s == sel0 && b == by0 && w == wo0 })
-      notFusable("queryMulti requires an identical selector and grouping across panels")
-    if (sel0.rangeMs <= 0) notFusable("queryMulti agg-window fusion needs a range selector")
-    if (sel0.atKind != 0) notFusable("@-pinned selectors are not fusable")
-    val (bucketed, labels, step) = leafBucketed(sel0, store, p, seriesShuffle = true)
-    val range = sel0.rangeMs
-    val w = Window.partitionBy(labels.map(col): _*).orderBy(col("ts"))
-    val rw = w.rangeBetween(math.min(0L, -(range - step)), 0)
-    val firstTs = min(col("ts")).over(rw)
-    val covered = firstTs <= col("ts") - lit(range) + lit(step)
-    val winCols = parsed.map { case (alias, _, fn, _, _, _) =>
-      when(covered, simpleRangeValue(fn, rw, range))
-        .otherwise(lit(Double.NaN)).as(s"__w_$alias")
-    }
-    val windowed = bucketed
-      .select((col("ts") +: labels.map(col)) ++ winCols: _*)
-      .filter(col("ts") >= alignedStart(p) && col("ts") < p.endMs)
-    val keep: Seq[String] =
-      if (by0.nonEmpty) labels.filter(by0.contains)
-      else if (wo0.nonEmpty) labels.filterNot(wo0.contains)
-      else Nil
-    val aggs = parsed.map { case (alias, op, _, _, _, _) =>
-      val v = col(s"__w_$alias")
-      val fn = op match {
-        case "sum"   => sum(v)
-        case "avg"   => avg(v)
-        case "min"   => min(v)
-        case "max"   => max(v)
-        case "count" => count(v).cast("double")
+    if (rejected.nonEmpty || ps.isEmpty)
+      return Left(rejected.headOption.getOrElse("no panels"))
+    val (sel, by, without) = ps.head._1
+    val fs = FusedSet(sel, by, without, ps.map(_._2))
+    if (ps.map(_._1).distinct.size > 1)
+      Left("fused panels need an identical selector (incl. range/offset) and grouping")
+    else if (fs.panels.map(x => (x.agg.isEmpty, x.fn.isEmpty)).distinct.size > 1)
+      Left("fused panels cannot mix aggregated with bare or windowed with instant panels")
+    else if (fs.windowed && sel.rangeMs <= 0) Left("window fusion needs a range selector")
+    else if (fs.windowed && sel.atKind != 0) Left("@-pinned window selectors are not fusable")
+    else Right(fs)
+  }
+
+  /** The one fused builder: ONE leaf scan and step aggregation, then —
+    * for range functions — ONE range frame with one window column per
+    * alias ([[rangeFrame]] and [[simpleRangeValue]], as in [[leaf]], so
+    * uncovered buckets are NaN exactly as in [[query]]), then — for
+    * aggregating panels — ONE `groupBy(ts, kept labels)` with one
+    * aggregate per alias ([[simpleAgg]], as in [[aggNode]]). PlanSpec
+    * pins one FileScan and at most one Window per fused set. Output:
+    * `ts`, the kept (aggregated) or all (bare) label columns, one value
+    * column per alias.
+    */
+  private[graft] def fused(fs: FusedSet, store: MetricStore,
+      p: QueryParams): DataFrame = {
+    // each panel's input column to its aggregate, or its output column
+    def valueCol(x: FusedPanel): String =
+      if (!fs.windowed) "value" else if (fs.aggregated) s"__w_${x.alias}" else x.alias
+    val (rows, labels) =
+      if (!fs.windowed) {
+        val sf = leaf(fs.sel, "", store, p)
+        (sf.df, sf.labels)
+      } else {
+        val (bucketed, labels, step) = leafBucketed(fs.sel, store, p, seriesShuffle = true)
+        val (rw, covered) = rangeFrame(labels, fs.sel.rangeMs, step)
+        val vals = fs.panels.map(x =>
+          when(covered, simpleRangeValue(x.fn.get, rw, fs.sel.rangeMs))
+            .otherwise(lit(Double.NaN)).as(valueCol(x)))
+        (bucketed.select((col("ts") +: labels.map(col)) ++ vals: _*)
+          .filter(col("ts") >= alignedStart(p) && col("ts") < p.endMs), labels)
       }
-      fn.as(alias)
+    if (!fs.aggregated) rows
+    else {
+      val aggs = fs.panels.map(x => simpleAgg(x.agg.get, col(valueCol(x))).as(x.alias))
+      rows.groupBy((col("ts") +: keepLabels(labels, fs.by, fs.without).map(col)): _*)
+        .agg(aggs.head, aggs.tail: _*)
     }
-    windowed.groupBy((col("ts") +: keep.map(col)): _*).agg(aggs.head, aggs.tail: _*)
   }
 
   /** Heterogeneous dashboard fusion — the GENERAL multi-expression door
@@ -280,18 +217,17 @@ object Engine {
     * panel's label set as sorted-key JSON (null label values are omitted
     * from the JSON, like the reference's tag maps — consumers that must
     * distinguish all-null series should group on a non-null label set) —
-    * because heterogeneous groupings share no column schema. Safety
-    * bail-outs: an @-pinned or
-    * negative-offset selector disables the time prefilter (its pin reads
-    * outside the window); an empty metric name (bare matcher set)
-    * disables the metric prefilter. Both only widen the shared scan.
+    * because heterogeneous groupings share no column schema
+    * ([[taggedUnion]]). The shared pass is bounded per selector by
+    * [[multiPrefilter]].
     */
   def queryMultiTagged(exprs: Seq[(String, String)], store: MetricStore,
       p: QueryParams): DataFrame = {
     require(exprs.nonEmpty, "queryMultiTagged needs at least one expression")
     val parsed = exprs.map(x =>
       Parser.parse(x._2).fold(e => throw new IllegalArgumentException(e), identity))
-    taggedOver(exprs, sharedPass(parsed, store, p), p)
+    val shared = sharedPass(parsed, store, p)
+    taggedUnion(exprs)(query(_, shared, p))
   }
 
   /** The ONE shared pass of the multi-panel doors: `store`'s rows bounded
@@ -376,32 +312,48 @@ object Engine {
     }
   }
 
-  /** the tagged-union inner loop of [[queryMultiTagged]] over a
-    * caller-prepared store — the sliced metric doors call this per slice
-    * against ONE [[sharedPass]], so the prefilter + materialization runs
-    * once per request, not once per slice
+  /** The tagged union of a panel set, for any signal's evaluator
+    * `evalQuery` (a `ts`, labels…, `value` frame per query): each DISTINCT
+    * query evaluates once and its alias list explodes over its rows, so a
+    * dashboard repeating a query under two panels pays a row copy, not a
+    * second engine pass. Rows are (alias, ts, series, value), `series`
+    * the label set as sorted-key JSON; output order follows each distinct
+    * query's first appearance.
     */
-  private[graft] def taggedOver(exprs: Seq[(String, String)],
-      store: MetricStore, p: QueryParams): DataFrame = {
-    // a real dashboard repeats queries under different panels (same
-    // promql, different viz): evaluate each DISTINCT query once and
-    // explode the alias list over its rows — duplicate panels cost a
-    // row-copy, not a second engine pass. Output order follows the
-    // first appearance of each distinct query; the tagged union is a
-    // set keyed by (alias, ts, series) either way.
-    val byQuery = exprs.groupBy(_._2)
+  private[graft] def taggedUnion(exprs: Seq[(String, String)])(
+      evalQuery: String => DataFrame): DataFrame =
     exprs.map(_._2).distinct.map { q =>
-      val aliases = byQuery(q).map(_._1)
-      val out = query(q, store, p)
+      val out = evalQuery(q)
       val labels = out.columns.filterNot(c => c == "ts" || c == "value").sorted
       out.select(
-        explode(lit(aliases.toArray)).as("alias"), col("ts"),
-        to_json(struct(labels.map(col): _*)).as("series"), col("value"))
+        explode(lit(exprs.filter(_._2 == q).map(_._1).toArray)).as("alias"),
+        col("ts"), to_json(struct(labels.map(col): _*)).as("series"), col("value"))
     }.reduce(_.union(_))
-  }
 
   private def alignedStart(p: QueryParams): Long =
     p.startMs - p.startMs % p.stepMs
+
+  /** the aligned output step grid [alignedStart, end) as one Long column */
+  private def grid(store: MetricStore, p: QueryParams, name: String = "ts"): DataFrame =
+    store.df.sparkSession.range(alignedStart(p), p.endMs, p.stepMs).toDF(name)
+
+  /** the store rows a selector reads in [lo, hi): time, metric, matchers */
+  private def selectorRows(sel: Selector, store: MetricStore, lo: Long,
+      hi: Long): DataFrame = {
+    val inWindow = store.df.filter(col("chq_timestamp") >= lo && col("chq_timestamp") < hi)
+    val named =
+      if (sel.metric.isEmpty) inWindow
+      else inWindow.filter(col("metric_name") === sel.metric)
+    sel.matchers.foldLeft(named)((d, m) => d.filter(matcherCond(d, m)))
+  }
+
+  /** a sample's epoch-aligned step bucket, shifted by the selector offset
+    * so the bucket ts is query time
+    */
+  private def stepBucket(off: Long, step: Long): Column = {
+    val t = col("chq_timestamp") + lit(off)
+    t - t % lit(step)
+  }
 
   /** Left = scalar literal, Right = vector. */
   private type V = Either[Double, SeriesFrame]
@@ -494,10 +446,7 @@ object Engine {
 
     case CountValues(lbl, arg, by, without) =>
       val sf = vector(eval(arg, store, p))
-      val keep: Seq[String] =
-        if (by.nonEmpty) sf.labels.filter(by.contains)
-        else if (without.nonEmpty) sf.labels.filterNot(without.contains)
-        else Nil
+      val keep = keepLabels(sf.labels, by, without)
       // integral values format as "42" (Prometheus-style), everything else
       // via Double.toString — the overflow-safe integrality probe is the
       // round-trip cast equality
@@ -541,24 +490,18 @@ object Engine {
 
     case Absent(arg) =>
       val sf = vector(eval(arg, store, p))
-      val spark = store.df.sparkSession
-      val grid = spark.range(alignedStart(p), p.endMs, p.stepMs).toDF("ts")
       // 1 exactly where the vector has NO samples for the bucket; when the
       // argument is a plain selector, Prometheus carries its UNAMBIGUOUS
       // equality-matcher labels onto the output series (createLabelsForAbsentFunction)
       val present = sf.df.select(col("ts")).distinct()
       val lbls = absentLabels(arg)
-      val out0 = grid.join(present, Seq("ts"), "left_anti")
+      val out0 = grid(store, p).join(present, Seq("ts"), "left_anti")
         .withColumn("value", lit(1.0))
       val out = lbls.foldLeft(out0) { case (d, (k, v)) => d.withColumn(k, lit(v)) }
       Right(SeriesFrame(out, lbls.map(_._1)))
 
     case TimeFn =>
-      val spark = store.df.sparkSession
-      Right(SeriesFrame(
-        spark.range(alignedStart(p), p.endMs, p.stepMs).toDF("ts")
-          .withColumn("value", col("ts") / lit(1000.0)),
-        Nil))
+      Right(SeriesFrame(grid(store, p).withColumn("value", col("ts") / lit(1000.0)), Nil))
 
     case TimestampFn(arg) =>
       val sf = vector(eval(arg, store, p))
@@ -627,16 +570,9 @@ object Engine {
       val step = p.stepMs
       val range = sel.rangeMs
       val off = sel.offsetMs
-      var df = store.df
-        .filter(col("chq_timestamp") >= alignedStart(p) - range - off &&
-          col("chq_timestamp") < p.endMs - off)
-      if (sel.metric.nonEmpty) df = df.filter(col("metric_name") === sel.metric)
-      sel.matchers.foreach { m => df = df.filter(matcherCond(df, m)) }
-      val b = ((col("chq_timestamp") + lit(off)) - (col("chq_timestamp") + lit(off)) % lit(step))
-      val present = df.select(b.as("b")).distinct()
-      val spark = store.df.sparkSession
-      val grid = spark.range(alignedStart(p), p.endMs, p.stepMs).toDF("ts")
-      val out0 = grid.join(broadcast(present),
+      val present = selectorRows(sel, store, alignedStart(p) - range - off, p.endMs - off)
+        .select(stepBucket(off, step).as("b")).distinct()
+      val out0 = grid(store, p).join(broadcast(present),
           col("b") >= col("ts") - lit(range - step) && col("b") <= col("ts"),
           "left_anti")
         .withColumn("value", lit(1.0))
@@ -841,19 +777,17 @@ object Engine {
     }
     val teA = te - te % p.stepMs
     val pinned = evalAt(QueryParams(teA, teA + p.stepMs, p.stepMs))
-    val spark = store.df.sparkSession
-    val grid = spark.range(alignedStart(p), p.endMs, p.stepMs).toDF("__gts")
     SeriesFrame(
-      grid.crossJoin(broadcast(pinned.df.drop("ts")))
+      grid(store, p, "__gts").crossJoin(broadcast(pinned.df.drop("ts")))
         .withColumnRenamed("__gts", "ts"),
       pinned.labels)
   }
 
   /** The shared scan → matcher-filter → epoch-aligned step bucket →
-    * partial-agg spine every leaf evaluates — extracted so the fused
-    * multi-expression paths ([[queryMulti]]) reuse ONE of these per
-    * request instead of one per expression. Returns (bucketed frame with
-    * bsum/bcnt/bmin/bmax, label columns, step).
+    * partial-agg spine every leaf evaluates; a fused panel set
+    * ([[fused]]) builds ONE of these for all its range-function panels.
+    * Returns (bucketed frame with bsum/bcnt/bmin/bmax, label columns,
+    * step).
     *
     * `seriesShuffle` (guide §2.4 — operations keyed the same way share
     * one exchange): when a label-keyed Window follows the leaf (range
@@ -878,21 +812,12 @@ object Engine {
     // scan window extended left so the first emitted bucket has full range
     // coverage (reference effStart = start - range - offset,
     // queryapi/README.md:4-10)
-    val effStart = p.startMs - range - off
-    val effEnd = p.endMs - off
-
-    var df = store.df
-      .filter(col("chq_timestamp") >= effStart && col("chq_timestamp") < effEnd)
-    if (sel.metric.nonEmpty) df = df.filter(col("metric_name") === sel.metric)
-    sel.matchers.foreach { m => df = df.filter(matcherCond(df, m)) }
-
-    // epoch-aligned step bucket, shifted by offset so output ts is query-time
-    val bucket = ((col("chq_timestamp") + lit(off)) - (col("chq_timestamp") + lit(off)) % lit(step))
+    var df = selectorRows(sel, store, p.startMs - range - off, p.endMs - off)
     val labels = store.labelCols
     if (seriesShuffle && labels.nonEmpty)
       df = df.repartition(labels.map(col): _*)
     val bucketed = df
-      .withColumn("ts", bucket)
+      .withColumn("ts", stepBucket(off, step))
       .groupBy((col("ts") +: labels.map(col)): _*)
       .agg(
         sum(col("chq_rollup_sum")).as("bsum"),
@@ -904,11 +829,11 @@ object Engine {
 
   /** the simple range-window family's value expression over the bucketed
     * frame — pure Column algebra on bsum/bcnt/bmin/bmax within the range
-    * frame `rw`, shared verbatim by [[leaf]] and the fused
-    * [[queryMulti]] windowed path so both compile the identical plan
+    * frame `rw`; [[leaf]] and [[fused]] both call it, so a fused alias
+    * compiles the same expression as its standalone query
     */
   private def simpleRangeValue(fn: String,
-      rw: org.apache.spark.sql.expressions.WindowSpec, range: Long): Column =
+      rw: WindowSpec, range: Long): Column =
     fn match {
       case "rate" | "irate" => sum(col("bsum")).over(rw) / lit(range / 1000.0)
       case "increase" | "sum_over_time" => sum(col("bsum")).over(rw)
@@ -929,6 +854,18 @@ object Engine {
         val bavg = col("bsum") / when(col("bcnt") === 0, lit(1.0)).otherwise(col("bcnt"))
         last(bavg).over(rw) - first(bavg).over(rw)
     }
+
+  /** The range frame over a series' step buckets, `(ts − range, ts]`,
+    * and the reference's left-inclusive coverage gate: a bucket is
+    * covered when the frame's leftmost step bucket is present
+    * (covered = ts − first + step ≥ range, leaf_node.go:90-97).
+    */
+  private def rangeFrame(labels: Seq[String], range: Long,
+      step: Long): (WindowSpec, Column) = {
+    val rw = Window.partitionBy(labels.map(col): _*).orderBy(col("ts"))
+      .rangeBetween(math.min(0L, -(range - step)), 0)
+    (rw, min(col("ts")).over(rw) <= col("ts") - lit(range) + lit(step))
+  }
 
   private def leaf(sel: Selector, fn: String, store: MetricStore, p: QueryParams,
       predictT: Double = 0.0, hwSf: Double = 0.0, hwTf: Double = 0.0): SeriesFrame = {
@@ -962,10 +899,7 @@ object Engine {
         bucketed.withColumn("value",
           when(prevInWindow, col("bsum") / gapSec).otherwise(lit(Double.NaN)))
       } else if (range > 0 && gaugeFns.contains(fn)) {
-        val lower = math.min(0L, -(range - step))
-        val rw = w.rangeBetween(lower, 0)
-        val firstTs = min(col("ts")).over(rw)
-        val covered = firstTs <= col("ts") - lit(range) + lit(step)
+        val (rw, covered) = rangeFrame(labels, range, step)
         val bavg = col("bsum") / when(col("bcnt") === 0, lit(1.0)).otherwise(col("bcnt"))
         fn match {
           case "present_over_time" =>
@@ -1138,15 +1072,9 @@ object Engine {
       } else if (fn.nonEmpty && gaugeFns.contains(fn)) {
         throw new IllegalArgumentException(s"$fn requires a range selector, e.g. $fn(m[5m])")
       } else if (range > 0 && Ast.rangeFns.contains(fn)) {
-        val lower = math.min(0L, -(range - step))
-        val rw = w.rangeBetween(lower, 0)
-        // coverage: leftmost step bucket of the window must be present
-        // (covered = ts - first + step >= range, leaf_node.go:90-97)
-        val firstTs = min(col("ts")).over(rw)
-        val covered = firstTs <= col("ts") - lit(range) + lit(step)
-        val value = simpleRangeValue(fn, rw, range)
+        val (rw, covered) = rangeFrame(labels, range, step)
         bucketed.withColumn("value",
-          when(covered, value).otherwise(lit(Double.NaN)))
+          when(covered, simpleRangeValue(fn, rw, range)).otherwise(lit(Double.NaN)))
       } else if (fn.nonEmpty && Ast.rangeFns.contains(fn)) {
         // instant math: denominator = effective span inferred from the gap
         // to the previous bucket (leaf_node.go evalRangeAwareScalar rangeMs<=0)
@@ -1202,9 +1130,7 @@ object Engine {
     val pts = sf.df
       .filter(!isnan(col("value")))
       .withColumn("ts", col("ts") + lit(off))
-    val spark = store.df.sparkSession
-    val grid = spark.range(alignedStart(p), p.endMs, p.stepMs).toDF("__gts")
-    val joined = pts.join(broadcast(grid),
+    val joined = pts.join(broadcast(grid(store, p, "__gts")),
       col("ts") >= col("__gts") - lit(range - istep) && col("ts") <= col("__gts"),
       "inner")
     val v = col("value")
@@ -1251,15 +1177,7 @@ object Engine {
     val step = if (sel.subStepMs > 0) sel.subStepMs else p.stepMs
     val range = sel.rangeMs
     val off = sel.offsetMs
-    val effStart = p.startMs - range - off
-    val effEnd = p.endMs - off
-
-    var df = store.df
-      .filter(col("chq_timestamp") >= effStart && col("chq_timestamp") < effEnd)
-    if (sel.metric.nonEmpty) df = df.filter(col("metric_name") === sel.metric)
-    sel.matchers.foreach { m => df = df.filter(matcherCond(df, m)) }
-
-    val bucket = ((col("chq_timestamp") + lit(off)) - (col("chq_timestamp") + lit(off)) % lit(step))
+    var df = selectorRows(sel, store, p.startMs - range - off, p.endMs - off)
     val labels = store.labelCols
     // same series-shuffle placement as leafBucketed: when the range
     // window follows, one labels-keyed exchange over the rolled sketch
@@ -1267,15 +1185,13 @@ object Engine {
     if (range > 0 && labels.nonEmpty)
       df = df.repartition(labels.map(col): _*)
     val bucketed = df
-      .withColumn("ts", bucket)
+      .withColumn("ts", stepBucket(off, step))
       .groupBy((col("ts") +: labels.map(col)): _*)
       .agg(gf.ddsketch_merge_agg(col("chq_sketch")).as("__sk"))
 
     val out =
       if (range > 0) {
-        val w = Window.partitionBy(labels.map(col): _*).orderBy(col("ts"))
-          .rangeBetween(math.min(0L, -(range - step)), 0)
-        val covered = min(col("ts")).over(w) <= col("ts") - lit(range) + lit(step)
+        val (w, covered) = rangeFrame(labels, range, step)
         bucketed
           .withColumn("__wsk", gf.ddsketch_merge_agg(col("__sk")).over(w))
           .withColumn("value",
@@ -1306,14 +1222,31 @@ object Engine {
 
   // ---- aggregation --------------------------------------------------------
 
+  /** the labels an aggregation keeps: the `by` list, or all but the
+    * `without` list, or none
+    */
+  private def keepLabels(labels: Seq[String], by: List[String],
+      without: List[String]): Seq[String] =
+    if (by.nonEmpty) labels.filter(by.contains)
+    else if (without.nonEmpty) labels.filterNot(without.contains)
+    else Nil
+
+  /** the plain Column aggregate of `v` for a [[SimpleAggs]] op */
+  private def simpleAgg(op: String, v: Column): Column = op match {
+    case "sum"   => sum(v)
+    case "avg"   => avg(v)
+    case "min"   => min(v)
+    case "max"   => max(v)
+    case "count" => count(v).cast("double")
+  }
+
   private def aggNode(sf: SeriesFrame, op: String,
       by: List[String], without: List[String], param: Option[Double]): SeriesFrame = {
     val keep: Seq[String] =
-      if (by.nonEmpty) sf.labels.filter(by.contains)
-      else if (without.nonEmpty) sf.labels.filterNot(without.contains)
-      else if (op == "topk" || op == "bottomk" || op == "approx_topk")
+      if (by.isEmpty && without.isEmpty &&
+          (op == "topk" || op == "bottomk" || op == "approx_topk"))
         sf.labels // rank keeps series
-      else Nil
+      else keepLabels(sf.labels, by, without)
 
     op match {
       // Loki 3.1's approx_topk name accepted: its CMS+heap approximation
@@ -1347,10 +1280,7 @@ object Engine {
         // hash-based DETERMINISTIC selection so the sample replays across
         // engines and steps — the hash ignores ts, so the same series
         // survive on every bucket where they are present.
-        val groupKeys: Seq[String] =
-          if (by.nonEmpty) sf.labels.filter(by.contains)
-          else if (without.nonEmpty) sf.labels.filterNot(without.contains)
-          else Nil
+        val groupKeys = keepLabels(sf.labels, by, without)
         val key = concat_ws("\u0000", sf.labels.map(l => coalesce(col(l), lit(""))): _*)
         if (op == "limitk") {
           // k series with smallest md5(series-key) per group; two-phase
@@ -1401,14 +1331,8 @@ object Engine {
           .agg(count(lit(1)).as("__n"))
         SeriesFrame(g.withColumn("value", lit(1.0)).drop("__n"), keep)
       case _ =>
-        val fn: Column = op match {
-          case "sum"   => sum(col("value"))
-          case "avg"   => avg(col("value"))
-          case "min"   => min(col("value"))
-          case "max"   => max(col("value"))
-          case "count" => count(col("value")).cast("double")
-        }
-        val g = sf.df.groupBy((col("ts") +: keep.map(col)): _*).agg(fn.as("value"))
+        val g = sf.df.groupBy((col("ts") +: keep.map(col)): _*)
+          .agg(simpleAgg(op, col("value")).as("value"))
         SeriesFrame(g, keep)
     }
   }
@@ -1422,12 +1346,10 @@ object Engine {
     */
   private def densifyCount(sf: SeriesFrame, store: MetricStore,
       p: QueryParams): SeriesFrame = {
-    val spark = store.df.sparkSession
-    val grid0 = spark.range(alignedStart(p), p.endMs, p.stepMs).toDF("ts")
-    val grid =
-      if (sf.labels.isEmpty) grid0
-      else grid0.crossJoin(sf.df.select(sf.labels.map(col): _*).distinct())
-    val out = grid.join(sf.df, "ts" +: sf.labels, "left")
+    val groups =
+      if (sf.labels.isEmpty) grid(store, p)
+      else grid(store, p).crossJoin(sf.df.select(sf.labels.map(col): _*).distinct())
+    val out = groups.join(sf.df, "ts" +: sf.labels, "left")
       .withColumn("value", coalesce(col("value"), lit(0.0)))
     SeriesFrame(out, sf.labels)
   }

@@ -269,7 +269,7 @@ object PromQLQueries extends Catalog {
         // the dominant Grafana shape, fused (r14 VERDICT #1): N panels of
         // `agg by (labels) (range_fn(selector[r]))` over one selector ride
         // ONE scan + ONE step agg + ONE window pass + ONE grouped agg
-        // (Engine.queryMultiAggWindow; PlanSpec pins the plan) instead of
+        // (Engine.queryMulti's fused builder; PlanSpec pins the plan) instead of
         // a full engine pass per panel. Two-label store (event type ×
         // service, as pq_agg_multi_by) so the by-grouping genuinely
         // aggregates across series. Hash tricks follow the standalone

@@ -802,4 +802,20 @@ class HttpApiSpec extends AnyFunSuite {
         s"${ts.size} rows vs one-shot ${want.size}")
     } finally api.stop()
   }
+
+  test("a negative limit is a client error (400), not a failed query (500)") {
+    val api = new HttpApi(spark, logsDir = Some(segDir)).start()
+    try {
+      val base = s"http://127.0.0.1:${api.port}"
+      val q = enc("""{log_level="INFO"}""")
+      val (cq, bq) = get(base, s"/api/v1/logs/query?q=$q&s=$tsLo&e=$tsHi&limit=-1")
+      assert(cq == 400 && bq.contains("limit"), s"$cq ${bq.take(200)}")
+      val (cv, bv) = get(base,
+        s"/api/v1/logs/tagvalues?tag=log_level&s=$tsLo&e=$tsHi&limit=-1")
+      assert(cv == 400 && bv.contains("limit"), s"$cv ${bv.take(200)}")
+      // limit=0 stays a valid (empty) request
+      assert(get(base, s"/api/v1/logs/tagvalues?tag=log_level&s=$tsLo&e=$tsHi" +
+        "&limit=0")._1 == 200)
+    } finally api.stop()
+  }
 }

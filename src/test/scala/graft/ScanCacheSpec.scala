@@ -185,4 +185,60 @@ class ScanCacheSpec extends AnyFunSuite {
         "an orphaned entry must be replaced by a fresh listing")
     } finally spark.conf.unset(ScanCache.TtlKey)
   }
+
+  test("the index probe of an absent dir is a quiet, cached miss; once the " +
+      "dir is written and invalidated it is visible") {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val errors = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val capture = new AbstractAppender("scan-cache-capture", null, null,
+        true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLevel.isMoreSpecificThan(Level.ERROR))
+          errors.add(s"${e.getLoggerName}: ${e.getMessage.getFormattedMessage}")
+    }
+    capture.start()
+    val root = LogManager.getRootLogger.asInstanceOf[Logger]
+    // listener-bus events arrive asynchronously: a job submitted after the
+    // probe ends on the shared queue only after every earlier event
+    def drain(): Unit = {
+      val done = new java.util.concurrent.CountDownLatch(1)
+      val l = new org.apache.spark.scheduler.SparkListener {
+        override def onJobEnd(
+            j: org.apache.spark.scheduler.SparkListenerJobEnd): Unit = done.countDown()
+      }
+      spark.sparkContext.addSparkListener(l)
+      try {
+        spark.range(1).count()
+        assert(done.await(30, java.util.concurrent.TimeUnit.SECONDS))
+      } finally spark.sparkContext.removeSparkListener(l)
+    }
+    // Spark's observation listener (registered once a session has run an
+    // observed action, as dedup does) is what logs a failed read's trace
+    spark.range(1).observe(org.apache.spark.sql.Observation("scan_probe"),
+      count(lit(1)).as("n")).collect()
+    spark.conf.set(ScanCache.TtlKey, "600000")
+    root.addAppender(capture)
+    try {
+      val idx = java.nio.file.Files.createTempDirectory("graft_scan_probe_")
+        .toString + "/store.fpindex"
+      assert(ScanCache.tryRead(spark, idx).isEmpty)
+      drain()
+      assert(errors.isEmpty, s"an absent index logged errors: $errors")
+      val listed = ScanCache.listingCount
+      assert(ScanCache.tryRead(spark, idx).isEmpty)
+      assert(ScanCache.listingCount == listed, "the miss must be cached")
+      spark.range(3).write.parquet(idx)
+      assert(ScanCache.tryRead(spark, idx).isEmpty,
+        "a cached miss holds until invalidated or expired")
+      ScanCache.invalidate(idx)
+      assert(ScanCache.tryRead(spark, idx).map(_.count()).contains(3L))
+    } finally {
+      root.removeAppender(capture)
+      capture.stop()
+      spark.conf.unset(ScanCache.TtlKey)
+    }
+  }
 }
