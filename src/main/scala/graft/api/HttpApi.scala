@@ -167,8 +167,9 @@ final class HttpApi(
     * plan executes distributed; `toLocalIterator` relays one partition at
     * a time, so driver memory is bounded by a partition, not the result.
     */
-  private def sse(ex: HttpExchange)(dfArg: => DataFrame): Unit =
-    sseSlices(ex)(PanelSet.Plan(Seq(() => dfArg)))
+  private def sse(ex: HttpExchange, rowEvent: Option[String] = None)(
+      dfArg: => DataFrame): Unit =
+    sseSlices(ex, rowEvent)(PanelSet.Plan(Seq(() => dfArg)))
 
   /** SSE over a [[PanelSet.Plan]]'s ORDERED frames — for a sliced plan the
     * reference's bucket-by-bucket streaming UX
@@ -199,8 +200,14 @@ final class HttpApi(
     * the whole plan from `mk` (by-name) — a captured frame pins its
     * pre-swap snapshot. Once rows are out, a failure is a done-error
     * event and the client retries the request.
+    *
+    * Event shape: result rows go out in batches of `sseBatchRows` as
+    * `result` events; with `rowEvent` set, each row is its own event of
+    * that type instead (the reference's summary mode:
+    * `{"type":"summary","data":<series summary>}` per series).
     */
-  private def sseSlices(ex: HttpExchange)(mk: => PanelSet.Plan): Unit = {
+  private def sseSlices(ex: HttpExchange, rowEvent: Option[String] = None)(
+      mk: => PanelSet.Plan): Unit = {
     val (plan, dfs) = ScanCache.withSwapRetry(spark, Nil) {
       val pl = mk
       (pl, pl.frames.map(_.apply()))
@@ -233,7 +240,11 @@ final class HttpApi(
       var truncated = false
       val batch = new scala.collection.mutable.ArrayBuffer[String](sseBatchRows)
       def flushBatch(): Unit = if (batch.nonEmpty) {
-        event(s"""{"type":"result","data":{"rows":[${batch.mkString(",")}]}}""")
+        rowEvent match {
+          case Some(t) => batch.foreach(r => event(s"""{"type":"$t","data":$r}"""))
+          case None =>
+            event(s"""{"type":"result","data":{"rows":[${batch.mkString(",")}]}}""")
+        }
         batch.clear()
       }
       if (dfs.size == 1) {
@@ -360,31 +371,6 @@ final class HttpApi(
       }
       ex.close()
     }
-  }
-
-  /** SSE with ONE event per row (the reference's summary mode shape:
-    * `{"type":"summary","data":<series summary>}` per series, then done)
-    */
-  private def sseEach(ex: HttpExchange, eventType: String)(dfArg: => DataFrame): Unit = {
-    val df = dfArg // plan before headers: parse errors 400, like sse()
-    val h = ex.getResponseHeaders
-    h.set("Content-Type", "text/event-stream")
-    h.set("Cache-Control", "no-cache")
-    ex.sendResponseHeaders(200, 0L)
-    val out = ex.getResponseBody
-    def event(json: String): Unit = {
-      out.write(("data: " + json + "\n\n").getBytes(UTF_8))
-      out.flush()
-    }
-    try {
-      val it = df.toJSON.toLocalIterator()
-      while (it.hasNext)
-        event(s"""{"type":"$eventType","data":${it.next()}}""")
-      event("""{"type":"done","data":{"status":"ok"}}""")
-    } catch {
-      case e: Throwable =>
-        event(s"""{"type":"done","data":{"status":"error","error":"${esc(String.valueOf(e.getMessage))}"}}""")
-    } finally ex.close()
   }
 
   /** per-series aggregate stats over a (ts, value, labels…) result frame —
@@ -552,8 +538,8 @@ final class HttpApi(
         tagged = p.get("tagged").contains("true"),
         fresh = !p.get("fresh").contains("false"))
       if (!logStyle && ps.panels.size == 1 && p.get("summary").contains("true"))
-        sseEach(ex, "summary")(seriesSummary(MetricSegments.query(spark, dir,
-          ps.panels.head._2, s, e, ps.org, ps.fresh)))
+        sse(ex, Some("summary"))(seriesSummary(MetricSegments.query(spark,
+          dir, ps.panels.head._2, s, e, ps.org, ps.fresh)))
       else sseSlices(ex)(PanelSet.plan(spark, dir, ps))
     }
   }

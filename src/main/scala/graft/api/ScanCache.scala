@@ -5,8 +5,9 @@ import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** TTL-bounded cache of segment-directory scan DataFrames — the
-  * scan-listing twin of [[TierFreshness]]'s metadata cache.
+/** Cached segment-directory scan DataFrames — one [[DirCache]] instance,
+  * beside [[TierFreshness]]'s tier-metadata instances, under the same TTL
+  * ([[TtlKey]]), entry cap and invalidation hook ([[invalidate]]).
   *
   * Every `spark.read.parquet(dir)` constructs a fresh file index: a
   * recursive LIST of the whole store plus (under mergeSchema) a footer
@@ -21,33 +22,27 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * at construction, so reusing one across requests is exactly what
   * Spark's own catalog tables do with their shared InMemoryFileIndex —
   * this cache gives path-based reads the same property, bounded by a
-  * short TTL. Staleness contract (same shape as the freshness metadata
-  * cache): in-process writers invalidate their dir through
-  * [[TierFreshness.invalidateMeta]] (segment writers, compaction,
-  * retention expiry, index builds), so one JVM always reads its own
-  * writes; cross-process new segments become visible within the TTL —
-  * well inside the ingest-to-queryable cadence the reference's
-  * registration pipeline also has. A cached snapshot can also reference
-  * files a CONCURRENT compaction just deleted; the swap protocol keeps
-  * the window to the TTL and `spark.sql.files.ignoreMissingFiles` is the
-  * standard object-store mitigation (the reference has the same
-  * index-vs-store window between PG registration and S3 delete).
+  * short TTL. Staleness contract: in-process writers call [[invalidate]]
+  * (segment writers, compaction, retention expiry, index builds), so one
+  * JVM always reads its own writes; cross-process new segments become
+  * visible within the TTL — well inside the ingest-to-queryable cadence
+  * the reference's registration pipeline also has. A cached snapshot can
+  * also reference files a CONCURRENT compaction just deleted; the swap
+  * protocol keeps the window to the TTL and [[withSwapRetry]] re-plans
+  * a request that hits it (the reference has the same index-vs-store
+  * window between PG registration and S3 delete).
   *
   * Keyed per (session, dir, mergeSchema): a DataFrame belongs to the
   * session that built it, so entries never leak across sessions; TTL 0
-  * (`spark.graft.scan.listTtlMs`) disables caching entirely — every call
-  * lists afresh, the pre-r18 behavior, for tests that mutate stores
-  * behind the writer APIs' back.
+  * disables caching entirely — every call lists afresh.
   */
 object ScanCache {
 
-  /** session conf key: TTL in ms for cached directory listings.
-    * 0 disables (every read constructs a fresh file index).
+  /** session conf key: TTL in ms of every segment-directory metadata
+    * cache (listings here, tier metadata in [[TierFreshness]]); 0
+    * disables caching
     */
-  val TtlKey = "spark.graft.scan.listTtlMs"
-
-  private def ttlMs(spark: SparkSession): Long =
-    spark.conf.getOption(TtlKey).flatMap(_.toLongOption).getOrElse(30000L)
+  val TtlKey: String = DirCache.TtlKey
 
   /** `df` is None only for a cached MISS (path absent / unreadable) from
     * [[tryRead]] — the index-probe path, where "no index" is as cacheable
@@ -57,97 +52,79 @@ object ScanCache {
     * which the JVM can reuse after the original session is collected —
     * without the reference-identity check a later session sharing the
     * hash would be served a plan bound to a stopped session. Weak, so the
-    * cache never keeps a dead session (and its plans) alive.
+    * cache never keeps a dead session (and its plans) alive; an entry
+    * whose owner is gone is the first to go when the cache is full.
     */
-  private final class Entry(val expiresAtNanos: Long,
+  private final class Entry(
       val owner: java.lang.ref.WeakReference[SparkSession],
       val df: Option[DataFrame]) {
     lazy val files: Array[String] = df.map(_.inputFiles).getOrElse(Array.empty)
   }
 
-  private val cache =
-    new ConcurrentHashMap[(Int, String, Boolean), Entry]()
+  private val cache = new DirCache[(Int, String, Boolean), Entry](
+    _._2, _.owner.get != null)
   // fresh file-index constructions actually performed — the spec gate
   // counts these across repeated door queries to pin ≤ one LIST per
   // (dir, TTL window)
   private val listings = new AtomicLong(0L)
   def listingCount: Long = listings.get()
 
-  private def dirKey(dir: String): String = dir.stripSuffix("/")
+  private def dirKey(dir: String): String = DirCache.dirKey(dir)
 
-  /** drop every cached listing touching `dir` (or a parent/child — the
-    * streaming writer lands batches in subdirs while readers key the
-    * root). Fanned out from [[TierFreshness.invalidateMeta]] so every
-    * existing writer hook covers both caches.
+  /** The one invalidation hook of every in-process writer: drop every
+    * cached listing AND tier-metadata entry touching `dir` (or a
+    * parent/child — the streaming writer lands batches in subdirs while
+    * readers key the root).
     */
-  def invalidate(dir: String): Unit = {
-    val d = dirKey(dir)
-    def related(k: String) =
-      k == d || k.startsWith(d + "/") || d.startsWith(k + "/")
-    cache.keySet.removeIf(k => related(k._2))
-  }
+  def invalidate(dir: String): Unit = DirCache.invalidate(dir)
 
-  /** drop every cached listing — the swap-retry path for a serving layer
-    * that does not know which of a request's dirs went stale (the cache
-    * rebuilds at one LIST per dir, so a rare whole-cache drop is cheap)
+  /** drop every cached entry — the swap-retry path for a serving layer
+    * that does not know which of a request's dirs went stale (the caches
+    * rebuild at one LIST per dir, so a rare whole-cache drop is cheap)
     */
-  def invalidateAll(): Unit = cache.clear()
+  def invalidateAll(): Unit = DirCache.clear()
 
   private def load(spark: SparkSession, dir: String, mergeSchema: Boolean,
-      swallowMissing: Boolean): Entry = {
-    val ttl = ttlMs(spark)
-    val key = (System.identityHashCode(spark), dirKey(dir), mergeSchema)
-    val now = System.nanoTime()
-    if (ttl > 0) {
-      val hit = cache.get(key)
-      if (hit != null && hit.expiresAtNanos > now &&
-          (hit.owner.get eq spark) &&
-          (hit.df.isDefined || swallowMissing)) return hit
-      // bound growth across many short-lived sessions (test suites): drop
-      // expired and orphaned entries once the map is past a nominal size
-      if (cache.size > 512)
-        cache.values.removeIf(e => e.expiresAtNanos <= now || e.owner.get == null)
+      swallowMissing: Boolean): Entry =
+    cache.getOrLoad(spark, (System.identityHashCode(spark), dirKey(dir), mergeSchema),
+        e => (e.owner.get eq spark) && (e.df.isDefined || swallowMissing)) {
+      listings.incrementAndGet()
+      val reader =
+        if (mergeSchema) spark.read.option("mergeSchema", "true")
+        else spark.read
+      // the listing holds the dir's swap READ lock: a same-JVM compaction
+      // swap (write side) can never interleave its missing-dir window here.
+      // A probe checks existence first: a failed read of an absent path
+      // makes Spark log an ERROR stack trace although the miss is expected.
+      def list(): Option[DataFrame] =
+        withSwapReadLock(dir) {
+          if (!swallowMissing) Some(reader.parquet(dir))
+          else if (!exists(spark, dir)) None
+          else try Some(reader.parquet(dir))
+          catch { case _: org.apache.spark.sql.AnalysisException => None }
+        }
+      val df =
+        try list()
+        catch {
+          case e: org.apache.spark.sql.AnalysisException =>
+            // path absent: a crashed (or cross-process mid-flight) swap
+            // leaves the data staged in .compact_old — restore and retry
+            // once; a genuinely missing store rethrows as before
+            recoverStaged(spark, dir)
+            try list() catch { case _: Throwable => throw e }
+        }
+      // a positive entry may overwrite a cached miss (tryRead after the
+      // path appeared); a miss is cached too — the no-index probe must not
+      // cost a LIST per query either
+      new Entry(new java.lang.ref.WeakReference(spark), df)
     }
-    listings.incrementAndGet()
-    val reader =
-      if (mergeSchema) spark.read.option("mergeSchema", "true")
-      else spark.read
-    // the listing holds the dir's swap READ lock: a same-JVM compaction
-    // swap (write side) can never interleave its missing-dir window here.
-    // A probe checks existence first: a failed read of an absent path
-    // makes Spark log an ERROR stack trace although the miss is expected.
-    def list(): Option[DataFrame] =
-      withSwapReadLock(dir) {
-        if (!swallowMissing) Some(reader.parquet(dir))
-        else if (!exists(spark, dir)) None
-        else try Some(reader.parquet(dir))
-        catch { case _: org.apache.spark.sql.AnalysisException => None }
-      }
-    val df =
-      try list()
-      catch {
-        case e: org.apache.spark.sql.AnalysisException =>
-          // path absent: a crashed (or cross-process mid-flight) swap
-          // leaves the data staged in .compact_old — restore and retry
-          // once; a genuinely missing store rethrows as before
-          recoverStaged(spark, dir)
-          try list() catch { case _: Throwable => throw e }
-      }
-    val e = new Entry(now + ttl * 1000000L,
-      new java.lang.ref.WeakReference(spark), df)
-    // a positive entry may overwrite a cached miss (tryRead after the
-    // path appeared); a miss is cached too — the no-index probe must not
-    // cost a LIST per query either
-    if (ttl > 0) cache.put(key, e)
-    e
-  }
 
   /** test hook: clear every cached entry's owner ref — simulates the JVM
     * reusing a collected session's identityHashCode for a NEW session
     * object (the collision the reference-identity check on hit guards).
     */
   private[graft] def orphanOwnersForTest(): Unit =
-    cache.values.forEach(_.owner.clear())
+    cache.values.foreach(_.owner.clear())
 
   // ----------------------------------------------------- compaction swaps
   // The compactor's two-rename swap (Segments.compactWithSwap) has a
@@ -220,21 +197,15 @@ object ScanCache {
     * `action` MUST rebuild its DataFrames from the doors (which list via
     * this cache) rather than re-collecting a captured frame — a captured
     * frame pins the pre-swap file snapshot and would fail identically.
-    * Empty `dirs` drops every cached listing (serving-layer form: the
+    * Empty `dirs` drops every cached entry (serving-layer form: the
     * route doesn't know which of a request's dirs went stale).
     */
   def withSwapRetry[T](spark: SparkSession, dirs: Seq[String])(
       action: => T): T =
     try action catch {
       case t: Throwable if isVanishedSnapshot(t) =>
-        if (dirs.isEmpty) {
-          invalidateAll()
-          TierFreshness.invalidateAllMeta()
-        } else dirs.foreach { d =>
-          invalidate(d)
-          TierFreshness.invalidateMeta(d)
-          recoverStaged(spark, d)
-        }
+        if (dirs.isEmpty) invalidateAll()
+        else dirs.foreach { d => invalidate(d); recoverStaged(spark, d) }
         action
     }
 

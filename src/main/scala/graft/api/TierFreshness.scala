@@ -36,8 +36,11 @@ import org.apache.spark.sql.functions.col
   * Everything here is FILESYSTEM METADATA only — one partition-directory
   * glob, no Spark job — mirroring how tier layouts are written
   * ([[graft.ingest.Segments.writeMetricSegments]]: `[org=]/dateint=/freq=`).
-  * Metadata reads are CACHED per (dir, org) behind a short TTL
-  * ([[MetaTtlKey]], default 30 s): on a many-day S3 store the glob is a
+  * Metadata reads are CACHED behind a short TTL: tier partitions per
+  * (dir, org), watermarks per (dir, tier) and freq probes per (dir, org,
+  * dateint window) are [[DirCache]] instances, with the scan listings'
+  * TTL ([[ScanCache.TtlKey]], default 30 s), entry cap and invalidation
+  * hook ([[ScanCache.invalidate]]): on a many-day S3 store the glob is a
   * LIST per call and discovery autocomplete fires per keystroke — the
   * reference pays one indexed PG query instead (metric_seg.sql:113-125),
   * so graft must not pay an object-store LIST per request. In-process
@@ -59,82 +62,46 @@ import org.apache.spark.sql.functions.col
   */
 object TierFreshness {
 
-  /** session conf key: TTL in ms for the metadata cache (partition pairs
-    * + watermark sidecars). 0 disables caching (every call re-LISTs —
-    * the pre-r18 behavior, useful for tests poking at the dir from
-    * outside the writer APIs).
-    */
-  val MetaTtlKey = "spark.graft.freshness.metaTtlMs"
+  /** the metadata caches' TTL key: the same key as [[ScanCache.TtlKey]] */
+  val MetaTtlKey: String = DirCache.TtlKey
 
-  private def ttlMs(spark: SparkSession): Long =
-    spark.conf.getOption(MetaTtlKey).flatMap(_.toLongOption).getOrElse(30000L)
-
-  // (dir, org) -> (expiresAtNanos, pairs); (dir, freq) -> (expiresAt, wm)
-  private val partCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, Option[String]), (Long, Seq[(Int, Long)])]()
-  private val wmCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, Long), (Long, Option[Long])]()
-  // (dir, org, dateint range) -> (expiresAt, distinct freqs) — the
-  // non-standard-layout tier probe of Discovery.segmentScanWithPlan
+  private val partCache =
+    new DirCache[(String, Option[String]), Seq[(Int, Long)]](_._1)
+  private val wmCache = new DirCache[(String, Long), Option[Long]](_._1)
+  // the non-standard-layout tier probe of Discovery.segmentScanWithPlan
   // (r18 VERDICT #4: a driver-side distinct().collect() per request;
   // partition-column-only so footer-read cheap, but a Spark job in a
-  // serving path — cached here behind the same TTL/invalidation as the
-  // rest of the tier metadata)
-  private val freqProbeCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, Option[String], Int, Int), (Long, Seq[Long])]()
+  // serving path). Its keys carry arbitrary query windows, so the
+  // cache's entry cap is what bounds it.
+  private val freqProbeCache =
+    new DirCache[(String, Option[String], Int, Int), Seq[Long]](_._1)
+  private[graft] def freqProbeCacheSize: Int = freqProbeCache.size
   // physical metadata operations actually issued (globs + sidecar reads)
   // — the ScaleSpec/HttpApiSpec gate counts these across repeated
   // requests to pin the ≤-one-LIST-per-TTL-window contract
   private val metaReads = new java.util.concurrent.atomic.AtomicLong(0L)
   def metadataReadCount: Long = metaReads.get()
 
-  private def dirKey(dir: String): String = dir.stripSuffix("/")
+  private def dirKey(dir: String): String = DirCache.dirKey(dir)
 
-  /** drop every cached entry touching `dir` (or a parent/child of it —
-    * the streaming writer lands batches in `dir/ingest_batch=*` subdirs
-    * while readers key the root). Called by the in-process writers so a
-    * JVM always reads its own segment/watermark writes.
+  /** the writers' invalidation hook: the same call as
+    * [[ScanCache.invalidate]]
     */
-  def invalidateMeta(dir: String): Unit = {
-    val d = dirKey(dir)
-    def related(k: String) = k == d || k.startsWith(d + "/") || d.startsWith(k + "/")
-    partCache.keySet.removeIf(k => related(k._1))
-    wmCache.keySet.removeIf(k => related(k._1))
-    freqProbeCache.keySet.removeIf(k => related(k._1))
-    // the scan-listing cache shares every writer's invalidation hook
-    ScanCache.invalidate(dir)
-  }
-
-  /** whole-cache drop — [[ScanCache.withSwapRetry]]'s serving-layer form,
-    * where the failed request doesn't know which dir's metadata went stale
-    */
-  def invalidateAllMeta(): Unit = {
-    partCache.clear()
-    wmCache.clear()
-    freqProbeCache.clear()
-  }
+  def invalidateMeta(dir: String): Unit = ScanCache.invalidate(dir)
 
   /** TTL-cached distinct-tier probe for stores whose layout the partition
     * globs cannot enumerate ([[Discovery.segmentScanWithPlan]]'s fallback
     * branch): `probe` runs at most once per (dir, org, dateint window)
-    * per TTL window; writers invalidate through [[invalidateMeta]] like
-    * every other tier-metadata read. The window is part of the key
+    * per TTL window; writers invalidate through [[ScanCache.invalidate]]
+    * like every other tier-metadata read. The window is part of the key
     * because the probe runs over the caller's org/dateint-filtered scan.
     */
   def cachedFreqProbe(spark: SparkSession, dir: String, org: Option[String],
-      dLo: Int, dHi: Int)(probe: => Seq[Long]): Seq[Long] = {
-    val key = (dirKey(dir), org, dLo, dHi)
-    val ttl = ttlMs(spark)
-    val now = System.nanoTime()
-    if (ttl > 0) {
-      val hit = freqProbeCache.get(key)
-      if (hit != null && hit._1 > now) return hit._2
+      dLo: Int, dHi: Int)(probe: => Seq[Long]): Seq[Long] =
+    freqProbeCache.getOrLoad(spark, (dirKey(dir), org, dLo, dHi)) {
+      metaReads.incrementAndGet()
+      probe
     }
-    metaReads.incrementAndGet()
-    val freqs = probe
-    if (ttl > 0) freqProbeCache.put(key, (now + ttl * 1000000L, freqs))
-    freqs
-  }
 
   /** every (dateint, freqMs) partition pair under `dir`, from one
     * filesystem glob per supported layout depth: `dateint=/freq=` at the
@@ -147,49 +114,42 @@ object TierFreshness {
     * always count. Served from the TTL cache when fresh.
     */
   def tierPartitions(spark: SparkSession, dir: String,
-      org: Option[String] = None): Seq[(Int, Long)] = {
-    val key = (dirKey(dir), org)
-    val ttl = ttlMs(spark)
-    val now = System.nanoTime()
-    if (ttl > 0) {
-      val hit = partCache.get(key)
-      if (hit != null && hit._1 > now) return hit._2
-    }
-    val base = new Path(dir)
-    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def pairsFor(pat: String): Seq[(Path, Int, Long)] = {
-      metaReads.incrementAndGet()
-      Option(fs.globStatus(new Path(base, pat)))
-        .map(_.toSeq).getOrElse(Nil)
-        .flatMap { st =>
-          val p = st.getPath
-          for {
-            f <- p.getName.stripPrefix("freq=").toLongOption
-            d <- p.getParent.getName.stripPrefix("dateint=").toIntOption
-          } yield (p, d, f)
-        }
-    }
-    // under the dir's swap READ lock: a glob landing in a same-JVM
-    // compaction rename window would silently return zero partitions and
-    // degrade the fresh door to a wrong tier condition (see
-    // ScanCache.withSwapReadLock); an empty result with the dir staged
-    // aside (crashed or cross-process swap) recovers and re-globs once
-    def globPairs(): Seq[(Int, Long)] = ScanCache.withSwapReadLock(dir) {
-      val flat = pairsFor("dateint=*/freq=*")
-      val nested = pairsFor("*/dateint=*/freq=*").filter { case (p, _, _) =>
-        val mid = p.getParent.getParent.getName
-        !mid.startsWith("org=") || org.forall(o => mid == s"org=$o")
+      org: Option[String] = None): Seq[(Int, Long)] =
+    partCache.getOrLoad(spark, (dirKey(dir), org)) {
+      val base = new Path(dir)
+      val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      def pairsFor(pat: String): Seq[(Path, Int, Long)] = {
+        metaReads.incrementAndGet()
+        Option(fs.globStatus(new Path(base, pat)))
+          .map(_.toSeq).getOrElse(Nil)
+          .flatMap { st =>
+            val p = st.getPath
+            for {
+              f <- p.getName.stripPrefix("freq=").toLongOption
+              d <- p.getParent.getName.stripPrefix("dateint=").toIntOption
+            } yield (p, d, f)
+          }
       }
-      (flat ++ nested).map { case (_, d, f) => (d, f) }.distinct
+      // under the dir's swap READ lock: a glob landing in a same-JVM
+      // compaction rename window would silently return zero partitions and
+      // degrade the fresh door to a wrong tier condition (see
+      // ScanCache.withSwapReadLock); an empty result with the dir staged
+      // aside (crashed or cross-process swap) recovers and re-globs once
+      def globPairs(): Seq[(Int, Long)] = ScanCache.withSwapReadLock(dir) {
+        val flat = pairsFor("dateint=*/freq=*")
+        val nested = pairsFor("*/dateint=*/freq=*").filter { case (p, _, _) =>
+          val mid = p.getParent.getParent.getName
+          !mid.startsWith("org=") || org.forall(o => mid == s"org=$o")
+        }
+        (flat ++ nested).map { case (_, d, f) => (d, f) }.distinct
+      }
+      val pairs = globPairs()
+      if (pairs.nonEmpty) pairs
+      else {
+        ScanCache.recoverStaged(spark, dir) // no-op unless dir staged aside
+        globPairs()
+      }
     }
-    var pairs = globPairs()
-    if (pairs.isEmpty) {
-      ScanCache.recoverStaged(spark, dir) // no-op unless dir staged aside
-      pairs = globPairs()
-    }
-    if (ttl > 0) partCache.put(key, (now + ttl * 1000000L, pairs))
-    pairs
-  }
 
   /** UTC epoch-ms start of the day AFTER `dateint` — the exclusive
     * coverage bound of a tier whose newest partition is `dateint`. Every
@@ -254,18 +214,11 @@ object TierFreshness {
     * failure. Served from the TTL cache when fresh.
     */
   def readWatermark(spark: SparkSession, dir: String,
-      freqMs: Long): Option[Long] = {
-    val key = (dirKey(dir), freqMs)
-    val ttl = ttlMs(spark)
-    val now = System.nanoTime()
-    if (ttl > 0) {
-      val hit = wmCache.get(key)
-      if (hit != null && hit._1 > now) return hit._2
-    }
-    val p = watermarkPath(dir, freqMs)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    metaReads.incrementAndGet()
-    val wm =
+      freqMs: Long): Option[Long] =
+    wmCache.getOrLoad(spark, (dirKey(dir), freqMs)) {
+      val p = watermarkPath(dir, freqMs)
+      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      metaReads.incrementAndGet()
       try {
         if (!fs.exists(p)) None
         else {
@@ -274,9 +227,7 @@ object TierFreshness {
           finally in.close()
         }
       } catch { case _: java.io.IOException => None }
-    if (ttl > 0) wmCache.put(key, (now + ttl * 1000000L, wm))
-    wm
-  }
+    }
 
   /** The discovery-scan tier PLAN for the window [sMs, eMs): per dateint
     * in-window, the COARSEST tier eligible for that dateint. None when

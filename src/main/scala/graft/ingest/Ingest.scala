@@ -1,6 +1,6 @@
 package graft.ingest
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, DataFrameWriter, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -448,21 +448,75 @@ object Segments {
   private def withOrg(cooked: DataFrame, org: Option[String]): DataFrame =
     org.foldLeft(cooked)((df, o) => df.withColumn("org", lit(o)))
 
-  private def orgCols(df: DataFrame): Seq[Column] =
-    if (df.schema.fieldNames.contains("org")) Seq(col("org")) else Nil
-
-  private def orgNames(df: DataFrame): Seq[String] =
-    if (df.schema.fieldNames.contains("org")) Seq("org") else Nil
+  /** One signal's on-disk segment layout, shared by its writer and its
+    * compactor: the hive partition keys after the optional leading `org`,
+    * the sort keys after the partition keys, and the one column carrying
+    * a parquet bloom filter; every layout is ZSTD and size-split via
+    * maxRecordsPerFile.
+    */
+  private final case class Layout(parts: Seq[String], sort: Seq[String],
+      bloom: String)
 
   /** metrics: partition by (dateint, freq), sort within partitions by
-    * (metric_name, chq_tid, chq_timestamp); ZSTD; size-split via
-    * maxRecordsPerFile. On a cluster the same layout gives partition
-    * pruning on dateint/freq and row-group locality per series. A parquet
-    * bloom filter on chq_tid serves point series lookups: chq_tid is the
-    * SECOND sort key, so min/max row-group stats are near-useless for it
-    * within a metric — the bloom is what lets a tid-equality scan skip
+    * (metric_name, chq_tid, chq_timestamp). On a cluster the layout gives
+    * partition pruning on dateint/freq and row-group locality per series.
+    * The bloom filter on chq_tid serves point series lookups: chq_tid is
+    * the SECOND sort key, so min/max row-group stats are near-useless for
+    * it within a metric — the bloom is what lets a tid-equality scan skip
     * row groups.
     */
+  private val MetricLayout = Layout(Seq("dateint", "freq"),
+    Seq("metric_name", "chq_tid", "chq_timestamp"), "chq_tid")
+
+  /** logs: sort by (resource_service_name, chq_fingerprint, chq_tsns);
+    * bloom filter on chq_fingerprint for row-group skipping on
+    * fingerprint-equality scans (the file-level companion is
+    * [[FingerprintIndex]])
+    */
+  private val LogLayout = Layout(Seq("dateint"),
+    Seq("resource_service_name", "chq_fingerprint", "chq_tsns"),
+    "chq_fingerprint")
+
+  /** spans: sort by (span_trace_id, chq_tsns) — the reference's trace
+    * segment order (trace_ingest_duckdb.go:451) — so one trace's spans
+    * are contiguous; bloom filter on span_trace_id serves the
+    * trace-by-id lookup (file-level companion: [[FingerprintIndex]],
+    * where span_trace_id is exact+trigram indexed)
+    */
+  private val SpanLayout = Layout(Seq("dateint"),
+    Seq("span_trace_id", "chq_tsns"), "span_trace_id")
+
+  /** `df` (carrying its partition columns) as a `layout` writer. The sort
+    * MUST lead with the partition columns: the dynamic-partition writer
+    * requires ordering by them and would otherwise inject its own sort,
+    * discarding the layout's ordering. One task per partition group →
+    * one sorted file per partition dir unless maxRecordsPerFile splits it.
+    */
+  private def layoutWriter(df: DataFrame, layout: Layout, mode: String,
+      maxRecordsPerFile: Long): DataFrameWriter[Row] = {
+    val parts =
+      (if (df.schema.fieldNames.contains("org")) Seq("org") else Nil) ++ layout.parts
+    df.repartition(parts.map(col): _*)
+      .sortWithinPartitions((parts ++ layout.sort).map(col): _*)
+      .write.mode(mode)
+      .partitionBy(parts: _*)
+      .option("compression", "zstd")
+      .option(s"parquet.bloom.filter.enabled#${layout.bloom}", "true")
+      .option("maxRecordsPerFile", maxRecordsPerFile)
+  }
+
+  /** append `cooked` (tenant `org`, if given) to `outDir` in `layout`,
+    * then invalidate the dir's cached listings and tier metadata:
+    * read-your-writes for the doors
+    */
+  private def writeSegments(cooked: DataFrame, layout: Layout, outDir: String,
+      maxRecordsPerFile: Long, org: Option[String]): Unit = {
+    val base = withOrg(cooked, org)
+      .withColumn("dateint", dateint(col("chq_timestamp")))
+    layoutWriter(base, layout, "append", maxRecordsPerFile).parquet(outDir)
+    graft.api.ScanCache.invalidate(outDir)
+  }
+
   /** session conf key: "true" → [[readMetricSegments]] treats the
     * `chq_sketch` column as sketches-go DataDog-proto bytes — what a
     * REFERENCE-written segment stores at rest
@@ -513,87 +567,25 @@ object Segments {
         cooked.withColumn("chq_sketch",
           graft.sketch.functions.ddsketch_to_proto(col("chq_sketch")))
       else cooked
-    val base = withOrg(src, org)
-      .withColumn("dateint", dateint(col("chq_timestamp")))
-      .withColumn("freq", col("chq_rollup_freq"))
-    base
-      // sort MUST lead with the partition columns: the dynamic-partition
-      // writer requires ordering by them and would otherwise inject its own
-      // sort, discarding the series ordering
-      .repartition(orgCols(base) ++ Seq(col("dateint"), col("freq")): _*)
-      .sortWithinPartitions(orgCols(base) ++ Seq(col("dateint"), col("freq"),
-        col("metric_name"), col("chq_tid"), col("chq_timestamp")): _*)
-      .write.mode("append")
-      .partitionBy(orgNames(base) ++ Seq("dateint", "freq"): _*)
-      .option("compression", "zstd")
-      .option("parquet.bloom.filter.enabled#chq_tid", "true")
-      .option("maxRecordsPerFile", maxRecordsPerFile)
-      .parquet(outDir)
-    // read-your-writes for the freshness doors' metadata cache: a tier
-    // plan computed after this write must see the new partitions
-    graft.api.TierFreshness.invalidateMeta(outDir)
+    writeSegments(src.withColumn("freq", col("chq_rollup_freq")),
+      MetricLayout, outDir, maxRecordsPerFile, org)
   }
 
-  /** logs: sort by (resource_service_name, chq_fingerprint, chq_tsns);
-    * bloom filter on chq_fingerprint for row-group skipping on
-    * fingerprint-equality scans (the file-level companion is
-    * [[FingerprintIndex]])
-    */
+  /** log segments in the log layout (see `LogLayout`) */
   def writeLogSegments(cooked: DataFrame, outDir: String,
-      maxRecordsPerFile: Long = 2000000L, org: Option[String] = None): Unit = {
-    val base = withOrg(cooked, org)
-      .withColumn("dateint", dateint(col("chq_timestamp")))
-    base
-      .repartition(orgCols(base) ++ Seq(col("dateint")): _*)
-      .sortWithinPartitions(orgCols(base) ++ Seq(col("dateint"),
-        col("resource_service_name"), col("chq_fingerprint"), col("chq_tsns")): _*)
-      .write.mode("append")
-      .partitionBy(orgNames(base) ++ Seq("dateint"): _*)
-      .option("compression", "zstd")
-      .option("parquet.bloom.filter.enabled#chq_fingerprint", "true")
-      .option("maxRecordsPerFile", maxRecordsPerFile)
-      .parquet(outDir)
-    // read-your-writes for the doors' scan-listing cache (logs carry no
-    // tier metadata, but the LogQL door caches the dir listing)
-    graft.api.TierFreshness.invalidateMeta(outDir)
-  }
+      maxRecordsPerFile: Long = 2000000L, org: Option[String] = None): Unit =
+    writeSegments(cooked, LogLayout, outDir, maxRecordsPerFile, org)
 
-  /** spans: sort by (span_trace_id, chq_tsns) — the reference's trace
-    * segment order (trace_ingest_duckdb.go:451) — so one trace's spans
-    * are contiguous; bloom filter on span_trace_id serves the
-    * trace-by-id lookup (file-level companion: [[FingerprintIndex]],
-    * where span_trace_id is exact+trigram indexed)
-    */
+  /** span segments in the trace layout (see `SpanLayout`) */
   def writeSpanSegments(cooked: DataFrame, outDir: String,
-      maxRecordsPerFile: Long = 2000000L, org: Option[String] = None): Unit = {
-    val base = withOrg(cooked, org)
-      .withColumn("dateint", dateint(col("chq_timestamp")))
-    base
-      .repartition(orgCols(base) ++ Seq(col("dateint")): _*)
-      .sortWithinPartitions(orgCols(base) ++ Seq(col("dateint"),
-        col("span_trace_id"), col("chq_tsns")): _*)
-      .write.mode("append")
-      .partitionBy(orgNames(base) ++ Seq("dateint"): _*)
-      .option("compression", "zstd")
-      .option("parquet.bloom.filter.enabled#span_trace_id", "true")
-      .option("maxRecordsPerFile", maxRecordsPerFile)
-      .parquet(outDir)
-    graft.api.TierFreshness.invalidateMeta(outDir)
-  }
+      maxRecordsPerFile: Long = 2000000L, org: Option[String] = None): Unit =
+    writeSegments(cooked, SpanLayout, outDir, maxRecordsPerFile, org)
 
   /** trace-segment compaction: same swap protocol, trace sort order */
   def compactSpanSegments(spark: SparkSession, dir: String,
       maxRecordsPerFile: Long = 2000000L): DataFrame =
-    compactWithSwap(spark, dir) { df =>
-      df.repartition(orgCols(df) ++ Seq(col("dateint")): _*)
-        .sortWithinPartitions(orgCols(df) ++ Seq(col("dateint"),
-          col("span_trace_id"), col("chq_tsns")): _*)
-        .write.mode("overwrite")
-        .partitionBy(orgNames(df) ++ Seq("dateint"): _*)
-        .option("compression", "zstd")
-        .option("parquet.bloom.filter.enabled#span_trace_id", "true")
-        .option("maxRecordsPerFile", maxRecordsPerFile)
-    }
+    compactWithSwap(spark, dir)(
+      layoutWriter(_, SpanLayout, "overwrite", maxRecordsPerFile))
 
   /** Compaction: re-read a segment dir (union-by-name across evolving
     * schemas), re-sort, and REWRITE it as fewer, larger, sorted files
@@ -608,18 +600,8 @@ object Segments {
     */
   def compactMetricSegments(spark: SparkSession, dir: String,
       maxRecordsPerFile: Long = 2000000L): DataFrame =
-    compactWithSwap(spark, dir) { df =>
-      // one task per (org, dateint, freq) group → one sorted file per
-      // partition dir unless maxRecordsPerFile splits it
-      df.repartition(orgCols(df) ++ Seq(col("dateint"), col("freq")): _*)
-        .sortWithinPartitions(orgCols(df) ++ Seq(col("dateint"), col("freq"),
-          col("metric_name"), col("chq_tid"), col("chq_timestamp")): _*)
-        .write.mode("overwrite")
-        .partitionBy(orgNames(df) ++ Seq("dateint", "freq"): _*)
-        .option("compression", "zstd")
-        .option("parquet.bloom.filter.enabled#chq_tid", "true")
-        .option("maxRecordsPerFile", maxRecordsPerFile)
-    }
+    compactWithSwap(spark, dir)(
+      layoutWriter(_, MetricLayout, "overwrite", maxRecordsPerFile))
 
   /** log-segment compaction (reference log_compaction_processor.go): same
     * swap protocol, log sort order, dateint-only partitioning. An existing
@@ -635,16 +617,8 @@ object Segments {
       val p = new org.apache.hadoop.fs.Path(FingerprintIndex.indexPath(dir))
       p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
     }
-    val out = compactWithSwap(spark, dir) { df =>
-      df.repartition(orgCols(df) ++ Seq(col("dateint")): _*)
-        .sortWithinPartitions(orgCols(df) ++ Seq(col("dateint"),
-          col("resource_service_name"), col("chq_fingerprint"), col("chq_tsns")): _*)
-        .write.mode("overwrite")
-        .partitionBy(orgNames(df) ++ Seq("dateint"): _*)
-        .option("compression", "zstd")
-        .option("parquet.bloom.filter.enabled#chq_fingerprint", "true")
-        .option("maxRecordsPerFile", maxRecordsPerFile)
-    }
+    val out = compactWithSwap(spark, dir)(
+      layoutWriter(_, LogLayout, "overwrite", maxRecordsPerFile))
     if (hadIndex) FingerprintIndex.buildLogIndex(spark, dir)
     out
   }
@@ -657,7 +631,7 @@ object Segments {
     * .compactIvfIndex]]) reuses the same staged-swap contract over its
     * lists directory */
   private[graft] def compactWithSwap(spark: SparkSession, dir: String)(
-      write: DataFrame => org.apache.spark.sql.DataFrameWriter[org.apache.spark.sql.Row]): DataFrame = {
+      write: DataFrame => DataFrameWriter[Row]): DataFrame = {
     val tmp = dir.stripSuffix("/") + ".compact_tmp"
     val old = dir.stripSuffix("/") + ".compact_old"
     // crash recovery: a process that died between `dir → .compact_old`
@@ -696,7 +670,7 @@ object Segments {
           new org.apache.hadoop.fs.Path(dir.stripSuffix("/") + "/_graft_watermarks"))
     }
     fs.delete(oldP, true)
-    graft.api.TierFreshness.invalidateMeta(dir)
+    graft.api.ScanCache.invalidate(dir)
     spark.read.parquet(dir)
   }
 
@@ -718,7 +692,7 @@ object Segments {
     }
     dropped.foreach(st => fs.delete(st.getPath, true))
     // expired partitions must leave the freshness doors' tier plan too
-    if (dropped.nonEmpty) graft.api.TierFreshness.invalidateMeta(dir)
+    if (dropped.nonEmpty) graft.api.ScanCache.invalidate(dir)
     dropped.length
   }
 

@@ -3,7 +3,7 @@ package graft.logql
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.promql.{Engine, MatchOp, Matcher, MetricStore, QueryParams}
+import graft.promql.{Engine, MetricStore, QueryParams}
 
 /** A cooked-logs table (reference docs/design/db-parquet/logs.md): system
   * columns + string label columns. `log_message` carries the line.
@@ -229,7 +229,7 @@ object Compiler {
   def compilePipeline(pipeline: LogPipeline, store: LogStore,
       extraNeeded: Seq[String] = Nil): (DataFrame, Seq[String]) = {
     var df = store.df
-    pipeline.matchers.foreach { m => df = df.filter(matcherCond(df, m)) }
+    pipeline.matchers.foreach { m => df = df.filter(Engine.matcherCond(df, m)) }
 
     // need-key analysis: labels referenced downstream (or requested as
     // output fields) that a json/logfmt stage must materialize
@@ -480,18 +480,6 @@ object Compiler {
         df = df.withColumn("__unwrap_value", v)
     }
     (df, labels)
-  }
-
-  private def matcherCond(df: DataFrame, m: Matcher): Column = {
-    val c =
-      if (df.schema.fieldNames.contains(m.label)) coalesce(col(m.label), lit(""))
-      else lit("")
-    m.op match {
-      case MatchOp.Eq  => c === m.value
-      case MatchOp.Ne  => c =!= m.value
-      case MatchOp.Re  => c.rlike("^(?:" + m.value + ")$")
-      case MatchOp.Nre => !c.rlike("^(?:" + m.value + ")$")
-    }
   }
 
   /** try_cast-to-double that stays safe under ANSI: only cast rows that

@@ -370,6 +370,11 @@ object Engine {
         s"$fn requires a selector argument, got $other")
     }
 
+    // a subquery outside a range function yields a range vector: a type
+    // error, as in Prometheus
+    case _: Subquery => throw new IllegalArgumentException(
+      "a subquery is a range vector: it must be the argument of a range function")
+
     case UnaryFn(fn, arg) => eval(arg, store, p) match {
       case Left(d) => Left(unaryScalar(fn, d))
       case Right(sf) =>
@@ -1207,7 +1212,10 @@ object Engine {
       labels)
   }
 
-  private def matcherCond(df: DataFrame, m: Matcher): Column = {
+  /** one label matcher as a filter over `df` (PromQL selectors and LogQL
+    * stream selectors alike)
+    */
+  private[graft] def matcherCond(df: DataFrame, m: Matcher): Column = {
     // absent label ≡ "" (PromQL semantics); missing column → constant ""
     val c =
       if (df.schema.fieldNames.contains(m.label)) coalesce(col(m.label), lit(""))

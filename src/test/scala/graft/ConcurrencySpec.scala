@@ -483,4 +483,41 @@ class ConcurrencySpec extends AnyFunSuite {
       assert(c1 == 200 && got == want, s"status $c1, ${got.size} vs ${want.size} rows")
     } finally api.stop()
   }
+
+  test("a summary query whose cached listing points at rewritten files " +
+      "rebuilds under the swap retry instead of failing") {
+    val dir = tmpDir("graft_conc_summary_")
+    Segments.writeMetricSegments(preAgg(mkEvents(2)), dir, maxRecordsPerFile = 50)
+    val api = new graft.api.HttpApi(spark, metricsDir = Some(dir)).start()
+    val client = java.net.http.HttpClient.newHttpClient()
+    def summaries(): (Int, Seq[String], Seq[String]) = {
+      val q = java.net.URLEncoder.encode("sum by (attr_svc) (m_conc)", "UTF-8")
+      val resp = client.send(java.net.http.HttpRequest.newBuilder(
+        java.net.URI.create(s"http://127.0.0.1:${api.port}/api/v1/metrics/query" +
+          s"?q=$q&s=$Day0&e=${Day0 + 3 * 86400000L}&summary=true")).GET().build(),
+        java.net.http.HttpResponse.BodyHandlers.ofString())
+      val events = resp.body().linesIterator.filter(_.startsWith("data: ")).toSeq
+      (resp.statusCode(),
+        events.filter(_.contains("\"type\":\"summary\"")).sorted,
+        events.filter(_.contains("\"type\":\"done\"")))
+    }
+    try {
+      val (c0, want, done0) = summaries() // warms the listing cache
+      assert(c0 == 200 && want.size == 3, done0.mkString)
+      // a cross-process rewrite: same rows, new file names, so the cached
+      // listing names files that are gone
+      val root = new org.apache.hadoop.fs.Path(dir)
+      val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val it = fs.listFiles(root, true)
+      val files = Iterator.continually(it).takeWhile(_.hasNext).map(_.next().getPath)
+        .filter(_.getName.endsWith(".parquet")).toList
+      assert(files.nonEmpty)
+      files.foreach(f =>
+        assert(fs.rename(f, new org.apache.hadoop.fs.Path(f.getParent, "re-" + f.getName))))
+      val (c1, got, done1) = summaries()
+      assert(c1 == 200 && done1 == Seq("""data: {"type":"done","data":{"status":"ok"}}"""),
+        done1.mkString)
+      assert(got == want)
+    } finally api.stop()
+  }
 }

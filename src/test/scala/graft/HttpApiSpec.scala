@@ -818,4 +818,24 @@ class HttpApiSpec extends AnyFunSuite {
         "&limit=0")._1 == 200)
     } finally api.stop()
   }
+
+  test("a subquery outside a range function is a type error (400), not a " +
+      "MatchError (500)") {
+    val api = new HttpApi(spark, metricsDir = Some(metricDir)).start()
+    try {
+      val base = s"http://127.0.0.1:${api.port}"
+      val ev = graft.model.Tables.events(spark, sf)
+        .agg(min(col("ts_ms")), max(col("ts_ms"))).head()
+      val (s, e) = (ev.getLong(0), ev.getLong(1) + 1)
+      for (q <- Seq("rate(events_value[5m])[30m:1m]",
+          "sum(rate(events_value[5m])[30m:1m])")) {
+        val (c, b) = get(base, s"/api/v1/metrics/query?q=${enc(q)}&s=$s&e=$e")
+        assert(c == 400 && b.contains("range vector"), s"$q: $c ${b.take(200)}")
+      }
+      // under a range function the same subquery stays a valid query
+      val (ok, b) = get(base, "/api/v1/metrics/query?q=" +
+        enc("max_over_time(rate(events_value[5m])[30m:1m])") + s"&s=$s&e=$e")
+      assert(ok == 200 && b.contains("\"status\":\"ok\""), b.take(200))
+    } finally api.stop()
+  }
 }

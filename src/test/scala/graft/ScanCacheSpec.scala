@@ -241,4 +241,25 @@ class ScanCacheSpec extends AnyFunSuite {
       spark.conf.unset(ScanCache.TtlKey)
     }
   }
+
+  test("the freq-probe cache stays within its entry cap however many " +
+      "distinct query windows it sees") {
+    spark.conf.set(ScanCache.TtlKey, "600000")
+    try {
+      val dir = java.nio.file.Files.createTempDirectory("graft_probe_cap_")
+        .toString
+      val windows = graft.api.DirCache.Cap + 100
+      (0 until windows).foreach { i =>
+        assert(TierFreshness.cachedFreqProbe(spark, dir, None, 20240101 + i,
+          20240101 + i)(Seq(10000L)) == Seq(10000L))
+        assert(TierFreshness.freqProbeCacheSize <= graft.api.DirCache.Cap,
+          s"${TierFreshness.freqProbeCacheSize} entries after ${i + 1} windows")
+      }
+      // the newest window is still served from the cache
+      val reads = TierFreshness.metadataReadCount
+      val last = 20240101 + windows - 1
+      TierFreshness.cachedFreqProbe(spark, dir, None, last, last)(Seq(10000L))
+      assert(TierFreshness.metadataReadCount == reads)
+    } finally spark.conf.unset(ScanCache.TtlKey)
+  }
 }
