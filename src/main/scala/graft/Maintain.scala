@@ -7,10 +7,12 @@ import graft.ingest.{MetricsPreAgg, Segments}
   * run one maintenance action against a segment store and exit. Each
   * action is the SAME library call the in-process paths use, so a
   * deployment can schedule these as cron/k8s jobs against a store other
-  * processes are actively serving — the cross-process safety contract
-  * (staged-swap recovery on the reader side, watermark sidecars carried,
-  * whole-(tier, day) rollup rewrites) is exercised by ConcurrencySpec
-  * launching this main in a second JVM.
+  * processes are actively serving. ConcurrencySpec launches this main in
+  * a second JVM for `compact-metrics` only, which exercises the
+  * cross-process swap contract (staged-swap recovery on the reader side,
+  * watermark sidecars carried across the swap); `rollup` runs the
+  * in-process rebuild ([[MetricsPreAgg.maintainRollupsBatch]]), whose
+  * whole-(tier, day) rewrites no second-JVM test covers.
   *
   * Usage:
   *   graft.Maintain compact-metrics <dir> [maxRecordsPerFile]

@@ -1,6 +1,5 @@
 package graft.api
 
-import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -133,20 +132,24 @@ object ScanCache {
   // a consistent set from the PG index (lrdb/queries/metric_seg.sql), so
   // compaction registers new files and retires old ones without a gap. A
   // filesystem store needs two mitigations instead:
-  //  - same-JVM: a per-dir read/write lock — the compactor holds the
+  //  - same-JVM: a read/write lock per dir — the compactor holds the
   //    write side across its rename pair (microseconds), listings hold
   //    the read side, so an in-process reader can never observe the
-  //    missing-dir window;
+  //    missing-dir window. A fixed table of lock stripes, indexed by the
+  //    dir's hash, bounds the locks whatever the number of dirs: two dirs
+  //    sharing a stripe only serialize a rename pair against the other's
+  //    listings. No swap lock is ever taken while another is held, so a
+  //    shared stripe cannot deadlock;
   //  - cross-process (or crashed compactor): a listing that finds the
   //    dir absent while `<dir>.compact_old` exists waits briefly for the
   //    swap to land, then restores the staged dir ([[recoverStaged]],
   //    the same routine the compactor runs on entry) and retries.
 
-  private val swapLocks = new ConcurrentHashMap[String,
-    java.util.concurrent.locks.ReentrantReadWriteLock]()
+  private val swapLocks =
+    Array.fill(64)(new java.util.concurrent.locks.ReentrantReadWriteLock())
   private def lockFor(dir: String) =
-    swapLocks.computeIfAbsent(dirKey(dir),
-      _ => new java.util.concurrent.locks.ReentrantReadWriteLock())
+    swapLocks(Math.floorMod(dirKey(dir).hashCode, swapLocks.length))
+  private[graft] def swapLockCount: Int = swapLocks.length
 
   /** held by [[graft.ingest.Segments.compactWithSwap]] around its rename
     * pair so same-JVM listings never race the swap window

@@ -51,14 +51,14 @@ import org.apache.spark.sql.functions.col
   *
   * Granularity contract (documented, not hidden): freshness is tracked per
   * DATEINT — a tier is assumed current for every day it has partitions
-  * for. Both rollup paths in this repo write whole-(tier, day) units (the
-  * batch maintenance [[graft.ingest.MetricsPreAgg.maintainRollupsBatch]]
-  * and the streaming rebuild replace whole (tier, day) partitions per
-  * run/batch), so a day is never half-rolled across job boundaries, and
-  * BOTH stamp an explicit rolled-through watermark that refines the day
-  * bound to intra-day. Late data appended to an already-rolled day is
-  * visible once that day re-rolls — the same contract the reference makes
-  * between segment registration and rollup completion.
+  * for. Batch maintenance and the streaming sink share one rollup
+  * rebuild ([[graft.ingest.MetricsPreAgg.rebuildTiers]]), which replaces
+  * whole (tier, day) partitions per run/batch, so a day is never
+  * half-rolled across job boundaries, and stamps an explicit
+  * rolled-through watermark that refines the day bound to intra-day.
+  * Late data appended to an already-rolled day is visible once that day
+  * re-rolls — the same contract the reference makes between segment
+  * registration and rollup completion.
   */
 object TierFreshness {
 

@@ -351,73 +351,99 @@ object MetricsPreAgg {
     }.toMap
   }
 
-  /** Batch rollup maintenance over an on-disk segment store — the batch
-    * twin of the streaming rebuild
-    * ([[graft.streaming.StreamingIngest]]'s per-batch loop; reference
-    * metric_rollup_processor.go:571-708): re-roll whole (tier, UTC day)
-    * units from the on-disk base tier, replace each tier-day partition
-    * idempotently (delete-then-rewrite), and stamp the rolled-through
-    * watermark the freshness doors refine their bound with
-    * ([[graft.api.TierFreshness.writeWatermark]]) — r17 stamped it from
-    * the streaming path only, so a batch-maintained lake got day-granular
-    * freshness at best (r17 VERDICT #2).
+  /** Batch rollup maintenance over an on-disk segment store (the
+    * reference's rollup processor, metric_rollup_processor.go:571-708):
+    * [[rebuildTiers]] over the base days ≥ `sinceDateint` of tenant `org`,
+    * with every tier written into `segDir` itself
+    * (`[org=]/dateint=/freq=<tier>`).
     *
     * `sinceDateint` bounds the re-roll to days ≥ it (incremental
     * catch-up — re-rolling a multi-year store per run would be
-    * O(history); the per-day rebuild read stays dateint-partition-pruned
-    * either way). The watermark is stamped per tier only when every
-    * OLDER base day is already covered by that tier's partitions —
-    * otherwise the claim "tier reflects every base row < W" would be
-    * false for the skipped days (such a store still answers correctly
-    * through the day-granular partition bound and the query door's
-    * gap-day branch, just without the intra-day refinement).
-    *
-    * Crash safety: a crash between a tier-day delete and its rewrite
-    * leaves that day absent from the tier — a state the doors already
-    * serve correctly (discovery's per-dateint fallback; the query door's
-    * gap-day branch) — and the next maintenance run re-rolls it. The
-    * watermark is stamped only after every tier-day landed.
+    * O(history)); without it every base day is re-rolled. A
+    * multi-tenant store is maintained once per org.
     */
   def maintainRollupsBatch(spark: SparkSession, segDir: String,
       rollupTiers: Seq[Long] = RollupChainMs.tail,
       baseFreqMs: Long = RollupChainMs.head,
       org: Option[String] = None,
       sinceDateint: Option[Int] = None): Unit = {
+    val all = spark.read.parquet(segDir).filter(col("freq") === baseFreqMs)
+    val hasOrg = all.schema.fieldNames.contains("org")
+    require(!hasOrg || org.isDefined,
+      "multi-tenant store: run rollup maintenance once per org")
+    val scoped = org.filter(_ => hasOrg)
+      .map(o => all.filter(col("org") === o)).getOrElse(all)
+    rebuildTiers(spark, segDir,
+      sinceDateint.fold(scoped)(d0 => scoped.filter(col("dateint") >= d0)),
+      rollupTiers, baseFreqMs, org, _ => segDir)
+  }
+
+  /** The one rollup-tier rebuild of batch maintenance
+    * ([[maintainRollupsBatch]]) and streaming ingest
+    * ([[graft.streaming.StreamingIngest.segmentWriteStream]]): re-roll
+    * whole (tier, UTC day) units of `base` — a store's base-tier rows
+    * (partition columns included) for the days to rebuild, scoped to one
+    * org — and stamp the rolled-through watermark the freshness doors
+    * refine their bound with ([[graft.api.TierFreshness.writeWatermark]]).
+    *
+    * One small job collects the work list (the days and the base tier's
+    * high-water timestamp). Then, per tier, the (tier, day) partitions of
+    * those days under `root(tier)` (`[org=]/dateint=/freq=<tier>`) are
+    * deleted and ONE `rollup` + segment write lands all of them, every
+    * tier read from the base tier (no chaining: a sum of sums would
+    * reorder float adds). A job per (tier, day) would pay task-launch
+    * and scheduling overhead per day. Every chain tier divides 24 h, so a
+    * coarse bucket never straddles a rebuilt day, and rebuilding whole
+    * tier-days keeps the directory count bounded by days, not buckets.
+    *
+    * The watermark `max base ts + 1` is stamped per tier only when every
+    * base day OLDER than the first rebuilt day already has that tier's
+    * partitions — otherwise "the tier reflects every base row < W" would
+    * be false for the skipped days (such a store still answers correctly
+    * through the day-granular partition bound and the query door's
+    * gap-day branch, just without the intra-day refinement). The stamp
+    * is monotonic, so a rebuild of late data on old days never regresses
+    * it.
+    *
+    * Crash safety: a crash between a tier's delete and its write leaves
+    * ALL of that tier's rebuilt days absent — gap days the doors already
+    * serve from the base tier (discovery's per-dateint fallback, the
+    * query door's gap-day branch) until the next run (batch maintenance,
+    * or the batch replay of a stream) re-rolls them. The watermark is
+    * written only after every tier landed.
+    */
+  private[graft] def rebuildTiers(spark: SparkSession, segDir: String,
+      base: DataFrame, rollupTiers: Seq[Long], baseFreqMs: Long,
+      org: Option[String], root: Long => String): Unit = {
     // `org` (the tenant param) shadows the `org.*` package root here
     import _root_.org.apache.hadoop.fs.Path
-    val fs = new Path(segDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val all = spark.read.parquet(segDir).filter(col("freq") === baseFreqMs)
-    require(!all.schema.fieldNames.contains("org") || org.isDefined,
-      "multi-tenant store: run rollup maintenance once per org")
-    val scopedOrg = org.filter(_ => all.schema.fieldNames.contains("org"))
-      .map(o => all.filter(col("org") === o)).getOrElse(all)
-    val scoped = sinceDateint
-      .map(d0 => scopedOrg.filter(col("dateint") >= d0)).getOrElse(scopedOrg)
-    // ONE small job for the work list: touched days + the base tier's
-    // high-water timestamp (the watermark claim). Bounded by day count.
-    val dayRows = scoped.groupBy(col("dateint"))
-      .agg(max(col("chq_timestamp")).as("mx")).collect()
+    if (rollupTiers.isEmpty) return
+    val dayRows = base.groupBy(col("dateint"))
+      .agg(max(col("chq_timestamp"))).collect()
     if (dayRows.isEmpty) return
     val days = dayRows.map(_.getInt(0)).sorted
     val maxTs = dayRows.map(_.getLong(1)).max
-    // partition/lineage keys must not reach rollup() as label columns
-    val dropCols = Seq("dateint", "freq", "ingest_batch", "org")
-      .filter(scoped.schema.fieldNames.contains)
-    for (tier <- rollupTiers; d <- days) {
-      val rolled = rollup(
-        scoped.filter(col("dateint") === d).drop(dropCols: _*), tier)
-      val pdir = org.map(o => s"$segDir/org=$o").getOrElse(segDir) +
-        s"/dateint=$d/freq=$tier"
-      fs.delete(new Path(pdir), true)
-      Segments.writeMetricSegments(rolled, segDir, org = org)
+    // one scan per day, unioned: each day's files are packed into tasks as
+    // a rebuild of that day alone packs them, and the float sums follow
+    // the task's row order (the sketch aggregate's sort-based fallback
+    // regroups rows per task), so a day's rolled bits never depend on
+    // which other days share the rebuild. Partition/lineage keys must not
+    // reach rollup() as label columns; an unscoped frame's `org` stays a
+    // label, as it always has.
+    val rows = days.map(d => base.filter(col("dateint") === d)).reduce(_ union _)
+      .drop((Seq("dateint", "freq", "ingest_batch") ++ org.map(_ => "org")): _*)
+    val fs = new Path(segDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    for (tier <- rollupTiers) {
+      val dir = root(tier)
+      val orgDir = org.fold(dir)(o => s"$dir/org=$o")
+      days.foreach(d => fs.delete(new Path(s"$orgDir/dateint=$d/freq=$tier"), true))
+      Segments.writeMetricSegments(rollup(rows, tier), dir, org = org)
     }
-    // stamp per tier; tierPartitions re-lists post-write (the segment
-    // writer invalidated the metadata cache)
+    // tierPartitions re-lists post-write (the segment writer invalidated
+    // the metadata cache)
     val pairs = graft.api.TierFreshness.tierPartitions(spark, segDir, org)
-    val olderBaseDays = pairs
-      .collect { case (d, f) if f == baseFreqMs &&
-        sinceDateint.exists(d < _) => d }
+    val olderBaseDays = pairs.collect {
+      case (d, f) if f == baseFreqMs && d < days.head => d }
     rollupTiers.foreach { t =>
       if (olderBaseDays.forall(bd => pairs.contains((bd, t))))
         graft.api.TierFreshness.writeWatermark(spark, segDir, t, maxTs + 1L)

@@ -63,6 +63,13 @@ object StreamingIngest {
     * exactly-once at the batch level — and appends an idempotent
     * (batch_id, rows, max_ts) record to a commit log, the queryable
     * offset-tracker analog.
+    *
+    * With `rollupTiers`, every (tier, UTC day) the batch touched is then
+    * rebuilt from the on-disk base tier under `ingest_batch=rollup-<tier>/`
+    * by [[graft.ingest.MetricsPreAgg.rebuildTiers]], the rebuild batch
+    * maintenance runs too. A replayed batch rewrites its base dir first
+    * and re-rebuilds the same days, so the rollups converge to the base
+    * tier whatever the crash/replay interleaving.
     */
   def segmentWriteStream(rawStream: DataFrame, build: DataFrame => DataFrame,
       segDir: String, commitDir: String, checkpointDir: String,
@@ -91,12 +98,24 @@ object StreamingIngest {
             // re-registers its rewritten files; stale rows are lossless)
             if (indexAfterBatch)
               graft.ingest.FingerprintIndex.indexNewFiles(spark, segDir)
-            // coalesce: an all-null chq_timestamp batch must not NPE after
-            // segments were written but before the commit record lands
-            val maxTs = cooked.agg(coalesce(max(col("chq_timestamp")), lit(-1L)))
-              .head().getLong(0)
-            maintainRollups(spark, cooked, segDir, rollupTiers, baseFreqMs,
-              maxTs)
+            // one job for the commit record and the rollup work list; an
+            // all-null chq_timestamp batch has no day and max_ts -1
+            val dayMax = cooked
+              .groupBy(graft.ingest.Segments.dateint(col("chq_timestamp")))
+              .agg(max(col("chq_timestamp"))).collect().filterNot(_.isNullAt(0))
+            val maxTs = if (dayMax.isEmpty) -1L else dayMax.map(_.getLong(1)).max
+            if (rollupTiers.nonEmpty && dayMax.nonEmpty) {
+              val days = dayMax.map(_.getInt(0))
+              // a store written by the old per-(tier, day) dir naming
+              // must never double-count after an upgrade
+              for (t <- rollupTiers; d <- days)
+                fs.delete(new org.apache.hadoop.fs.Path(
+                  s"$segDir/ingest_batch=rollup-$t-$d"), true)
+              graft.ingest.MetricsPreAgg.rebuildTiers(spark, segDir,
+                spark.read.parquet(segDir).filter(col("freq") === baseFreqMs &&
+                  col("dateint").isin(days.toSeq: _*)),
+                rollupTiers, baseFreqMs, None, t => s"$segDir/ingest_batch=rollup-$t")
+            }
             java.nio.file.Files.writeString(
               java.nio.file.Paths.get(commitDir, f"batch_$batchId%09d.json"),
               s"""{"batch_id":$batchId,"rows":$n,"max_ts":$maxTs}""")
@@ -106,69 +125,6 @@ object StreamingIngest {
       }
       .start()
   }
-
-  /** Incremental rollup maintenance inside the commit loop — the
-    * streaming counterpart of [[graft.ingest.MetricsPreAgg.rollupChain]]
-    * (reference rolls 10s→60s→…→3600s as segments arrive,
-    * metric_rollup_processor.go:571-708). After a batch lands its base
-    * tier, every (tier, UTC day) the batch TOUCHED is rebuilt from the
-    * on-disk base tier and swapped in as one idempotent whole-day unit:
-    * the day's `dateint=` partition under `ingest_batch=rollup-<tier>/`
-    * is deleted, then ONE dynamic-partition write per tier lands every
-    * touched day (r18: the previous form ran one read+write JOB per
-    * (tier, day) — a 3-batch 7-day stream paid 21 write jobs where 3
-    * suffice; the rewrite unit and the delete-then-rewrite exactly-once
-    * contract are unchanged, only the job granularity is per tier now).
-    * One window DID widen with that consolidation (r18 ADVICE): all
-    * touched days of a tier are deleted before the single per-tier
-    * write, so a crash mid-write leaves every touched day of that tier
-    * missing — under a previously-written watermark that still claims
-    * them — until batch replay re-lands them; the old per-day loop
-    * bounded that transient gap to one (tier, day). The atomicity unit
-    * is per (tier, batch), the CONVERGENCE unit stays per (tier, day).
-    * Rebuilding whole tier-days keeps the directory count bounded (days,
-    * not buckets) while the rebuild read stays dateint-partition-pruned
-    * to the touched days; every chain tier divides 24 h, so a coarse
-    * bucket never straddles a rebuilt day. A replayed batch rewrites its
-    * base dir first and then re-rebuilds the same days, so rollups
-    * converge to the base tier regardless of crash/replay interleaving.
-    */
-  private def maintainRollups(spark: SparkSession, cooked: DataFrame,
-      segDir: String, rollupTiers: Seq[Long], baseFreqMs: Long,
-      batchMaxTs: Long): Unit =
-    if (rollupTiers.nonEmpty) {
-      val days = cooked
-        .select(graft.ingest.Segments.dateint(col("chq_timestamp")).as("d"))
-        .distinct().collect().map(_.getInt(0)).sorted
-      val fs = new org.apache.hadoop.fs.Path(segDir)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      for (tier <- rollupTiers) {
-        val baseDays = spark.read.parquet(segDir)
-          .filter(col("freq") === baseFreqMs &&
-            col("dateint").isin(days.map(Integer.valueOf): _*))
-          .drop("dateint", "freq", "ingest_batch")
-        val rolled = graft.ingest.MetricsPreAgg.rollup(baseDays, tier)
-        val root = s"$segDir/ingest_batch=rollup-$tier"
-        days.foreach { d =>
-          // whole-(tier, day) delete-then-rewrite unit, as before; also
-          // clear a legacy per-day dir so a store written by the old
-          // naming never double-counts after an upgrade
-          fs.delete(new org.apache.hadoop.fs.Path(s"$root/dateint=$d"), true)
-          fs.delete(new org.apache.hadoop.fs.Path(
-            s"$segDir/ingest_batch=rollup-$tier-$d"), true)
-        }
-        graft.ingest.Segments.writeMetricSegments(rolled, root)
-      }
-      // the rebuild loop re-rolled every day this batch touched from the
-      // just-landed base tier, so each tier now reflects every base row
-      // with ts <= batchMaxTs — record the rolled-through watermark the
-      // query/discovery doors refine their freshness bound with
-      // ([[graft.api.TierFreshness]]). Monotonic write: an out-of-order
-      // (all-late-data) batch never regresses the claim.
-      if (batchMaxTs >= 0)
-        rollupTiers.foreach(t => graft.api.TierFreshness
-          .writeWatermark(spark, segDir, t, batchMaxTs + 1))
-    }
 
   /** run a stream from a parquet directory to completion (AvailableNow),
     * materializing into an in-memory table; returns the result frame.

@@ -262,4 +262,14 @@ class ScanCacheSpec extends AnyFunSuite {
       assert(TierFreshness.metadataReadCount == reads)
     } finally spark.conf.unset(ScanCache.TtlKey)
   }
+
+  test("the swap-lock table keeps its size however many dirs are listed") {
+    val root = java.nio.file.Files.createTempDirectory("graft_scan_locks_")
+      .toString
+    val locks = ScanCache.swapLockCount
+    (0 until 1000).foreach(i =>
+      assert(ScanCache.tryRead(spark, s"$root/absent-$i").isEmpty))
+    assert(ScanCache.swapLockCount == locks,
+      s"${ScanCache.swapLockCount} swap locks after 1000 dirs, $locks before")
+  }
 }

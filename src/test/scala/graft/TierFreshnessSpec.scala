@@ -21,15 +21,17 @@ class TierFreshnessSpec extends AnyFunSuite {
   private val Day = 86400000L
   private val Day0 = 1704067200000L // 2024-01-01T00:00:00Z
 
-  /** synthetic 5-day metric events: 4 series, one sample/10 min each */
-  private def events5d = {
+  /** synthetic metric events: 4 series, one sample/10 min each */
+  private def events(days: Int) = {
     import spark.implicits._
-    (0 until 5 * 144).flatMap { slot =>
+    (0 until days * 144).flatMap { slot =>
       (0 until 4).map { k =>
         (Day0 + slot * 600000L, s"svc-$k", (slot % 30 + k).toDouble)
       }
     }.toDF("ts_ms", "attr_svc", "v")
   }
+
+  private def events5d = events(5)
 
   private def preAgg(df: org.apache.spark.sql.DataFrame) =
     MetricsPreAgg.preAggregate(df, col("ts_ms"), lit("m_fresh"), col("v"),
@@ -345,6 +347,85 @@ class TierFreshnessSpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getString(1)) ->
         math.rint(r.getDouble(2) * 1e6) / 1e6).toMap
     assert(strict == want)
+  }
+
+  test("batch rollup maintenance runs as many Spark jobs on a 6-day store " +
+      "as on a 2-day one, and writes one partition per (tier, day)") {
+    val tiers = Seq(300000L, 3600000L)
+    def maintain(days: Int): (Long, Int) = {
+      val dir = java.nio.file.Files
+        .createTempDirectory(s"graft_maint_jobs_${days}d_").toString
+      Segments.writeMetricSegments(preAgg(events(days)), dir)
+      val tc = new TaskCounters
+      spark.sparkContext.addSparkListener(tc)
+      try {
+        tc.quietCpuNs(); tc.reset()
+        MetricsPreAgg.maintainRollupsBatch(spark, dir, rollupTiers = tiers)
+        tc.quietCpuNs()
+      } finally spark.sparkContext.removeSparkListener(tc)
+      val parts = TierFreshness.tierPartitions(spark, dir)
+        .count { case (_, f) => tiers.contains(f) }
+      (tc.jobs.get, parts)
+    }
+    val (jobs2, parts2) = maintain(2)
+    val (jobs6, parts6) = maintain(6)
+    assert(parts2 == tiers.size * 2 && parts6 == tiers.size * 6,
+      s"tier partitions $parts2 / $parts6")
+    assert(jobs2 > 0 && jobs6 == jobs2, s"Spark jobs: 2 days $jobs2, 6 days $jobs6")
+  }
+
+  test("batch and streaming rollup rebuilds of the same base rows agree: " +
+      "every rollup column bit-exact, sketches equal decoded, one watermark") {
+    val tiers = Seq(300000L, 3600000L)
+    // non-integral values, so a float sum taken in another order would show
+    val base = MetricsPreAgg.preAggregate(events(3), col("ts_ms"), lit("m_fresh"),
+      col("v") * 0.37 + 0.013, Seq("attr_svc" -> col("attr_svc")), freqMs = 10000L)
+    def tmp(p: String) = java.nio.file.Files.createTempDirectory(p).toString
+    val batchDir = tmp("graft_rebuild_batch_")
+    Segments.writeMetricSegments(base, batchDir)
+    MetricsPreAgg.maintainRollupsBatch(spark, batchDir, rollupTiers = tiers)
+    // the same base rows streamed in two micro-batches: days 1-2, then day 3
+    val in = tmp("graft_rebuild_in_")
+    base.filter(col("chq_timestamp") < Day0 + 2 * Day).coalesce(1)
+      .write.mode("append").parquet(in)
+    base.filter(col("chq_timestamp") >= Day0 + 2 * Day).coalesce(1)
+      .write.mode("append").parquet(in)
+    val streamDir = tmp("graft_rebuild_stream_")
+    graft.streaming.StreamingIngest.segmentWriteStream(
+      spark.readStream.schema(base.schema).option("maxFilesPerTrigger", "1")
+        .parquet(in),
+      identity, streamDir, tmp("graft_rebuild_commit_"), tmp("graft_rebuild_ckpt_"),
+      rollupTiers = tiers).awaitTermination()
+    val qs = Seq(0.25, 0.5, 0.9, 0.99)
+    // every non-sketch column (doubles as raw bits), plus the decoded
+    // sketch's count, min, max and quantiles; its exact `sum` double
+    // depends on the merge order
+    def rolled(dir: String, t: Long): Seq[String] = {
+      val df = spark.read.parquet(dir).filter(col("freq") === t)
+        .drop("dateint", "freq", "ingest_batch")
+      val cols = df.columns.filterNot(_ == "chq_sketch").sorted
+      df.select((cols :+ "chq_sketch").map(col): _*).collect().map { r =>
+        val vals = cols.indices.map(i => r.get(i) match {
+          case d: Double => java.lang.Double.doubleToRawLongBits(d)
+          case v => v
+        })
+        val sk = graft.sketch.DDSketch.deserialize(r.getAs[Array[Byte]](cols.length))
+        (vals ++ (Seq(sk.count.toDouble, sk.min, sk.max) ++ qs.map(sk.quantile))
+          .map(java.lang.Double.doubleToRawLongBits)).mkString(",")
+      }.toSeq.sorted
+    }
+    tiers.foreach { t =>
+      val want = rolled(batchDir, t)
+      val buckets = base.select(col("chq_timestamp") - col("chq_timestamp") % t,
+        col("chq_tid")).distinct().count()
+      assert(want.size == buckets, s"tier $t rows")
+      assert(rolled(streamDir, t) == want, s"tier $t")
+    }
+    val lastTs = base.agg(max(col("chq_timestamp"))).head().getLong(0)
+    tiers.foreach { t =>
+      assert(TierFreshness.readWatermark(spark, batchDir, t).contains(lastTs + 1L))
+      assert(TierFreshness.readWatermark(spark, streamDir, t).contains(lastTs + 1L))
+    }
   }
 
   test("metadata cache: repeated tier plans cost zero extra filesystem " +
