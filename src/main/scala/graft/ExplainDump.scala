@@ -1,8 +1,12 @@
 package graft
 
+import org.apache.spark.sql.graftshim.Codegen
+
 /** Dev/measurement tool for the optimization rounds (guide §1): for each
   * named catalog query, write `.explain("formatted")` to a file and
-  * optionally time one noop-sink run with job/stage/task counts.
+  * optionally time one noop-sink run with job/stage/task counts and the
+  * classes it compiled (`compiles=`; the warm attempt of a shape the cold
+  * attempt already compiled should read 0).
   *
   * Usage:
   *   tools/run.sh graft.ExplainDump <sfDir> <outDir> [prefixes] [--run]
@@ -40,6 +44,7 @@ object ExplainDump {
           // mirrors the bench's min-of-2 methodology
           fn(spark, sfDir).write.format("noop").mode("overwrite").save()
           tc.reset()
+          val c0 = Codegen.compiles()
           val t0 = System.nanoTime()
           val df2 = fn(spark, sfDir)
           val tBuild = System.nanoTime()
@@ -47,11 +52,13 @@ object ExplainDump {
           val tPlan = System.nanoTime()
           df2.write.format("noop").mode("overwrite").save()
           val tEnd = System.nanoTime()
+          val compiles = Codegen.compiles() - c0
           val cpu = tc.quietCpuNs() / 1e9 // async listener events drained
           println(f"[probe] $name%-32s wall=${(tEnd - t0) / 1e9}%7.3f cpu=$cpu%7.3f " +
             f"build=${(tBuild - t0) / 1e9}%6.3f plan=${(tPlan - tBuild) / 1e9}%6.3f " +
             f"exec=${(tEnd - tPlan) / 1e9}%6.3f " +
-            f"jobs=${tc.jobs.get}%3d tasks=${tc.tasks.get}%5d maxTask=${tc.maxTaskMs.get}%6dms")
+            f"jobs=${tc.jobs.get}%3d tasks=${tc.tasks.get}%5d maxTask=${tc.maxTaskMs.get}%6dms " +
+            f"compiles=$compiles%d")
         } else println(s"[probe] $name explained")
       } catch { case e: Throwable =>
         println(s"[probe] $name FAILED: ${e.getMessage}")

@@ -11,7 +11,25 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *  - nanosAsLong so parquet TIMESTAMP(NANOS) inputs (events.ts) load as
   *    LongType ns instead of failing (Spark 4 has no native ns type),
   *  - AQE on: runtime shuffle-partition coalescing + skew-join splitting,
-  *    which is what makes the same plans survive a 100x scale-up.
+  *    which is what makes the same plans survive a 100x scale-up,
+  *  - a generated-class cache that holds the served working set
+  *    (`spark.sql.codegen.cache.maxEntries`, a static conf, so it is set
+  *    here, before the session exists). Spark's default of 100 entries is
+  *    smaller than the cycle a dashboard workload repeats: one round of
+  *    the benchmark's 9 `dash_recent` templates uses ~155 distinct
+  *    classes, one `history_scan` round ~130, set-up plus warm-up
+  *    compiles ~300, and an LRU cache smaller than a cyclic pattern
+  *    misses on every lookup. At 100 the measured phase recompiled 613
+  *    classes in 36 `dash_recent` requests (~25–30 ms of Janino each) for
+  *    requests identical to the warm-up; at 1024 it compiled 0. The
+  *    cache is keyed by the generated source, which inlines a filter's
+  *    numeric literals, so a request whose time window moved still
+  *    compiles its own classes. `spark.sql.codegen.useIdInClassName=false`
+  *    keeps the whole-stage id out of the key: AQE numbers codegen stages
+  *    in the order it creates query stages, which follows which stage
+  *    finished first, so a join of independent stages could rename its
+  *    classes between two runs of one query (a warm `pq_scalar_binop`
+  *    recompiled 4 classes).
   */
 object GraftSession {
   def builder(master: String, cores: Int): SparkSession.Builder =
@@ -41,6 +59,8 @@ object GraftSession {
       // observed once under a concurrent bench + verify run
       .config("spark.sql.broadcastTimeout", "1200")
       .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
+      .config("spark.sql.codegen.cache.maxEntries", "1024")
+      .config("spark.sql.codegen.useIdInClassName", "false")
 
   def local(cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession = {
     val s = builder(s"local[$cores]", cores).getOrCreate()

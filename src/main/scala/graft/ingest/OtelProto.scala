@@ -67,15 +67,6 @@ object OtelProto {
       (v >>> 1) ^ -(v & 1L)
     }
 
-    def readFixed32(): Int = {
-      bounds(4)
-      var out = 0
-      var i = 0
-      while (i < 4) { out |= (buf(pos + i) & 0xff) << (8 * i); i += 1 }
-      pos += 4
-      out
-    }
-
     /** validated length prefix: rejects negative (int-wrapped) and
       * over-long lengths before any cursor movement
       */

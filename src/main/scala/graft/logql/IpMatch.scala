@@ -47,29 +47,6 @@ object IpMatch {
   /** the dotted-quad shape both engines extract and parse */
   val Ipv4Regex = "\\b\\d{1,3}\\.\\d{1,3}\\.\\d{1,3}\\.\\d{1,3}\\b"
 
-  /** Fold a 4-octet split to its uint32 value in ONE pass, collapsing to
-    * -1 (never inside any [lo, hi] ⊆ [0, 2³²)) on an out-of-range octet —
-    * shape (exactly four 1-3 digit groups) must already be guaranteed by
-    * the caller's regex. One `aggregate` per candidate and nothing else:
-    * higher-order functions are CodegenFallback with no CSE, so every
-    * extra HOF/split/rlike in the lambda multiplies per-row interpreted
-    * work (the old form ran rlike + split twice + a nested exists per
-    * candidate — 13.6 s for lq_ip_filter at sf0.1 on a loaded host).
-    */
-  private def quadValue(quad: Column): Column =
-    aggregate(split(quad, "\\."), lit(0L), (a, o) =>
-      when(a < 0L || o.cast("long") > 255L, lit(-1L))
-        .otherwise(a * 256L + o.cast("long")))
-
-  /** dotted quad → uint32 as long; null when not a valid IPv4 (shape or
-    * octet range) — null propagates to a non-match through `between`
-    */
-  def ipToLong(c: Column): Column = {
-    val shaped = c.rlike("^\\d{1,3}\\.\\d{1,3}\\.\\d{1,3}\\.\\d{1,3}$")
-    val v = quadValue(c)
-    when(shaped && v >= 0L, v)
-  }
-
   /** Regex matching EXACTLY the dotted quads whose uint32 value lies in
     * [lo, hi], compiled at PLAN time — so the row-side test is ONE
     * codegen'd compiled-regex scan with no higher-order function at all

@@ -156,10 +156,6 @@ object Similarity {
     (0 until nPlanes).map(b => planeBit(emb, planeOffset + b, dims) * lit(1 << b))
       .reduce((a, b) => a + b)
 
-  /** nPlanes-bit LSH bucket id for an embedding of known dimensionality */
-  def lshBucket(emb: Column, nPlanes: Int = 8, dims: Int = 64): Column =
-    lshBucketAt(emb, 0, nPlanes, dims)
-
   /** Plane count for a corpus of `n` vectors targeting ~`occupancy`
     * vectors per bucket: smallest p with 2^p ≥ n/occupancy, clamped to
     * [minPlanes, maxPlanes]. Expected candidate volume is then

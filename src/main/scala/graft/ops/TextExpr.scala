@@ -666,9 +666,10 @@ final class BigramLmModel(
   * acc + v), so every intermediate double is bit-equal; mean =
   * sum / n_bigrams. Docs with fewer than 2 tokens return null (the
   * inner-join form emitted no row for them -- callers filter nulls).
-  * Every (w1,w2) and w1 a document produces is PRESENT in the model by
-  * construction (the counts come from the same corpus), so lookups
-  * never miss.
+  * The counts come from the same corpus, so a document's (w1,w2) and w1
+  * are normally in the model. A source that changes between the count
+  * jobs and the scoring job can still miss; a miss counts 0
+  * (`getOrDefault`), which Laplace smoothing defines for unseen events.
   */
 case class BigramSurprisalScore(child: Expression,
     model: org.apache.spark.broadcast.Broadcast[BigramLmModel])
@@ -710,8 +711,8 @@ object BigramSurprisalScore {
     var sum = 0.0
     var i = 0
     while (i < n) {
-      val c2 = m.big.get(words(i) + " " + words(i + 1))
-      val c1 = m.uni.get(words(i))
+      val c2 = m.big.getOrDefault(words(i) + " " + words(i + 1), 0L)
+      val c1 = m.uni.getOrDefault(words(i), 0L)
       sum += -math.log((c2 + 1).toDouble / (c1 + v).toDouble)
       i += 1
     }
