@@ -73,18 +73,9 @@ object AggFiles {
   def countsFromAggFile(spark: SparkSession, segDir: String, aggFields: Seq[String],
       stepMs: Long, startMs: Long, endMs: Long,
       matchers: List[graft.promql.Matcher], groupBy: Seq[String]): DataFrame = {
-    import graft.promql.MatchOp
     var df = ScanCache.read(spark, aggDir(segDir, aggFields))
       .filter(col("chq_timestamp") >= startMs && col("chq_timestamp") < endMs)
-    matchers.foreach { m =>
-      val c = coalesce(graft.GraftSession.safeCol(df, m.label).cast("string"), lit(""))
-      df = df.filter(m.op match {
-        case MatchOp.Eq  => c === m.value
-        case MatchOp.Ne  => c =!= m.value
-        case MatchOp.Re  => c.rlike("^(?:" + m.value + ")$")
-        case MatchOp.Nre => !c.rlike("^(?:" + m.value + ")$")
-      })
-    }
+    matchers.foreach { m => df = df.filter(graft.promql.Engine.matcherCond(df, m)) }
     df.groupBy(((col("chq_timestamp") - col("chq_timestamp") % stepMs).as("ts") +:
         groupBy.map(col)): _*)
       .agg(sum(col("agg_count")).as("value"))
@@ -96,18 +87,9 @@ object AggFiles {
   def countsFromRaw(spark: SparkSession, segDir: String, stepMs: Long,
       startMs: Long, endMs: Long, matchers: List[graft.promql.Matcher],
       groupBy: Seq[String]): DataFrame = {
-    import graft.promql.MatchOp
     var df = spark.read.option("mergeSchema", "true").parquet(segDir)
       .filter(col("chq_timestamp") >= startMs && col("chq_timestamp") < endMs)
-    matchers.foreach { m =>
-      val c = coalesce(graft.GraftSession.safeCol(df, m.label).cast("string"), lit(""))
-      df = df.filter(m.op match {
-        case MatchOp.Eq  => c === m.value
-        case MatchOp.Ne  => c =!= m.value
-        case MatchOp.Re  => c.rlike("^(?:" + m.value + ")$")
-        case MatchOp.Nre => !c.rlike("^(?:" + m.value + ")$")
-      })
-    }
+    matchers.foreach { m => df = df.filter(graft.promql.Engine.matcherCond(df, m)) }
     df.groupBy(((col("chq_timestamp") - col("chq_timestamp") % stepMs).as("ts") +:
         groupBy.map(col)): _*)
       .agg(count(lit(1)).cast("double").as("value"))

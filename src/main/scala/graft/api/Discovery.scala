@@ -119,17 +119,7 @@ object Discovery {
   def series(df: DataFrame, labels: Seq[String], startMs: Long, endMs: Long,
       matchers: List[graft.promql.Matcher] = Nil, limit: Int = 10000): DataFrame = {
     var timed = df.filter(col("chq_timestamp") >= startMs && col("chq_timestamp") < endMs)
-    matchers.foreach { m =>
-      val c = if (timed.schema.fieldNames.contains(m.label))
-        coalesce(qcol(timed, m.label).cast("string"), lit("")) else lit("")
-      import graft.promql.MatchOp
-      timed = timed.filter(m.op match {
-        case MatchOp.Eq  => c === m.value
-        case MatchOp.Ne  => c =!= m.value
-        case MatchOp.Re  => c.rlike("^(?:" + m.value + ")$")
-        case MatchOp.Nre => !c.rlike("^(?:" + m.value + ")$")
-      })
-    }
+    matchers.foreach { m => timed = timed.filter(graft.promql.Engine.matcherCond(timed, m)) }
     timed.groupBy(labels.map(l => qcol(timed, l)): _*)
       .agg(count(lit(1)).as("n"))
       .orderBy(col("n").desc +: labels.map(l => qcol(timed, l).asc): _*)

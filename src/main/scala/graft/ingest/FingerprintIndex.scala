@@ -1,6 +1,6 @@
 package graft.ingest
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, DataFrameWriter, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Fingerprint skip-index — the Spark-native re-expression of the
@@ -139,14 +139,10 @@ object FingerprintIndex {
     */
   def buildLogIndex(spark: SparkSession, segDir: String,
       maxTrigramsPerFile: Long = MaxTrigramsPerFile): Unit = {
-    indexRows(spark.read.option("mergeSchema", "true").parquet(segDir),
-      maxTrigramsPerFile)
-      // overwrite semantics: a full rebuild always describes the current
-      // dir contents
-      .write.mode("overwrite")
-      .option("compression", "zstd")
-      .option("parquet.bloom.filter.enabled#fingerprint", "true")
-      .parquet(indexPath(segDir))
+    // overwrite semantics: a full rebuild always describes the current
+    // dir contents
+    indexWriter(indexRows(spark.read.option("mergeSchema", "true").parquet(segDir),
+      maxTrigramsPerFile), "overwrite").parquet(indexPath(segDir))
     // exclusion probes cache the index read (and its absence)
     graft.api.ScanCache.invalidate(indexPath(segDir))
   }
@@ -173,11 +169,7 @@ object FingerprintIndex {
     if (newFiles.isEmpty) return 0L
     val df = spark.read.option("mergeSchema", "true")
       .option("basePath", segDir).parquet(newFiles: _*)
-    indexRows(df, maxTrigramsPerFile)
-      .write.mode("append")
-      .option("compression", "zstd")
-      .option("parquet.bloom.filter.enabled#fingerprint", "true")
-      .parquet(indexPath(segDir))
+    indexWriter(indexRows(df, maxTrigramsPerFile), "append").parquet(indexPath(segDir))
     graft.api.ScanCache.invalidate(indexPath(segDir))
     newFiles.length.toLong
   }
@@ -211,16 +203,21 @@ object FingerprintIndex {
     val stale = spark.read.parquet(idxDir)
       .join(liveDf, Seq("file"), "left_anti").count()
     graft.ingest.Segments.compactWithSwap(spark, idxDir) { df =>
-      df.join(liveDf, Seq("file"), "left_semi")
+      indexWriter(df.join(liveDf, Seq("file"), "left_semi")
         .distinct()
         .repartitionByRange(math.max(1, targetFiles), col("fingerprint"))
-        .sortWithinPartitions(col("fingerprint"))
-        .write.mode("overwrite")
-        .option("compression", "zstd")
-        .option("parquet.bloom.filter.enabled#fingerprint", "true")
+        .sortWithinPartitions(col("fingerprint")), "overwrite")
     }
     stale
   }
+
+  /** the one index-file writer: ZSTD, with a bloom filter on the
+    * fingerprint column for the point lookup
+    */
+  private def indexWriter(rows: DataFrame, mode: String): DataFrameWriter[Row] =
+    rows.write.mode(mode)
+      .option("compression", "zstd")
+      .option("parquet.bloom.filter.enabled#fingerprint", "true")
 
   /** the (file, fingerprint) rows for one frame of segment data */
   private def indexRows(df: DataFrame, maxTrigramsPerFile: Long): DataFrame = {

@@ -651,11 +651,10 @@ object Segments {
 
   /** shared compaction skeleton: recover any interrupted swap, re-read with
     * schema union, let the caller write the sorted rewrite to a temp dir,
-    * then double-rename with rollback
+    * then double-rename with rollback. private[graft]: the fingerprint-index
+    * compactor ([[FingerprintIndex.compactIndex]]) reuses the same
+    * staged-swap contract over the index directory
     */
-  /** private[graft]: the IVF index compactor ([[graft.ops.Similarity
-    * .compactIvfIndex]]) reuses the same staged-swap contract over its
-    * lists directory */
   private[graft] def compactWithSwap(spark: SparkSession, dir: String)(
       write: DataFrame => DataFrameWriter[Row]): DataFrame = {
     val tmp = dir.stripSuffix("/") + ".compact_tmp"

@@ -1,18 +1,27 @@
 package graft.ingest
 
 import java.util.zip.GZIPInputStream
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.collection.mutable.ListBuffer
+import scala.reflect.runtime.universe.TypeTag
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Minimal OTel protobuf decoder for `.binpb[.gz]` ingest.
   *
   * Hand-rolled from the PUBLIC protobuf wire format (varint / fixed64 /
   * length-delimited / fixed32) + the public opentelemetry-proto field
-  * numbers for LogsData and TracesData. Role of the reference's
-  * `otel_logs_read` / proto readers
+  * numbers for LogsData, MetricsData and TracesData. Role of the
+  * reference's `otel_logs_read` / proto readers
   * (/root/reference/internal/filereader/ingest_proto_logs.go,
   * internal/metricsprocessing/logs_ingest_duckdb.go:232) — reimplemented
   * from the wire spec, not translated.
+  *
+  * The three share one Resource → Scope → record nesting, decoded by ONE
+  * envelope walk ([[walk]]; metrics add one Metric walk,
+  * [[walkMetrics]]). Like any protobuf parser, it accepts a message's
+  * fields in any order: a record gets its own resource attributes, scope
+  * name and scope attributes whether those fields come before or after
+  * it.
   *
   * Attribute values follow the reference's coercion rule: everything
   * stringifies, names normalize via [[Flatten.normalizeFieldName]].
@@ -124,7 +133,7 @@ object OtelProto {
         case 4 => out = java.lang.Double.longBitsToDouble(r.readFixed64()).toString
         case 5 => // array_value { repeated AnyValue values = 1 }
           val inner = r.readMessage()
-          val parts = scala.collection.mutable.ListBuffer[String]()
+          val parts = ListBuffer[String]()
           while (inner.hasNext) {
             val (f2, w2) = inner.readTag()
             if (f2 == 1 && w2 == 2) parts += anyValue(inner.readMessage())
@@ -134,7 +143,7 @@ object OtelProto {
         case 6 => // kvlist_value { repeated KeyValue values = 1 } — entries
           // are KeyValue messages, NOT AnyValue (distinct parse path)
           val inner = r.readMessage()
-          val parts = scala.collection.mutable.ListBuffer[String]()
+          val parts = ListBuffer[String]()
           while (inner.hasNext) {
             val (f2, w2) = inner.readTag()
             if (f2 == 1 && w2 == 2) {
@@ -165,6 +174,107 @@ object OtelProto {
     (if (k == null) "" else Flatten.normalizeFieldName(k), v)
   }
 
+  // ---- the envelope walk -----------------------------------------------------
+
+  /** what a record inherits from its enclosing Resource* and Scope*
+    * messages (attribute names normalized)
+    */
+  private final case class Envelope(
+      resourceAttrs: Map[String, String],
+      scopeName: String,
+      scopeAttrs: Map[String, String])
+
+  /** LogsData / MetricsData / TracesData → every record with its envelope,
+    * in document order. All three share one wire shape: repeated
+    * Resource{Logs,Metrics,Spans}=1 { resource=1 {attributes=1},
+    * scope_*=2 }, each Scope* { scope=1 {name=1, attributes=3},
+    * records=2 }. `record` decodes one record message into 0..n values.
+    * A scope's records take their envelope when the Resource* message
+    * closes, so the resource and scope fields may come before or after
+    * the records they describe.
+    */
+  private def walk[R](data: Array[Byte])(record: Reader => Iterable[R]): Seq[(Envelope, R)] = {
+    val out = ListBuffer[(Envelope, R)]()
+    val root = new Reader(data, 0, data.length)
+    while (root.hasNext) {
+      val (f, w) = root.readTag()
+      if (f == 1 && w == 2) {
+        val rs = root.readMessage()
+        var resAttrs = Map.empty[String, String]
+        val scopes = ListBuffer[(String, Map[String, String], Iterable[R])]()
+        while (rs.hasNext) {
+          val (f2, w2) = rs.readTag()
+          f2 match {
+            case 1 => // resource { attributes=1 }
+              val res = rs.readMessage()
+              while (res.hasNext) {
+                val (f3, w3) = res.readTag()
+                if (f3 == 1 && w3 == 2) resAttrs += keyValue(res.readMessage())
+                else res.skip(w3)
+              }
+            case 2 => // scope_* { scope=1, records=2 }
+              val ss = rs.readMessage()
+              var scopeName = ""
+              var scopeAttrs = Map.empty[String, String]
+              val records = ListBuffer[R]()
+              while (ss.hasNext) {
+                val (f3, w3) = ss.readTag()
+                f3 match {
+                  case 1 => // scope { name=1, attributes=3 }
+                    val sc = ss.readMessage()
+                    while (sc.hasNext) {
+                      val (f4, w4) = sc.readTag()
+                      if (f4 == 1 && w4 == 2) scopeName = sc.readString()
+                      else if (f4 == 3 && w4 == 2) scopeAttrs += keyValue(sc.readMessage())
+                      else sc.skip(w4)
+                    }
+                  case 2 => records ++= record(ss.readMessage())
+                  case _ => ss.skip(w3)
+                }
+              }
+              scopes += ((scopeName, scopeAttrs, records))
+            case _ => rs.skip(w2)
+          }
+        }
+        for ((scopeName, scopeAttrs, records) <- scopes) {
+          val env = Envelope(resAttrs, scopeName, scopeAttrs)
+          records.foreach(r => out += ((env, r)))
+        }
+      } else root.skip(w)
+    }
+    out.toSeq
+  }
+
+  /** MetricsData → every datapoint of the Metric containers in `kinds`
+    * (gauge=5, sum=7, histogram=9, exponential_histogram=10, summary=11;
+    * each holds data_points=1), with its metric name, the sum's
+    * is_monotonic=3 and its envelope. Other containers are skipped
+    * unread. `point(kind, dp)` decodes one datapoint into 0..n values;
+    * the name attaches when the Metric closes, so its position does not
+    * matter.
+    */
+  private def walkMetrics[P](data: Array[Byte], kinds: Set[Int])(
+      point: (Int, Reader) => Iterable[P]): Seq[(Envelope, (String, Boolean, P))] =
+    walk(data) { m =>
+      var name = ""
+      var monotonic = false
+      val points = ListBuffer[P]()
+      while (m.hasNext) {
+        val (f, w) = m.readTag()
+        if (f == 1) name = m.readString()
+        else if (kinds(f) && w == 2) {
+          val c = m.readMessage()
+          while (c.hasNext) {
+            val (f2, w2) = c.readTag()
+            if (f2 == 1 && w2 == 2) points ++= point(f, c.readMessage())
+            else if (f == 7 && f2 == 3) monotonic = c.readVarint() != 0
+            else c.skip(w2)
+          }
+        } else m.skip(w)
+      }
+      points.map(p => (name, monotonic, p))
+    }
+
   // ---- LogsData --------------------------------------------------------------
 
   final case class OtelLog(
@@ -177,67 +287,30 @@ object OtelProto {
       scopeName: String,
       scopeAttrs: Map[String, String] = Map.empty)
 
-  def parseLogs(data: Array[Byte]): Seq[OtelLog] = {
-    val out = scala.collection.mutable.ListBuffer[OtelLog]()
-    val root = new Reader(data, 0, data.length)
-    while (root.hasNext) {
-      val (f, w) = root.readTag()
-      if (f == 1 && w == 2) { // resource_logs
-        val rl = root.readMessage()
-        var resAttrs = Map.empty[String, String]
-        val scopeLogs = scala.collection.mutable.ListBuffer[Reader]()
-        while (rl.hasNext) {
-          val (f2, w2) = rl.readTag()
-          f2 match {
-            case 1 => // resource { attributes=1 }
-              val res = rl.readMessage()
-              while (res.hasNext) {
-                val (f3, w3) = res.readTag()
-                if (f3 == 1 && w3 == 2) resAttrs += keyValue(res.readMessage())
-                else res.skip(w3)
-              }
-            case 2 => scopeLogs += rl.readMessage()
-            case _ => rl.skip(w2)
-          }
-        }
-        scopeLogs.foreach { sl =>
-          var scopeName = ""
-          var scopeAttrs = Map.empty[String, String]
-          while (sl.hasNext) {
-            val (f2, w2) = sl.readTag()
-            f2 match {
-              case 1 => // scope { name=1 }
-                val sc = sl.readMessage()
-                while (sc.hasNext) {
-                  val (f3, w3) = sc.readTag()
-                  if (f3 == 1 && w3 == 2) scopeName = sc.readString()
-                  else if (f3 == 3 && w3 == 2) scopeAttrs += keyValue(sc.readMessage())
-                  else sc.skip(w3)
-                }
-              case 2 => // log_records
-                val lr = sl.readMessage()
-                var t = 0L; var sevN = 0; var sevT = ""; var body = ""
-                var attrs = Map.empty[String, String]
-                while (lr.hasNext) {
-                  val (f3, w3) = lr.readTag()
-                  f3 match {
-                    case 1 => t = lr.readFixed64()
-                    case 2 => sevN = lr.readVarint().toInt
-                    case 3 => sevT = lr.readString()
-                    case 5 => body = anyValue(lr.readMessage())
-                    case 6 => attrs += keyValue(lr.readMessage())
-                    case _ => lr.skip(w3)
-                  }
-                }
-                out += OtelLog(t, sevN, sevT, body, attrs, resAttrs, scopeName, scopeAttrs)
-              case _ => sl.skip(w2)
-            }
-          }
-        }
-      } else root.skip(w)
+  /** LogRecord: time_unix_nano=1 (fixed64), severity_number=2,
+    * severity_text=3, body=5 (AnyValue), attributes=6
+    */
+  private def logRecord(r: Reader): OtelLog = {
+    var t = 0L; var sevN = 0; var sevT = ""; var body = ""
+    var attrs = Map.empty[String, String]
+    while (r.hasNext) {
+      val (f, w) = r.readTag()
+      f match {
+        case 1 => t = r.readFixed64()
+        case 2 => sevN = r.readVarint().toInt
+        case 3 => sevT = r.readString()
+        case 5 => body = anyValue(r.readMessage())
+        case 6 => attrs += keyValue(r.readMessage())
+        case _ => r.skip(w)
+      }
     }
-    out.toSeq
+    OtelLog(t, sevN, sevT, body, attrs, Map.empty, "")
   }
+
+  def parseLogs(data: Array[Byte]): Seq[OtelLog] =
+    walk(data)(r => Seq(logRecord(r))).map { case (e, l) =>
+      l.copy(resourceAttrs = e.resourceAttrs, scopeName = e.scopeName, scopeAttrs = e.scopeAttrs)
+    }
 
   // ---- MetricsData -----------------------------------------------------------
 
@@ -326,7 +399,7 @@ object OtelProto {
       : (Map[String, String], Seq[(Long, Double, String, String, Map[String, String])]) = {
     var attrs = Map.empty[String, String]
     val exs =
-      scala.collection.mutable.ListBuffer[(Long, Double, String, String, Map[String, String])]()
+      ListBuffer[(Long, Double, String, String, Map[String, String])]()
     while (r.hasNext) {
       val (f, w) = r.readTag()
       if (f == attrsField && w == 2) attrs += keyValue(r.readMessage())
@@ -357,8 +430,8 @@ object OtelProto {
   private def histogramDataPoint(r: Reader): OtelHistogram = {
     var t = 0L; var n = 0L; var s = 0.0
     var mn = Double.NaN; var mx = Double.NaN
-    val bc = scala.collection.mutable.ListBuffer[Long]()
-    val eb = scala.collection.mutable.ListBuffer[Double]()
+    val bc = ListBuffer[Long]()
+    val eb = ListBuffer[Double]()
     var attrs = Map.empty[String, String]
     while (r.hasNext) {
       val (f, w) = r.readTag()
@@ -406,7 +479,7 @@ object OtelProto {
     */
   private def summaryDataPoint(r: Reader): OtelSummary = {
     var t = 0L; var n = 0L; var s = 0.0
-    val qvs = scala.collection.mutable.ListBuffer[(Double, Double)]()
+    val qvs = ListBuffer[(Double, Double)]()
     var attrs = Map.empty[String, String]
     while (r.hasNext) {
       val (f, w) = r.readTag()
@@ -433,74 +506,11 @@ object OtelProto {
     OtelSummary(t, "", n, s, qvs.toSeq, attrs, Map.empty, "")
   }
 
-  def parseSummaries(data: Array[Byte]): Seq[OtelSummary] = {
-    val out = scala.collection.mutable.ListBuffer[OtelSummary]()
-    val root = new Reader(data, 0, data.length)
-    while (root.hasNext) {
-      val (f, w) = root.readTag()
-      if (f == 1 && w == 2) {
-        val rm = root.readMessage()
-        var resAttrs = Map.empty[String, String]
-        val scopeMetrics = scala.collection.mutable.ListBuffer[Reader]()
-        while (rm.hasNext) {
-          val (f2, w2) = rm.readTag()
-          f2 match {
-            case 1 =>
-              val res = rm.readMessage()
-              while (res.hasNext) {
-                val (f3, w3) = res.readTag()
-                if (f3 == 1 && w3 == 2) resAttrs += keyValue(res.readMessage())
-                else res.skip(w3)
-              }
-            case 2 => scopeMetrics += rm.readMessage()
-            case _ => rm.skip(w2)
-          }
-        }
-        scopeMetrics.foreach { sm =>
-          var scopeName = ""
-          var scopeAttrs = Map.empty[String, String]
-          while (sm.hasNext) {
-            val (f2, w2) = sm.readTag()
-            f2 match {
-              case 1 =>
-                val sc = sm.readMessage()
-                while (sc.hasNext) {
-                  val (f3, w3) = sc.readTag()
-                  if (f3 == 1 && w3 == 2) scopeName = sc.readString()
-                  else if (f3 == 3 && w3 == 2) scopeAttrs += keyValue(sc.readMessage())
-                  else sc.skip(w3)
-                }
-              case 2 =>
-                val m = sm.readMessage()
-                var name = ""
-                val points = scala.collection.mutable.ListBuffer[OtelSummary]()
-                while (m.hasNext) {
-                  val (f3, w3) = m.readTag()
-                  f3 match {
-                    case 1 => name = m.readString()
-                    case 11 => // summary { data_points=1 }
-                      val su = m.readMessage()
-                      while (su.hasNext) {
-                        val (f4, w4) = su.readTag()
-                        if (f4 == 1 && w4 == 2)
-                          points += summaryDataPoint(su.readMessage())
-                        else su.skip(w4)
-                      }
-                    case _ => m.skip(w3)
-                  }
-                }
-                points.foreach { p =>
-                  out += p.copy(metricName = name, resourceAttrs = resAttrs,
-                    scopeName = scopeName, scopeAttrs = scopeAttrs)
-                }
-              case _ => sm.skip(w2)
-            }
-          }
-        }
-      } else root.skip(w)
+  def parseSummaries(data: Array[Byte]): Seq[OtelSummary] =
+    walkMetrics(data, Set(11))((_, dp) => Seq(summaryDataPoint(dp))).map {
+      case (e, (name, _, s)) => s.copy(metricName = name, resourceAttrs = e.resourceAttrs,
+        scopeName = e.scopeName, scopeAttrs = e.scopeAttrs)
     }
-    out.toSeq
-  }
 
   /** ExponentialHistogramDataPoint (metrics.proto): attributes=1, time=3
     * (fixed64), count=4 (fixed64), sum=5 (double), scale=6 (sint32 zigzag),
@@ -529,7 +539,7 @@ object OtelProto {
 
   private def expoBucketsMsg(r: Reader): (Int, Seq[Long]) = {
     var off = 0
-    val cs = scala.collection.mutable.ListBuffer[Long]()
+    val cs = ListBuffer[Long]()
     while (r.hasNext) {
       val (f, w) = r.readTag()
       f match {
@@ -573,319 +583,54 @@ object OtelProto {
   }
 
   /** MetricsData → decoded exponential-histogram datapoints (Metric
-    * field 10); same resource/scope walk as [[parseHistograms]]
+    * field 10)
     */
-  def parseExpoHistograms(data: Array[Byte]): Seq[OtelExpoHistogram] = {
-    val out = scala.collection.mutable.ListBuffer[OtelExpoHistogram]()
-    val root = new Reader(data, 0, data.length)
-    while (root.hasNext) {
-      val (f, w) = root.readTag()
-      if (f == 1 && w == 2) {
-        val rm = root.readMessage()
-        var resAttrs = Map.empty[String, String]
-        val scopeMetrics = scala.collection.mutable.ListBuffer[Reader]()
-        while (rm.hasNext) {
-          val (f2, w2) = rm.readTag()
-          f2 match {
-            case 1 =>
-              val res = rm.readMessage()
-              while (res.hasNext) {
-                val (f3, w3) = res.readTag()
-                if (f3 == 1 && w3 == 2) resAttrs += keyValue(res.readMessage())
-                else res.skip(w3)
-              }
-            case 2 => scopeMetrics += rm.readMessage()
-            case _ => rm.skip(w2)
-          }
-        }
-        scopeMetrics.foreach { sm =>
-          var scopeName = ""
-          var scopeAttrs = Map.empty[String, String]
-          while (sm.hasNext) {
-            val (f2, w2) = sm.readTag()
-            f2 match {
-              case 1 =>
-                val sc = sm.readMessage()
-                while (sc.hasNext) {
-                  val (f3, w3) = sc.readTag()
-                  if (f3 == 1 && w3 == 2) scopeName = sc.readString()
-                  else if (f3 == 3 && w3 == 2) scopeAttrs += keyValue(sc.readMessage())
-                  else sc.skip(w3)
-                }
-              case 2 =>
-                val m = sm.readMessage()
-                var name = ""
-                val points = scala.collection.mutable.ListBuffer[OtelExpoHistogram]()
-                while (m.hasNext) {
-                  val (f3, w3) = m.readTag()
-                  f3 match {
-                    case 1 => name = m.readString()
-                    case 10 => // exponential_histogram { data_points=1 }
-                      val h = m.readMessage()
-                      while (h.hasNext) {
-                        val (f4, w4) = h.readTag()
-                        if (f4 == 1 && w4 == 2)
-                          points += expoHistogramDataPoint(h.readMessage())
-                        else h.skip(w4)
-                      }
-                    case _ => m.skip(w3)
-                  }
-                }
-                points.foreach { p =>
-                  out += p.copy(metricName = name, resourceAttrs = resAttrs,
-                    scopeName = scopeName, scopeAttrs = scopeAttrs)
-                }
-              case _ => sm.skip(w2)
-            }
-          }
-        }
-      } else root.skip(w)
+  def parseExpoHistograms(data: Array[Byte]): Seq[OtelExpoHistogram] =
+    walkMetrics(data, Set(10))((_, dp) => Seq(expoHistogramDataPoint(dp))).map {
+      case (e, (name, _, h)) => h.copy(metricName = name, resourceAttrs = e.resourceAttrs,
+        scopeName = e.scopeName, scopeAttrs = e.scopeAttrs)
     }
-    out.toSeq
-  }
 
-  /** MetricsData → decoded histogram datapoints (Metric field 9); same
-    * walk as [[parseMetrics]], name attached after the metric closes so
-    * field order within Metric doesn't matter
-    */
-  def parseHistograms(data: Array[Byte]): Seq[OtelHistogram] = {
-    val out = scala.collection.mutable.ListBuffer[OtelHistogram]()
-    val root = new Reader(data, 0, data.length)
-    while (root.hasNext) {
-      val (f, w) = root.readTag()
-      if (f == 1 && w == 2) {
-        val rm = root.readMessage()
-        var resAttrs = Map.empty[String, String]
-        val scopeMetrics = scala.collection.mutable.ListBuffer[Reader]()
-        while (rm.hasNext) {
-          val (f2, w2) = rm.readTag()
-          f2 match {
-            case 1 =>
-              val res = rm.readMessage()
-              while (res.hasNext) {
-                val (f3, w3) = res.readTag()
-                if (f3 == 1 && w3 == 2) resAttrs += keyValue(res.readMessage())
-                else res.skip(w3)
-              }
-            case 2 => scopeMetrics += rm.readMessage()
-            case _ => rm.skip(w2)
-          }
-        }
-        scopeMetrics.foreach { sm =>
-          var scopeName = ""
-          var scopeAttrs = Map.empty[String, String]
-          while (sm.hasNext) {
-            val (f2, w2) = sm.readTag()
-            f2 match {
-              case 1 =>
-                val sc = sm.readMessage()
-                while (sc.hasNext) {
-                  val (f3, w3) = sc.readTag()
-                  if (f3 == 1 && w3 == 2) scopeName = sc.readString()
-                  else if (f3 == 3 && w3 == 2) scopeAttrs += keyValue(sc.readMessage())
-                  else sc.skip(w3)
-                }
-              case 2 =>
-                val m = sm.readMessage()
-                var name = ""
-                val points = scala.collection.mutable.ListBuffer[OtelHistogram]()
-                while (m.hasNext) {
-                  val (f3, w3) = m.readTag()
-                  f3 match {
-                    case 1 => name = m.readString()
-                    case 9 => // histogram { data_points=1 }
-                      val h = m.readMessage()
-                      while (h.hasNext) {
-                        val (f4, w4) = h.readTag()
-                        if (f4 == 1 && w4 == 2)
-                          points += histogramDataPoint(h.readMessage())
-                        else h.skip(w4)
-                      }
-                    case _ => m.skip(w3)
-                  }
-                }
-                points.foreach { p =>
-                  out += p.copy(metricName = name, resourceAttrs = resAttrs,
-                    scopeName = scopeName, scopeAttrs = scopeAttrs)
-                }
-              case _ => sm.skip(w2)
-            }
-          }
-        }
-      } else root.skip(w)
+  /** MetricsData → decoded histogram datapoints (Metric field 9) */
+  def parseHistograms(data: Array[Byte]): Seq[OtelHistogram] =
+    walkMetrics(data, Set(9))((_, dp) => Seq(histogramDataPoint(dp))).map {
+      case (e, (name, _, h)) => h.copy(metricName = name, resourceAttrs = e.resourceAttrs,
+        scopeName = e.scopeName, scopeAttrs = e.scopeAttrs)
     }
-    out.toSeq
-  }
 
   /** MetricsData → decoded gauge/sum number datapoints. Exponential-
     * histogram / summary points are skipped; classic histogram datapoints
     * decode via [[parseHistograms]] / [[readHistograms]].
     */
-  def parseMetrics(data: Array[Byte]): Seq[OtelMetric] = {
-    val out = scala.collection.mutable.ListBuffer[OtelMetric]()
-    val root = new Reader(data, 0, data.length)
-    while (root.hasNext) {
-      val (f, w) = root.readTag()
-      if (f == 1 && w == 2) { // resource_metrics
-        val rm = root.readMessage()
-        var resAttrs = Map.empty[String, String]
-        val scopeMetrics = scala.collection.mutable.ListBuffer[Reader]()
-        while (rm.hasNext) {
-          val (f2, w2) = rm.readTag()
-          f2 match {
-            case 1 =>
-              val res = rm.readMessage()
-              while (res.hasNext) {
-                val (f3, w3) = res.readTag()
-                if (f3 == 1 && w3 == 2) resAttrs += keyValue(res.readMessage())
-                else res.skip(w3)
-              }
-            case 2 => scopeMetrics += rm.readMessage()
-            case _ => rm.skip(w2)
-          }
-        }
-        scopeMetrics.foreach { sm =>
-          var scopeName = ""
-          var scopeAttrs = Map.empty[String, String]
-          while (sm.hasNext) {
-            val (f2, w2) = sm.readTag()
-            f2 match {
-              case 1 =>
-                val sc = sm.readMessage()
-                while (sc.hasNext) {
-                  val (f3, w3) = sc.readTag()
-                  if (f3 == 1 && w3 == 2) scopeName = sc.readString()
-                  else if (f3 == 3 && w3 == 2) scopeAttrs += keyValue(sc.readMessage())
-                  else sc.skip(w3)
-                }
-              case 2 => // Metric { name=1, gauge=5, sum=7 { is_monotonic=3 } }
-                val m = sm.readMessage()
-                var name = ""
-                val points =
-                  scala.collection.mutable.ListBuffer[(Long, Double, Map[String, String])]()
-                var mtype = "gauge"
-                while (m.hasNext) {
-                  val (f3, w3) = m.readTag()
-                  f3 match {
-                    case 1 => name = m.readString()
-                    case 5 => // gauge { data_points=1 }
-                      val g = m.readMessage()
-                      while (g.hasNext) {
-                        val (f4, w4) = g.readTag()
-                        if (f4 == 1 && w4 == 2) points += numberDataPoint(g.readMessage())
-                        else g.skip(w4)
-                      }
-                    case 7 => // sum { data_points=1, is_monotonic=3 }
-                      val su = m.readMessage()
-                      var monotonic = false
-                      while (su.hasNext) {
-                        val (f4, w4) = su.readTag()
-                        f4 match {
-                          case 1 => points += numberDataPoint(su.readMessage())
-                          case 3 => monotonic = su.readVarint() != 0
-                          case _ => su.skip(w4)
-                        }
-                      }
-                      mtype = if (monotonic) "count" else "gauge"
-                    case _ => m.skip(w3)
-                  }
-                }
-                points.foreach { case (t, v, attrs) =>
-                  out += OtelMetric(t, name, mtype, v, attrs, resAttrs, scopeName, scopeAttrs)
-                }
-              case _ => sm.skip(w2)
-            }
-          }
-        }
-      } else root.skip(w)
+  def parseMetrics(data: Array[Byte]): Seq[OtelMetric] =
+    walkMetrics(data, Set(5, 7))((_, dp) => Seq(numberDataPoint(dp))).map {
+      case (e, (name, monotonic, (t, v, attrs))) =>
+        OtelMetric(t, name, if (monotonic) "count" else "gauge", v, attrs,
+          e.resourceAttrs, e.scopeName, e.scopeAttrs)
     }
-    out.toSeq
-  }
+
+  /** Metric container field → (cooked type, datapoint attributes field,
+    * datapoint exemplars field)
+    */
+  private val exemplarKinds = Map(
+    5 -> ("gauge", 7, 5), 7 -> ("sum", 7, 5),
+    9 -> ("histogram", 9, 8), 10 -> ("exponential_histogram", 1, 11))
 
   /** MetricsData → every exemplar attached to any datapoint of any
     * metric kind — gauge (Metric field 5) and sum (7) number datapoints
     * (attributes=7, exemplars=5), classic histograms (9: attributes=9,
     * exemplars=8), exponential histograms (10: attributes=1,
-    * exemplars=11). Same resource/scope walk as [[parseMetrics]].
+    * exemplars=11).
     */
-  def parseExemplars(data: Array[Byte]): Seq[OtelExemplar] = {
-    val out = scala.collection.mutable.ListBuffer[OtelExemplar]()
-    val root = new Reader(data, 0, data.length)
-    while (root.hasNext) {
-      val (f, w) = root.readTag()
-      if (f == 1 && w == 2) {
-        val rm = root.readMessage()
-        var resAttrs = Map.empty[String, String]
-        val scopeMetrics = scala.collection.mutable.ListBuffer[Reader]()
-        while (rm.hasNext) {
-          val (f2, w2) = rm.readTag()
-          f2 match {
-            case 1 =>
-              val res = rm.readMessage()
-              while (res.hasNext) {
-                val (f3, w3) = res.readTag()
-                if (f3 == 1 && w3 == 2) resAttrs += keyValue(res.readMessage())
-                else res.skip(w3)
-              }
-            case 2 => scopeMetrics += rm.readMessage()
-            case _ => rm.skip(w2)
-          }
-        }
-        scopeMetrics.foreach { sm =>
-          var scopeName = ""
-          var scopeAttrs = Map.empty[String, String]
-          while (sm.hasNext) {
-            val (f2, w2) = sm.readTag()
-            f2 match {
-              case 1 =>
-                val sc = sm.readMessage()
-                while (sc.hasNext) {
-                  val (f3, w3) = sc.readTag()
-                  if (f3 == 1 && w3 == 2) scopeName = sc.readString()
-                  else if (f3 == 3 && w3 == 2) scopeAttrs += keyValue(sc.readMessage())
-                  else sc.skip(w3)
-                }
-              case 2 =>
-                val m = sm.readMessage()
-                var name = ""
-                val points = scala.collection.mutable.ListBuffer[
-                  (String, Map[String, String],
-                    Seq[(Long, Double, String, String, Map[String, String])])]()
-                // (container field, cooked type, attrs field, exemplars field)
-                val kinds = Map(
-                  5 -> ("gauge", 7, 5), 7 -> ("sum", 7, 5),
-                  9 -> ("histogram", 9, 8), 10 -> ("exponential_histogram", 1, 11))
-                while (m.hasNext) {
-                  val (f3, w3) = m.readTag()
-                  f3 match {
-                    case 1 => name = m.readString()
-                    case k if kinds.contains(k) && w3 == 2 =>
-                      val (mtype, af, ef) = kinds(k)
-                      val c = m.readMessage()
-                      while (c.hasNext) {
-                        val (f4, w4) = c.readTag()
-                        if (f4 == 1 && w4 == 2) {
-                          val (attrs, exs) = dpExemplars(c.readMessage(), af, ef)
-                          if (exs.nonEmpty) points += ((mtype, attrs, exs))
-                        } else c.skip(w4)
-                      }
-                    case _ => m.skip(w3)
-                  }
-                }
-                points.foreach { case (mtype, dpAttrs, exs) =>
-                  exs.foreach { case (t, v, tid, sid, fattrs) =>
-                    out += OtelExemplar(t, name, mtype, v, tid, sid,
-                      dpAttrs ++ fattrs, resAttrs, scopeName, scopeAttrs)
-                  }
-                }
-              case _ => sm.skip(w2)
-            }
-          }
-        }
-      } else root.skip(w)
+  def parseExemplars(data: Array[Byte]): Seq[OtelExemplar] =
+    walkMetrics(data, exemplarKinds.keySet) { (kind, dp) =>
+      val (mtype, attrsField, exemplarsField) = exemplarKinds(kind)
+      val (dpAttrs, exs) = dpExemplars(dp, attrsField, exemplarsField)
+      exs.map(x => (mtype, dpAttrs, x))
+    }.map { case (e, (name, _, (mtype, dpAttrs, (t, v, tid, sid, fattrs)))) =>
+      OtelExemplar(t, name, mtype, v, tid, sid, dpAttrs ++ fattrs,
+        e.resourceAttrs, e.scopeName, e.scopeAttrs)
     }
-    out.toSeq
-  }
 
   // ---- TracesData ------------------------------------------------------------
 
@@ -952,54 +697,10 @@ object OtelProto {
       attrs, Map.empty, "")
   }
 
-  def parseSpans(data: Array[Byte]): Seq[OtelSpan] = {
-    val out = scala.collection.mutable.ListBuffer[OtelSpan]()
-    val root = new Reader(data, 0, data.length)
-    while (root.hasNext) {
-      val (f, w) = root.readTag()
-      if (f == 1 && w == 2) { // resource_spans
-        val rs = root.readMessage()
-        var resAttrs = Map.empty[String, String]
-        val scopeSpans = scala.collection.mutable.ListBuffer[Reader]()
-        while (rs.hasNext) {
-          val (f2, w2) = rs.readTag()
-          f2 match {
-            case 1 =>
-              val res = rs.readMessage()
-              while (res.hasNext) {
-                val (f3, w3) = res.readTag()
-                if (f3 == 1 && w3 == 2) resAttrs += keyValue(res.readMessage())
-                else res.skip(w3)
-              }
-            case 2 => scopeSpans += rs.readMessage()
-            case _ => rs.skip(w2)
-          }
-        }
-        scopeSpans.foreach { ss =>
-          var scopeName = ""
-          var scopeAttrs = Map.empty[String, String]
-          while (ss.hasNext) {
-            val (f2, w2) = ss.readTag()
-            f2 match {
-              case 1 =>
-                val sc = ss.readMessage()
-                while (sc.hasNext) {
-                  val (f3, w3) = sc.readTag()
-                  if (f3 == 1 && w3 == 2) scopeName = sc.readString()
-                  else if (f3 == 3 && w3 == 2) scopeAttrs += keyValue(sc.readMessage())
-                  else sc.skip(w3)
-                }
-              case 2 =>
-                out += span(ss.readMessage())
-                  .copy(resourceAttrs = resAttrs, scopeName = scopeName, scopeAttrs = scopeAttrs)
-              case _ => ss.skip(w2)
-            }
-          }
-        }
-      } else root.skip(w)
+  def parseSpans(data: Array[Byte]): Seq[OtelSpan] =
+    walk(data)(r => Seq(span(r))).map { case (e, s) =>
+      s.copy(resourceAttrs = e.resourceAttrs, scopeName = e.scopeName, scopeAttrs = e.scopeAttrs)
     }
-    out.toSeq
-  }
 
   // ---- Spark integration -----------------------------------------------------
 
@@ -1013,10 +714,15 @@ object OtelProto {
       bos.toByteArray
     } else content
 
-  /** `.binpb[.gz]` OTel logs → cooked logs DataFrame: chq_timestamp/tsns,
-    * log_level, log_message, scope_name + flattened resource_* / attr_*
-    * string columns (dynamic union across records, missing → null).
-    */
+  /** every `.binpb[.gz]` file under `path`, gunzipped and decoded by `parse` */
+  private def decodeFiles[T <: Product : TypeTag](spark: SparkSession, path: String)(
+      parse: Array[Byte] => Seq[T]): Dataset[T] = {
+    import spark.implicits._
+    spark.read.format("binaryFile").load(path)
+      .select("path", "content").as[(String, Array[Byte])]
+      .flatMap { case (p, c) => parse(maybeGunzip(p, c)) }
+  }
+
   /** session conf key: "true" → [[readLogs]] assigns reference-parity
     * `chq_fingerprint` per record by routing the decoded body through
     * [[graft.ops.FingerprintCompat.fingerprintLines]] — the reference's
@@ -1031,7 +737,11 @@ object OtelProto {
     */
   val LogsFpcCompatKey = "spark.graft.logs.fpcCompat"
 
-  /** `fpcCompat = Some(b)` pins the choice for this read; the session
+  /** `.binpb[.gz]` OTel logs → cooked logs DataFrame: chq_timestamp/tsns,
+    * log_level, log_message, scope_name + flattened resource_* / attr_*
+    * string columns (dynamic union across records, missing → null).
+    *
+    * `fpcCompat = Some(b)` pins the choice for this read; the session
     * conf is the deployment-wide default (per-read pinning over
     * shared-conf mutation, the r13 ADVICE rule).
     *
@@ -1050,20 +760,14 @@ object OtelProto {
   def readLogs(spark: SparkSession, path: String,
       fpcCompat: Option[Boolean] = None,
       fpcOrgAttr: Option[String] = None): DataFrame = {
-    import spark.implicits._
-    val files = spark.read.format("binaryFile").load(path)
-      .select("path", "content").as[(String, Array[Byte])]
-    val logs = files.flatMap { case (p, content) => parseLogs(maybeGunzip(p, content)) }
     // shared widen path: gunzip + wire decode runs once (materialized), the
     // key-union pass and the returned plan both read the decoded rows
-    val widened = widenAttrs(logs.toDF().select(
+    val widened = widenAttrs(decodeFiles(spark, path)(parseLogs).toDF(),
       expr("timeUnixNano DIV 1000000").as("chq_timestamp"), // integer div: ns epochs exceed double's 2^53
       col("timeUnixNano").as("chq_tsns"),
       col("severityText").as("log_level"),
       col("severityNumber").as("chq_severity_number"),
-      col("body").as("log_message"),
-      col("scopeName").as("scope_name"),
-      col("attrs"), col("resourceAttrs"), col("scopeAttrs")))
+      col("body").as("log_message"))
       .withColumn("metric_name", lit("log_events"))
     // an explicit per-tenant request IMPLIES compat fingerprinting (the
     // parameter exists only for it); pinning fpcCompat=false alongside
@@ -1091,20 +795,23 @@ object OtelProto {
     } else widened
   }
 
-  /** widen map-typed attrs/resourceAttrs into attr_* / resource_* string
-    * columns (dynamic union across records; missing → null). The key-union
-    * pass is a distinct-aggregate over key names only — bounded by distinct
-    * key count, not data volume.
+  /** select `cols` plus the record's envelope (scope_name and the three
+    * attribute maps), then widen the maps into attr_* / resource_* /
+    * scope_* string columns (dynamic union across records; missing →
+    * null). The key-union pass is a distinct-aggregate over key names
+    * only — bounded by distinct key count, not data volume.
     */
-  private def widenAttrs(df0: DataFrame): DataFrame = {
-    import df0.sparkSession.implicits._
+  private def widenAttrs(decoded: DataFrame, cols: Column*): DataFrame = {
+    import decoded.sparkSession.implicits._
     // the decoded points feed two jobs (key-union collect + the returned
     // plan). GraftSession.materialize runs the decode once; in the default
     // localCheckpoint mode the blocks are released by the ContextCleaner
     // when the plan is GC'd, so repeated reads don't leak session-lifetime
     // cache entries; with spark.graft.checkpointDir set the blocks live on
     // reliable storage and survive executor loss.
-    val df = graft.GraftSession.materialize(df0)
+    val df = graft.GraftSession.materialize(decoded.select(cols ++ Seq(
+      col("scopeName").as("scope_name"),
+      col("attrs"), col("resourceAttrs"), col("scopeAttrs")): _*))
     val keys = df.select(
       explode(concat(
         transform(map_keys(col("attrs")), k => concat(lit("attr_"), k)),
@@ -1119,47 +826,34 @@ object OtelProto {
     withCols.drop("attrs", "resourceAttrs", "scopeAttrs")
   }
 
+  /** the decoded stats columns onto the cooked chq_rollup_* columns */
+  private def rollupCols(stats: String*): Seq[Column] =
+    stats.map(s => col(s).as(s"chq_rollup_$s"))
+
   /** `.binpb[.gz]` OTel metrics → raw metric points ready for
     * [[MetricsPreAgg.preAggregate]]: chq_timestamp (ms), metric_name,
     * chq_metric_type, value + flattened attr_* / resource_* strings.
     */
-  def readMetrics(spark: SparkSession, path: String): DataFrame = {
-    import spark.implicits._
-    val files = spark.read.format("binaryFile").load(path)
-      .select("path", "content").as[(String, Array[Byte])]
-    val points = files.flatMap { case (p, c) => parseMetrics(maybeGunzip(p, c)) }
-    widenAttrs(points.toDF().select(
+  def readMetrics(spark: SparkSession, path: String): DataFrame =
+    widenAttrs(decodeFiles(spark, path)(parseMetrics).toDF(),
       expr("timeUnixNano DIV 1000000").as("chq_timestamp"),
       col("timeUnixNano").as("chq_tsns"),
       col("metricName").as("metric_name"),
       col("metricType").as("chq_metric_type"),
-      col("value"),
-      col("scopeName").as("scope_name"),
-      col("attrs"), col("resourceAttrs"), col("scopeAttrs")))
-  }
+      col("value"))
 
   /** `.binpb[.gz]` OTel metrics → decoded histogram rows: count/sum/min/max
     * map straight onto the cooked chq_rollup_* columns; bucket counts and
     * bounds ride along as arrays for sketch reconstruction.
     */
-  def readHistograms(spark: SparkSession, path: String): DataFrame = {
-    import spark.implicits._
-    val files = spark.read.format("binaryFile").load(path)
-      .select("path", "content").as[(String, Array[Byte])]
-    val points = files.flatMap { case (p, c) => parseHistograms(maybeGunzip(p, c)) }
-    widenAttrs(points.toDF().select(
+  def readHistograms(spark: SparkSession, path: String): DataFrame =
+    widenAttrs(decodeFiles(spark, path)(parseHistograms).toDF(), Seq(
       expr("timeUnixNano DIV 1000000").as("chq_timestamp"),
       col("metricName").as("metric_name"),
-      lit("histogram").as("chq_metric_type"),
-      col("count").as("chq_rollup_count"),
-      col("sum").as("chq_rollup_sum"),
-      col("min").as("chq_rollup_min"),
-      col("max").as("chq_rollup_max"),
+      lit("histogram").as("chq_metric_type")) ++
+      rollupCols("count", "sum", "min", "max") ++ Seq(
       col("bucketCounts").as("bucket_counts"),
-      col("explicitBounds").as("explicit_bounds"),
-      col("scopeName").as("scope_name"),
-      col("attrs"), col("resourceAttrs"), col("scopeAttrs")))
-  }
+      col("explicitBounds").as("explicit_bounds")): _*)
 
   /** `.binpb[.gz]` OTel exponential-histogram datapoints → decoded rows:
     * count/sum/min/max onto the cooked chq_rollup_* columns; scale,
@@ -1167,28 +861,18 @@ object OtelProto {
     * ride along. Base = 2^(2^-scale), so these buckets convert losslessly
     * to log-bucket sketch bins.
     */
-  def readExpoHistograms(spark: SparkSession, path: String): DataFrame = {
-    import spark.implicits._
-    val files = spark.read.format("binaryFile").load(path)
-      .select("path", "content").as[(String, Array[Byte])]
-    val points = files.flatMap { case (p, c) => parseExpoHistograms(maybeGunzip(p, c)) }
-    widenAttrs(points.toDF().select(
+  def readExpoHistograms(spark: SparkSession, path: String): DataFrame =
+    widenAttrs(decodeFiles(spark, path)(parseExpoHistograms).toDF(), Seq(
       expr("timeUnixNano DIV 1000000").as("chq_timestamp"),
       col("metricName").as("metric_name"),
-      lit("exponential_histogram").as("chq_metric_type"),
-      col("count").as("chq_rollup_count"),
-      col("sum").as("chq_rollup_sum"),
-      col("min").as("chq_rollup_min"),
-      col("max").as("chq_rollup_max"),
+      lit("exponential_histogram").as("chq_metric_type")) ++
+      rollupCols("count", "sum", "min", "max") ++ Seq(
       col("scale"),
       col("zeroCount").as("zero_count"),
       col("posOffset").as("pos_offset"),
       col("posCounts").as("pos_counts"),
       col("negOffset").as("neg_offset"),
-      col("negCounts").as("neg_counts"),
-      col("scopeName").as("scope_name"),
-      col("attrs"), col("resourceAttrs"), col("scopeAttrs")))
-  }
+      col("negCounts").as("neg_counts")): _*)
 
   /** `.binpb[.gz]` OTel metrics → decoded EXEMPLAR rows (one per exemplar
     * on any datapoint of any metric kind): chq_timestamp/tsns (the
@@ -1198,22 +882,34 @@ object OtelProto {
     * attr_* / resource_* / scope_* context (datapoint attributes unioned
     * with the exemplar's filtered_attributes).
     */
-  def readExemplars(spark: SparkSession, path: String): DataFrame = {
-    import spark.implicits._
-    val files = spark.read.format("binaryFile").load(path)
-      .select("path", "content").as[(String, Array[Byte])]
-    val points = files.flatMap { case (p, c) => parseExemplars(maybeGunzip(p, c)) }
-    widenAttrs(points.toDF().select(
+  def readExemplars(spark: SparkSession, path: String): DataFrame =
+    widenAttrs(decodeFiles(spark, path)(parseExemplars).toDF(),
       expr("timeUnixNano DIV 1000000").as("chq_timestamp"),
       col("timeUnixNano").as("chq_tsns"),
       col("metricName").as("metric_name"),
       col("metricType").as("chq_metric_type"),
       col("value").as("exemplar_value"),
       col("traceId").as("exemplar_trace_id"),
-      col("spanId").as("exemplar_span_id"),
-      col("scopeName").as("scope_name"),
-      col("attrs"), col("resourceAttrs"), col("scopeAttrs")))
-  }
+      col("spanId").as("exemplar_span_id"))
+
+  /** a histogram datapoint with its buckets already converted to a
+    * DDSketch blob: (time, name, count, sum, min, max, sketch, attrs,
+    * resource attrs, scope name, scope attrs)
+    */
+  private type SketchRow = (Long, String, Long, Double, Double, Double, Array[Byte],
+    Map[String, String], Map[String, String], String, Map[String, String])
+
+  /** sketch rows → cooked rows: count/sum/min/max onto chq_rollup_*, the
+    * blob onto `chq_sketch`
+    */
+  private def sketchFrame(rows: Dataset[SketchRow], metricType: String): DataFrame =
+    widenAttrs(rows.toDF("timeUnixNano", "metricName", "count", "sum", "min", "max",
+        "sketch", "attrs", "resourceAttrs", "scopeName", "scopeAttrs"), Seq(
+      expr("timeUnixNano DIV 1000000").as("chq_timestamp"),
+      col("metricName").as("metric_name"),
+      lit(metricType).as("chq_metric_type")) ++
+      rollupCols("count", "sum", "min", "max") :+
+      col("sketch").as("chq_sketch"): _*)
 
   /** [[readExpoHistograms]] with each datapoint's buckets converted to a
     * `chq_sketch` DDSketch blob (gamma = the histogram's own base — an
@@ -1224,30 +920,13 @@ object OtelProto {
     */
   def readExpoHistogramSketches(spark: SparkSession, path: String): DataFrame = {
     import spark.implicits._
-    val files = spark.read.format("binaryFile").load(path)
-      .select("path", "content").as[(String, Array[Byte])]
-    val rows = files
-      .flatMap { case (p, c) => parseExpoHistograms(maybeGunzip(p, c)) }
-      .map { h =>
-        val sk = graft.sketch.ExpoBridge.fromExpo(h.scale, h.zeroCount,
-          h.posOffset, h.posCounts, h.negOffset, h.negCounts,
-          h.count, h.sum, h.min, h.max)
-        (h.timeUnixNano, h.metricName, h.count, h.sum, h.min, h.max,
-          sk.serialize(), h.attrs, h.resourceAttrs, h.scopeName, h.scopeAttrs)
-      }
-      .toDF("timeUnixNano", "metricName", "count", "sum", "min", "max",
-        "sketch", "attrs", "resourceAttrs", "scopeName", "scopeAttrs")
-    widenAttrs(rows.select(
-      expr("timeUnixNano DIV 1000000").as("chq_timestamp"),
-      col("metricName").as("metric_name"),
-      lit("exponential_histogram").as("chq_metric_type"),
-      col("count").as("chq_rollup_count"),
-      col("sum").as("chq_rollup_sum"),
-      col("min").as("chq_rollup_min"),
-      col("max").as("chq_rollup_max"),
-      col("sketch").as("chq_sketch"),
-      col("scopeName").as("scope_name"),
-      col("attrs"), col("resourceAttrs"), col("scopeAttrs")))
+    sketchFrame(decodeFiles(spark, path)(parseExpoHistograms).map { h =>
+      val sk = graft.sketch.ExpoBridge.fromExpo(h.scale, h.zeroCount,
+        h.posOffset, h.posCounts, h.negOffset, h.negCounts,
+        h.count, h.sum, h.min, h.max)
+      (h.timeUnixNano, h.metricName, h.count, h.sum, h.min, h.max,
+        sk.serialize(), h.attrs, h.resourceAttrs, h.scopeName, h.scopeAttrs)
+    }, "exponential_histogram")
   }
 
   /** [[readHistograms]] with each datapoint's explicit buckets converted
@@ -1258,29 +937,12 @@ object OtelProto {
     */
   def readHistogramSketches(spark: SparkSession, path: String): DataFrame = {
     import spark.implicits._
-    val files = spark.read.format("binaryFile").load(path)
-      .select("path", "content").as[(String, Array[Byte])]
-    val rows = files
-      .flatMap { case (p, c) => parseHistograms(maybeGunzip(p, c)) }
-      .map { h =>
-        val sk = graft.sketch.ExplicitBridge.fromExplicit(h.bucketCounts,
-          h.explicitBounds, h.count, h.sum, h.min, h.max)
-        (h.timeUnixNano, h.metricName, h.count, h.sum, h.min, h.max,
-          sk.serialize(), h.attrs, h.resourceAttrs, h.scopeName, h.scopeAttrs)
-      }
-      .toDF("timeUnixNano", "metricName", "count", "sum", "min", "max",
-        "sketch", "attrs", "resourceAttrs", "scopeName", "scopeAttrs")
-    widenAttrs(rows.select(
-      expr("timeUnixNano DIV 1000000").as("chq_timestamp"),
-      col("metricName").as("metric_name"),
-      lit("histogram").as("chq_metric_type"),
-      col("count").as("chq_rollup_count"),
-      col("sum").as("chq_rollup_sum"),
-      col("min").as("chq_rollup_min"),
-      col("max").as("chq_rollup_max"),
-      col("sketch").as("chq_sketch"),
-      col("scopeName").as("scope_name"),
-      col("attrs"), col("resourceAttrs"), col("scopeAttrs")))
+    sketchFrame(decodeFiles(spark, path)(parseHistograms).map { h =>
+      val sk = graft.sketch.ExplicitBridge.fromExplicit(h.bucketCounts,
+        h.explicitBounds, h.count, h.sum, h.min, h.max)
+      (h.timeUnixNano, h.metricName, h.count, h.sum, h.min, h.max,
+        sk.serialize(), h.attrs, h.resourceAttrs, h.scopeName, h.scopeAttrs)
+    }, "histogram")
   }
 
   /** `.binpb[.gz]` OTel metrics (Summary datapoints) → cooked rows:
@@ -1291,25 +953,19 @@ object OtelProto {
     */
   def readSummaries(spark: SparkSession, path: String): DataFrame = {
     import spark.implicits._
-    val files = spark.read.format("binaryFile").load(path)
-      .select("path", "content").as[(String, Array[Byte])]
-    val rows = files
-      .flatMap { case (p, c) => parseSummaries(maybeGunzip(p, c)) }
+    val rows = decodeFiles(spark, path)(parseSummaries)
       .map { s =>
         (s.timeUnixNano, s.metricName, s.count, s.sum, s.quantileValues.toMap,
           s.attrs, s.resourceAttrs, s.scopeName, s.scopeAttrs)
       }
       .toDF("timeUnixNano", "metricName", "count", "sum", "qvs",
         "attrs", "resourceAttrs", "scopeName", "scopeAttrs")
-    val base = widenAttrs(rows.select(
+    val base = widenAttrs(rows, Seq(
       expr("timeUnixNano DIV 1000000").as("chq_timestamp"),
       col("metricName").as("metric_name"),
-      lit("summary").as("chq_metric_type"),
-      col("count").as("chq_rollup_count"),
-      col("sum").as("chq_rollup_sum"),
-      col("qvs"),
-      col("scopeName").as("scope_name"),
-      col("attrs"), col("resourceAttrs"), col("scopeAttrs")))
+      lit("summary").as("chq_metric_type")) ++
+      rollupCols("count", "sum") :+
+      col("qvs"): _*)
     Seq(0.25 -> "p25", 0.5 -> "p50", 0.75 -> "p75",
       0.9 -> "p90", 0.95 -> "p95", 0.99 -> "p99")
       .foldLeft(base) { case (df, (q, nm)) =>
@@ -1323,30 +979,22 @@ object OtelProto {
     * kind/status as enum-name strings, span_duration in ms.
     */
   def readSpans(spark: SparkSession, path: String): DataFrame = {
-    import spark.implicits._
-    val files = spark.read.format("binaryFile").load(path)
-      .select("path", "content").as[(String, Array[Byte])]
-    val spans = files.flatMap { case (p, c) => parseSpans(maybeGunzip(p, c)) }
     // enum name lookup as element_at over a literal array (codegen'd; out of
     // range → null → coalesce to the UNSPECIFIED/UNSET name)
-    def nameOf(c: org.apache.spark.sql.Column, names: Array[String]) =
+    def nameOf(c: Column, names: Array[String]) =
       coalesce(element_at(array(names.map(lit): _*), c.cast("int") + 1), lit(names(0)))
-    val kindName = (c: org.apache.spark.sql.Column) => nameOf(c, spanKindNames)
-    val codeName = (c: org.apache.spark.sql.Column) => nameOf(c, statusCodeNames)
-    val widened = widenAttrs(spans.toDF().select(
+    val widened = widenAttrs(decodeFiles(spark, path)(parseSpans).toDF(),
       expr("startUnixNano DIV 1000000").as("chq_timestamp"),
       col("startUnixNano").as("chq_tsns"),
       col("traceId").as("span_trace_id"),
       col("spanId").as("span_id"),
       col("parentSpanId").as("span_parent_span_id"),
       col("name").as("span_name"),
-      kindName(col("kind")).as("span_kind"),
-      codeName(col("statusCode")).as("span_status_code"),
+      nameOf(col("kind"), spanKindNames).as("span_kind"),
+      nameOf(col("statusCode"), statusCodeNames).as("span_status_code"),
       col("statusMessage").as("span_status_message"),
       expr("(endUnixNano - startUnixNano) DIV 1000000").as("span_duration"),
-      expr("endUnixNano DIV 1000000").as("span_end_timestamp"),
-      col("scopeName").as("scope_name"),
-      col("attrs"), col("resourceAttrs"), col("scopeAttrs")))
+      expr("endUnixNano DIV 1000000").as("span_end_timestamp"))
     // reference-parity span fingerprint, computed at ingest exactly like
     // the reference's trace reader (ingest_proto_traces.go:283 assigns
     // CalculateSpanFingerprintFromRow over the same widened row keys,
@@ -1404,15 +1052,22 @@ object OtelProto {
         ld(5, anyString(body)) ++
         attrs.flatMap { case (k, v) => ld(6, kv(k, v)) }
 
-    def logsData(resourceAttrs: Seq[(String, String)], scopeName: String,
-        records: Seq[Array[Byte]],
-        scopeAttrs: Seq[(String, String)] = Nil): Array[Byte] = {
+    /** one Resource{Logs,Metrics,Spans} block (field 1 of its *Data
+      * message): resource=1 {attributes=1}, scope_*=2 {scope=1 {name=1,
+      * attributes=3}, records=2}
+      */
+    private def envelope(resourceAttrs: Seq[(String, String)], scopeName: String,
+        scopeAttrs: Seq[(String, String)], records: Seq[Array[Byte]]): Array[Byte] = {
       val resource = resourceAttrs.flatMap { case (k, v) => ld(1, kv(k, v)) }.toArray
       val scope = str(1, scopeName) ++
         scopeAttrs.flatMap { case (k, v) => ld(3, kv(k, v)) }.toArray
-      val scopeLogs = ld(1, scope) ++ records.flatMap(r => ld(2, r))
-      ld(1, ld(1, resource) ++ ld(2, scopeLogs))
+      ld(1, ld(1, resource) ++ ld(2, ld(1, scope) ++ records.flatMap(r => ld(2, r))))
     }
+
+    def logsData(resourceAttrs: Seq[(String, String)], scopeName: String,
+        records: Seq[Array[Byte]],
+        scopeAttrs: Seq[(String, String)] = Nil): Array[Byte] =
+      envelope(resourceAttrs, scopeName, scopeAttrs, records)
 
     def dbl(field: Int, v: Double): Array[Byte] =
       fixed64(field, java.lang.Double.doubleToLongBits(v))
@@ -1505,13 +1160,8 @@ object OtelProto {
 
     def metricsData(resourceAttrs: Seq[(String, String)], scopeName: String,
         metrics: Seq[Array[Byte]],
-        scopeAttrs: Seq[(String, String)] = Nil): Array[Byte] = {
-      val resource = resourceAttrs.flatMap { case (k, v) => ld(1, kv(k, v)) }.toArray
-      val scope = str(1, scopeName) ++
-        scopeAttrs.flatMap { case (k, v) => ld(3, kv(k, v)) }.toArray
-      val scopeMetrics = ld(1, scope) ++ metrics.flatMap(m => ld(2, m))
-      ld(1, ld(1, resource) ++ ld(2, scopeMetrics))
-    }
+        scopeAttrs: Seq[(String, String)] = Nil): Array[Byte] =
+      envelope(resourceAttrs, scopeName, scopeAttrs, metrics)
 
     private def hexBytes(h: String): Array[Byte] =
       h.grouped(2).map(Integer.parseInt(_, 16).toByte).toArray
@@ -1534,11 +1184,7 @@ object OtelProto {
         groups: Seq[(Seq[(String, String)], String, Seq[Array[Byte]])],
         scopeAttrs: Seq[(String, String)] = Nil): Array[Byte] =
       groups.flatMap { case (resourceAttrs, scopeName, spans) =>
-        val resource = resourceAttrs.flatMap { case (k, v) => ld(1, kv(k, v)) }.toArray
-        val scope = str(1, scopeName) ++
-          scopeAttrs.flatMap { case (k, v) => ld(3, kv(k, v)) }.toArray
-        val scopeSpans = ld(1, scope) ++ spans.flatMap(sp => ld(2, sp))
-        ld(1, ld(1, resource) ++ ld(2, scopeSpans))
+        envelope(resourceAttrs, scopeName, scopeAttrs, spans)
       }.toArray
   }
 }

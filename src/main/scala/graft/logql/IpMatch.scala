@@ -44,9 +44,6 @@ object IpMatch {
     }
   }
 
-  /** the dotted-quad shape both engines extract and parse */
-  val Ipv4Regex = "\\b\\d{1,3}\\.\\d{1,3}\\.\\d{1,3}\\.\\d{1,3}\\b"
-
   /** Regex matching EXACTLY the dotted quads whose uint32 value lies in
     * [lo, hi], compiled at PLAN time — so the row-side test is ONE
     * codegen'd compiled-regex scan with no higher-order function at all

@@ -2,7 +2,6 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 /** Multimodal-column plumbing: media as opaque BinaryType + typed metadata.
   *
@@ -523,15 +522,6 @@ object Multimodal {
   val encodeAviMjpgRamp: org.apache.spark.sql.expressions.UserDefinedFunction =
     udf(aviMjpgRamp _)
 
-  val mediaSchema: StructType = StructType(Seq(
-    StructField("media_id", LongType, nullable = false),
-    StructField("media_type", StringType), // "image" | "audio" | "video"
-    StructField("payload", BinaryType),
-    StructField("meta", StructType(Seq(
-      StructField("width", IntegerType), StructField("height", IntegerType),
-      StructField("sample_rate", IntegerType), StructField("n_frames", IntegerType),
-      StructField("codec", StringType))))))
-
   /** documents → a synthetic media table: payload = utf-8 bytes of text.
     * Deterministic, so oracles can recompute byte lengths/digests.
     */
@@ -554,7 +544,6 @@ object Multimodal {
     * that matters for the pipeline.
     */
   def fakeDecodeFeatures(payload: Column): Column = {
-    val bytesLen = octet_length(payload)
     array((0 until 8).map { b =>
       // deterministic per-bucket pseudo-count from the md5 of payload
       conv(substring(md5(payload), b * 4 + 1, 3), 16, 10).cast("double") / 4096.0

@@ -205,7 +205,6 @@ object Ast {
   val timeComponentFns: Set[String] = Set(
     "hour", "minute", "day_of_week", "day_of_month", "day_of_year", "month",
     "year", "days_in_month")
-  val compOps: Set[String] = Set("==", "!=", ">", "<", ">=", "<=")
   val setOps: Set[String] = Set("and", "or", "unless")
 
   /** Structural children of a node: every Expr reachable through its

@@ -1212,13 +1212,16 @@ object Engine {
       labels)
   }
 
-  /** one label matcher as a filter over `df` (PromQL selectors and LogQL
-    * stream selectors alike)
+  /** one label matcher as a filter over `df` (PromQL selectors, LogQL
+    * stream selectors, agg-file and series-discovery matchers alike)
     */
   private[graft] def matcherCond(df: DataFrame, m: Matcher): Column = {
-    // absent label ≡ "" (PromQL semantics); missing column → constant ""
+    // absent label ≡ "" (PromQL semantics); missing column → constant "".
+    // The label name is data (quoted resolve) and the value compares as a
+    // string; the cast is a no-op the optimizer drops on string columns.
     val c =
-      if (df.schema.fieldNames.contains(m.label)) coalesce(col(m.label), lit(""))
+      if (df.schema.fieldNames.contains(m.label))
+        coalesce(graft.GraftSession.safeCol(df, m.label).cast("string"), lit(""))
       else lit("")
     m.op match {
       case MatchOp.Eq  => c === m.value

@@ -308,7 +308,8 @@ class PropertySpec extends AnyFunSuite {
         catch { case _: IllegalArgumentException => true } // the designed failure mode
       ok(OtelProto.parseLogs(bs)) && ok(OtelProto.parseMetrics(bs)) &&
         ok(OtelProto.parseHistograms(bs)) && ok(OtelProto.parseExpoHistograms(bs)) &&
-        ok(OtelProto.parseSummaries(bs)) && ok(OtelProto.parseSpans(bs))
+        ok(OtelProto.parseSummaries(bs)) && ok(OtelProto.parseExemplars(bs)) &&
+        ok(OtelProto.parseSpans(bs))
     }, n = 300)
     // mutated VALID messages (bit flips in real structure) must also fail cleanly
     val valid = OtelProto.Encode.logsData(Seq("a" -> "b"), "s",
@@ -319,6 +320,101 @@ class PropertySpec extends AnyFunSuite {
       try { OtelProto.parseLogs(m); true }
       catch { case _: IllegalArgumentException => true }
     }, n = 300)
+  }
+
+  test("OTLP envelope: every record keeps its own resource and scope, " +
+      "whatever the field order") {
+    import graft.ingest.OtelProto
+    import graft.ingest.OtelProto.Encode._
+    // a document: resources of (resource field first?, scopes), scopes of
+    // (scope field first?, record kinds); kind 0 gauge, 1 monotonic sum,
+    // 2 histogram, 3 exponential histogram, 4 summary (metrics only)
+    val scopeGen = for {
+      first <- Gen.oneOf(true, false)
+      n <- Gen.choose(0, 4)
+      kinds <- Gen.listOfN(n, Gen.choose(0, 4))
+    } yield (first, kinds)
+    val resourceGen = for {
+      first <- Gen.oneOf(true, false)
+      n <- Gen.choose(1, 3)
+      scopes <- Gen.listOfN(n, scopeGen)
+    } yield (first, scopes)
+    val docGen = Gen.choose(1, 3).flatMap(n => Gen.listOfN(n, resourceGen))
+
+    def metric(kind: Int, i: Long): Array[Byte] = {
+      val ex = Seq(exemplar(i, i.toDouble, f"$i%032x", f"$i%016x"))
+      val name = s"m$i"
+      kind match {
+        case 0 => gaugeMetric(name, Seq(numberDp(i, i.toDouble, Nil, ex)))
+        case 1 => sumMetric(name, monotonic = true, Seq(numberDp(i, i.toDouble, Nil, ex)))
+        case 2 => histogramMetric(name,
+          Seq(histogramDp(i, 1L, 1.0, 1.0, 1.0, Seq(1L), Nil, Nil, ex)))
+        case 3 => expoHistogramMetric(name,
+          Seq(expoHistogramDp(i, 1L, 1.0, 1.0, 1.0, 0, 0L, 0, Seq(1L), Nil)))
+        case _ => summaryMetric(name, Seq(summaryDp(i, 1L, 1.0, Seq(0.5 -> 1.0), Nil)))
+      }
+    }
+    def kvs(field: Int, attrs: Map[String, String]): Array[Byte] =
+      attrs.toSeq.flatMap { case (k, v) => ld(field, kv(k, v)) }.toArray
+
+    holds(forAll(docGen) { doc =>
+      // the document, and its records in document order as (id, kind,
+      // resource attrs, scope name, scope attrs)
+      def build(record: (Int, Long) => Array[Byte])
+          : (Array[Byte], Seq[(Long, Int, Map[String, String], String, Map[String, String])]) = {
+        var i = 0L
+        val expected = Seq.newBuilder[(Long, Int, Map[String, String], String, Map[String, String])]
+        val bytes = doc.zipWithIndex.flatMap { case ((resFirst, scopes), ri) =>
+          val resAttrs = Map("rk" -> s"r$ri")
+          val resource = ld(1, kvs(1, resAttrs))
+          val scopeMsgs = scopes.zipWithIndex.flatMap { case ((scopeFirst, kinds), si) =>
+            val (name, attrs) = (s"s$ri.$si", Map("sk" -> s"a$ri.$si"))
+            val scope = ld(1, str(1, name) ++ kvs(3, attrs))
+            val records = kinds.flatMap { k =>
+              i += 1
+              expected += ((i, k, resAttrs, name, attrs))
+              ld(2, record(k, i))
+            }.toArray
+            ld(2, if (scopeFirst) scope ++ records else records ++ scope)
+          }.toArray
+          ld(1, if (resFirst) resource ++ scopeMsgs else scopeMsgs ++ resource)
+        }.toArray
+        (bytes, expected.result())
+      }
+      val (logs, exp) = build((_, i) => logRecord(i, 9, "INFO", s"b$i", Nil))
+      val (traces, _) = build((_, i) =>
+        span(f"$i%032x", f"$i%016x", "", s"op$i", 1, i, i + 1, 0, "", Nil))
+      val (metrics, _) = build(metric)
+      def only(kinds: Int*) = exp.filter(e => kinds.contains(e._2))
+        .map { case (id, _, r, sn, sa) => (id, s"m$id", r, sn, sa) }
+
+      OtelProto.parseLogs(logs)
+        .map(l => (l.timeUnixNano, l.body, l.resourceAttrs, l.scopeName, l.scopeAttrs)) ==
+        exp.map { case (id, _, r, sn, sa) => (id, s"b$id", r, sn, sa) } &&
+      OtelProto.parseSpans(traces)
+        .map(s => (s.startUnixNano, s.name, s.resourceAttrs, s.scopeName, s.scopeAttrs)) ==
+        exp.map { case (id, _, r, sn, sa) => (id, s"op$id", r, sn, sa) } &&
+      OtelProto.parseMetrics(metrics)
+        .map(m => (m.timeUnixNano, m.metricName, m.resourceAttrs, m.scopeName, m.scopeAttrs)) ==
+        only(0, 1) &&
+      OtelProto.parseMetrics(metrics).map(_.metricType) ==
+        exp.collect { case e if e._2 == 0 => "gauge"; case e if e._2 == 1 => "count" } &&
+      OtelProto.parseHistograms(metrics)
+        .map(h => (h.timeUnixNano, h.metricName, h.resourceAttrs, h.scopeName, h.scopeAttrs)) ==
+        only(2) &&
+      OtelProto.parseExpoHistograms(metrics)
+        .map(h => (h.timeUnixNano, h.metricName, h.resourceAttrs, h.scopeName, h.scopeAttrs)) ==
+        only(3) &&
+      OtelProto.parseSummaries(metrics)
+        .map(s => (s.timeUnixNano, s.metricName, s.resourceAttrs, s.scopeName, s.scopeAttrs)) ==
+        only(4) &&
+      OtelProto.parseExemplars(metrics)
+        .map(x => (x.timeUnixNano, x.metricName, x.resourceAttrs, x.scopeName, x.scopeAttrs)) ==
+        only(0, 1, 2) &&
+      OtelProto.parseExemplars(metrics).map(x => (x.metricType, x.traceId, x.spanId)) ==
+        exp.filter(_._2 <= 2).map { case (id, k, _, _, _) =>
+          (Seq("gauge", "sum", "histogram")(k), f"$id%032x", f"$id%016x") }
+    }, n = 200)
   }
 
   test("valid queries keep parsing after random whitespace padding") {
